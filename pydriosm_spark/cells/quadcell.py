@@ -253,11 +253,6 @@ def cell_expr(lon: str, lat: str, res: int) -> str:
     return _cell_sql(lon, lat, res, _spark_pack)
 
 
-def cell_expr_duckdb(lon: str, lat: str, res: int) -> str:
-    """The identical arithmetic rendered as DuckDB SQL (oracle side)."""
-    return _cell_sql(lon, lat, res, _spark_pack)  # same syntax works in both
-
-
 def parent_expr(cell: str, parent_res: int, child_res: int, dialect: str = "spark") -> str:
     """Ancestor id of ``cell`` (at child_res) at parent_res, as SQL text.
     Uses div/mod instead of bit ops; ``dialect`` picks the integer-division

@@ -63,7 +63,9 @@ def langid_sql(text: str, dialect: str) -> str:
 
     Reference/oracle form: the CASE re-evaluates each HOF count up to 3x
     per row (Catalyst duplicates bound expressions), so the Spark engine
-    path is :func:`langid_agg` — explode + one codegen hash aggregate."""
+    path (``queries_text.q_text_profile``) sums the stopword hits in one
+    hash aggregate over exploded tokens and applies :func:`_langid_case`
+    to those columns."""
     toks = tokens_sql(text, dialect)
     cnt = {l: _count_in_sql(toks, ws, dialect) for l, ws in LANG_STOPWORDS.items()}
     return _langid_case(cnt)
@@ -76,28 +78,6 @@ def _langid_case(cnt: dict) -> str:
         conds = " AND ".join(f"{cnt[l]} >= {cnt[m]}" for m in langs[i + 1:])
         cases.append(f"WHEN {conds} THEN '{l}'")
     return "(CASE " + " ".join(cases) + f" ELSE '{langs[-1]}' END)"
-
-
-def langid_agg(df, key: str = "doc_id", text: str = "text", out: str = "lang_pred"):
-    """(key, lang_pred) via explode + ONE hash aggregate: per-language
-    stopword hits are four conditional-sum aggregates over the exploded
-    tokens (map-side partial agg, whole-stage codegen), then the argmax
-    CASE runs over *materialized* count columns — each count computed
-    exactly once, unlike the per-row HOF form."""
-    from pyspark.sql import functions as F
-
-    tok = df.select(
-        key, F.explode(F.expr(tokens_sql(text, "spark"))).alias("__t")
-    )
-    aggs = [
-        F.sum(
-            F.when(F.col("__t").isin(ws), F.lit(1)).otherwise(F.lit(0))
-        ).alias(f"__c_{l}")
-        for l, ws in LANG_STOPWORDS.items()
-    ]
-    wide = tok.groupBy(key).agg(*aggs)
-    case = _langid_case({l: f"__c_{l}" for l in LANG_STOPWORDS})
-    return wide.select(key, F.expr(case).alias(out))
 
 
 #: BPE-ish pre-tokenizer: letter runs, digit runs, single other symbols —

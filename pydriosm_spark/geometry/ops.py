@@ -234,16 +234,6 @@ def polygon_perimeter(rings) -> float:
     return total
 
 
-def haversine_m(lon1, lat1, lon2, lat2) -> np.ndarray:
-    """Great-circle distance in meters (vectorized)."""
-    R = 6371008.8
-    p1, p2 = np.radians(np.asarray(lat1)), np.radians(np.asarray(lat2))
-    dphi = p2 - p1
-    dlmb = np.radians(np.asarray(lon2)) - np.radians(np.asarray(lon1))
-    a = np.sin(dphi / 2.0) ** 2 + np.cos(p1) * np.cos(p2) * np.sin(dlmb / 2.0) ** 2
-    return 2.0 * R * np.arcsin(np.sqrt(a))
-
-
 def polygon_measures_wkt_batch(wkt) -> tuple[np.ndarray, np.ndarray]:
     """(areas, perimeters) for a batch of POLYGON WKTs — genuinely
     batch-vectorized: ONE string split over the whole batch feeds a

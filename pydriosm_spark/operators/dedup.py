@@ -415,13 +415,6 @@ def simhash_signature(
     return wide.select(key, F.expr(bits).alias(out))
 
 
-def with_simhash(
-    df: DataFrame, text: str = "text", out: str = "simhash", key: str = "doc_id"
-) -> DataFrame:
-    """All input columns + the SimHash signature (joined back on ``key``)."""
-    return df.join(simhash_signature(df, key, text, out), key)
-
-
 SIMHASH_BLOCKS = 4
 
 

@@ -7,9 +7,10 @@ Ties break deterministically on ``(d2, place_id)``.
 
 ``knn_bruteforce`` — exact top-k against the whole place side.  With
 ``broadcast=True`` (the plan for |places| up to ~10^4 even at 100 TB of
-points) the collected place side ships as a task broadcast into a numpy
-kernel: one distance matrix + stable argsort per Arrow batch, zero
-shuffles (r6).  ``broadcast=False`` keeps the JVM block-partitioned
+points) the place side, pulled once as Arrow, ships as a task broadcast
+into the shared tiled top-k kernel (operators/topk.py): query-row tiles
+of ``TILE_ELEMS // |places|`` rows, partition-select + id tie-break per
+tile, zero shuffles.  ``broadcast=False`` keeps the JVM block-partitioned
 CartesianProduct + WindowGroupLimit window for place sides too big to
 ship.
 
@@ -42,6 +43,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from pydriosm_spark.operators import topk
+
 
 def _topk(cand: DataFrame, point_keys: list[str], k: int) -> DataFrame:
     w = Window.partitionBy(*point_keys).orderBy(F.col("d2").asc(), F.col("place_id").asc())
@@ -69,16 +72,16 @@ def knn_bruteforce(
     v: str = "v",
     broadcast: bool = True,
 ) -> DataFrame:
-    """``broadcast=True`` (r6): the place side is collected once and
-    shipped as a task broadcast into a mapInArrow-style numpy kernel —
-    each task computes its partition's exact top-k with one vectorized
-    distance matrix + stable argsort (ties break on place_id because the
-    broadcast index is pre-sorted by place_id; bit-identical to the
-    ``ORDER BY d2, place_id`` window).  This removes the |points| x
-    |places| JVM row explosion, the map-side sort, and the top-k window
-    exchange outright — the same kernel economics as
-    cosine_topk_bruteforce, and the driver/executor footprint matches
-    what the old ``F.broadcast(places)`` hash relation already required.
+    """Exact top-k places per point: (point_keys, rank, place_id, d2),
+    ordered as ``ORDER BY d2, place_id``.  ``place_id`` must be unique
+    on the place side and ``point_keys`` unique on the point side.
+
+    ``broadcast=True``: the place side (at most ``topk.MAX_INDEX_ROWS``
+    rows, raises beyond) is pulled once as Arrow, sorted by place_id
+    and shipped as a task broadcast; each Arrow batch of points is
+    ranked by the shared tiled top-k kernel (:mod:`.topk`) on exact
+    integer d2, with no shuffle.  Per-task memory is a few
+    ``topk.TILE_ELEMS``-element tiles at any batch and place count.
 
     ``broadcast=False`` keeps the JVM block-partitioned CartesianProduct
     + WindowGroupLimit plan — required when |places| exceeds executor
@@ -93,13 +96,13 @@ def knn_bruteforce(
     import numpy as np
     import pandas as pd
 
-    rows = places.select("place_id", "pu", "pv").collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    pus = np.array([r[1] for r in rows], dtype=np.int64)
-    pvs = np.array([r[2] for r in rows], dtype=np.int64)
-    order = np.argsort(ids, kind="stable")  # tie-break order for equal d2
+    t = topk.pull_index(places.select("place_id", "pu", "pv"), "place_id")
     bc = points.sparkSession.sparkContext.broadcast(
-        (ids[order], pus[order], pvs[order])
+        (
+            t["place_id"].to_numpy(),  # keeps the declared place_id width
+            t["pu"].to_numpy().astype(np.int64),
+            t["pv"].to_numpy().astype(np.int64),
+        )
     )
     place_t = dict(places.dtypes)["place_id"]
     src = points.select(*point_keys, u, v)
@@ -109,30 +112,24 @@ def knn_bruteforce(
         + f", rank int, place_id {place_t}, d2 long"
     )
 
-    pid_np = {"tinyint": np.int8, "smallint": np.int16, "int": np.int32}.get(
-        place_t, np.int64
-    )
-
     def kern(batches):
         sids, spu, spv = bc.value
-        sids = sids.astype(pid_np)  # match the declared Arrow field type
-        kk = min(k, sids.shape[0])
-        ranks = np.arange(1, kk + 1, dtype=np.int32)
         for b in batches:
-            n = len(b)
-            if n == 0 or kk == 0:
-                continue
             uu = b[u].to_numpy().astype(np.int64)
             vv = b[v].to_numpy().astype(np.int64)
-            du = uu[:, None] - spu[None, :]
-            dv = vv[:, None] - spv[None, :]
-            d2 = du * du + dv * dv
-            idx = np.argsort(d2, axis=1, kind="stable")[:, :kk]
-            out = {pk: np.repeat(b[pk].to_numpy(), kk) for pk in point_keys}
-            out["rank"] = np.tile(ranks, n)
-            out["place_id"] = sids[idx].ravel()
-            out["d2"] = np.take_along_axis(d2, idx, axis=1).ravel()
-            yield pd.DataFrame(out)
+
+            def d2(lo, hi):
+                du = uu[lo:hi, None] - spu
+                du *= du
+                dv = vv[lo:hi, None] - spv
+                dv *= dv
+                du += dv
+                return du
+
+            rows, rank, col, dist = topk.batch_topk(len(b), len(sids), k, d2)
+            if len(rows):
+                out = {pk: b[pk].to_numpy()[rows] for pk in point_keys}
+                yield pd.DataFrame({**out, "rank": rank, "place_id": sids[col], "d2": dist})
 
     return src.mapInPandas(kern, schema)
 
@@ -163,7 +160,7 @@ def auto_cell_size(places: DataFrame, k: int, disk_radius: int) -> int:
         F.count(F.lit(1)).alias("n"),
         F.min("pu").alias("u0"), F.max("pu").alias("u1"),
         F.min("pv").alias("v0"), F.max("pv").alias("v1"),
-    ).collect()[0]
+    ).toArrow().to_pylist()[0]
     n = int(r["n"] or 0)
     if n == 0:
         return 1
@@ -201,7 +198,8 @@ def auto_cell_size(places: DataFrame, k: int, disk_radius: int) -> int:
         .agg(F.count(F.lit(1)).alias("cnt"))
         .groupBy("cnt")
         .agg(F.sum("cnt").alias("w"))
-        .collect(),
+        .toArrow()
+        .to_pylist(),
         key=lambda r: r["cnt"],
     )
     total = sum(r["w"] for r in hist)
@@ -387,16 +385,17 @@ def knn_auto(
     broadcast_nlj_threshold: int = 4096,
     **kw,
 ) -> DataFrame:
-    """Adaptive dispatch: for a small place side the broadcast
-    nested-loop + WindowGroupLimit brute force beats the cell path (no
-    explode, no extra shuffle); the disk-probe plan takes over once the
-    place side is big enough that |points| x |places| dominates; and
-    past ~2M places the probe join stops broadcasting entirely (shuffle
-    join on the derived cell keys).  The thresholds are |places|-driven."""
+    """Adaptive dispatch on |places| (one count job): up to
+    ``broadcast_nlj_threshold`` places the broadcast brute force
+    (:func:`knn_bruteforce`, the tiled numpy top-k kernel — no explode,
+    no shuffle) beats the cell path; above it the disk-probe plan
+    (:func:`knn_cell`) takes over; and past ``topk.MAX_INDEX_ROWS``
+    places the probe join and its fallback stop broadcasting (shuffle
+    join on the derived cell keys, CartesianProduct fallback)."""
     n_places = places.count()
     if n_places <= broadcast_nlj_threshold:
         return knn_bruteforce(points, places, k=k, **{k_: v for k_, v in kw.items() if k_ in ("point_keys", "u", "v")})
-    kw.setdefault("broadcast_places", n_places <= 2_000_000)
+    kw.setdefault("broadcast_places", n_places <= topk.MAX_INDEX_ROWS)
     return knn_cell(spark, points, places, k=k, **kw)
 
 

@@ -90,31 +90,6 @@ FROM documents"""
 _IMG_MAX, _AUD_MAX, _VID_MAX = 576, 766, 384
 
 
-def oracle_image_features() -> str:
-    """Mean RGB per image, recomputed byte-by-byte over the SQL-
-    reconstructed pixel stream: byte i belongs to channel i%3 (row-major
-    RGB), means scaled to e4 by integer floor division — exactly
-    multimodal/media.py:image_features without sharing any code."""
-    n_px = "(w * h * 3)"
-    return f"""
-WITH imgs AS (
-  SELECT doc_id AS media_id, 8 + doc_id % 9 AS w, 6 + doc_id % 7 AS h,
-         {_stream_hex("'img' || doc_id", "(8 + doc_id % 9) * (6 + doc_id % 7) * 3")} AS px_hex
-  FROM documents WHERE doc_id % 3 = 0
-),
-bytes AS (
-  SELECT media_id, w, h, r.i AS i,
-         ('0x' || substr(px_hex, r.i * 2 + 1, 2))::BIGINT AS b
-  FROM imgs, range(0, {_IMG_MAX}) r(i)
-  WHERE r.i < {n_px}
-)
-SELECT media_id, CAST(w AS INT) AS width, CAST(h AS INT) AS height,
-       CAST(sum(CASE WHEN i % 3 = 0 THEN b ELSE 0 END) * 10000 // (w * h) AS BIGINT) AS mean_r_e4,
-       CAST(sum(CASE WHEN i % 3 = 1 THEN b ELSE 0 END) * 10000 // (w * h) AS BIGINT) AS mean_g_e4,
-       CAST(sum(CASE WHEN i % 3 = 2 THEN b ELSE 0 END) * 10000 // (w * h) AS BIGINT) AS mean_b_e4
-FROM bytes GROUP BY media_id, w, h"""
-
-
 def oracle_audio_features() -> str:
     """RMS + zero crossings over the SQL-reconstructed PCM stream.
     Sample j = signed little-endian int16 at bytes (2j, 2j+1); RMS uses
@@ -170,50 +145,6 @@ FROM bytes WHERE frame_idx % 2 = 0
 GROUP BY media_id, frame_idx, w, h"""
 
 
-def q_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-mean 2x downsample -> content address of the RESIZED payload:
-    the oracle reconstructs the source pixels in SQL, recomputes every
-    output pixel (sum // 4 == the kernel's exact float64 mean truncation),
-    re-wraps the FIMG container, and matches md5-over-hex byte-for-byte."""
-    r = M.image_resize(M.media_table(spark, sf_dir), factor=2)
-    return r.select(
-        "media_id",
-        "width",
-        "height",
-        F.expr("md5(lower(hex(payload)))").alias("payload_md5hex"),
-    )
-
-
-def oracle_image_resize() -> str:
-    return f"""
-WITH imgs AS (
-  SELECT doc_id AS media_id, 8 + doc_id % 9 AS w, 6 + doc_id % 7 AS h,
-         {_stream_hex("'img' || doc_id", "(8 + doc_id % 9) * (6 + doc_id % 7) * 3")} AS px_hex
-  FROM documents WHERE doc_id % 3 = 0
-),
-px AS (
-  SELECT media_id, w // 2 AS nw, h // 2 AS nh,
-         r.i // (w * 3) AS y, (r.i % (w * 3)) // 3 AS x, r.i % 3 AS ch,
-         ('0x' || substr(px_hex, r.i * 2 + 1, 2))::BIGINT AS b
-  FROM imgs, range(0, {_IMG_MAX}) r(i)
-  WHERE r.i < w * h * 3
-),
-small AS (
-  SELECT media_id, nw, nh, y // 2 AS ry, x // 2 AS rx, ch,
-         CAST(sum(b) // 4 AS BIGINT) AS v
-  FROM px WHERE y < nh * 2 AND x < nw * 2
-  GROUP BY media_id, nw, nh, y // 2, x // 2, ch
-),
-hexs AS (
-  SELECT media_id, nw, nh,
-         string_agg(lower(lpad(to_hex(v), 2, '0')), '' ORDER BY ry, rx, ch) AS ph
-  FROM small GROUP BY media_id, nw, nh
-)
-SELECT media_id, CAST(nw AS INT) AS width, CAST(nh AS INT) AS height,
-       md5('46494d47' || {_i32le_hex("nw")} || {_i32le_hex("nh")} || ph) AS payload_md5hex
-FROM hexs"""
-
-
 def q_media_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corrupt a deterministic subset of payloads (truncation below the
     header, truncation inside the body, magic stomp), then validate from
@@ -244,10 +175,6 @@ SELECT doc_id AS media_id,
 FROM documents"""
 
 
-def q_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return M.image_features(M.media_table(spark, sf_dir))
-
-
 def q_media_image(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Features + 2x block-mean resize of every image in ONE registry
     row (VERDICT r4: media_image_features and media_image_resize merged
@@ -261,9 +188,14 @@ def q_media_image(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def oracle_media_image() -> str:
-    """oracle_image_features + oracle_image_resize flattened over ONE
-    shared ``imgs`` CTE (both standalone oracles began with the identical
-    source-pixel reconstruction), joined on media_id."""
+    """Mean RGB per image plus the 2x block-mean resize, both recomputed
+    over ONE shared ``imgs`` CTE of SQL-reconstructed source pixels and
+    joined on media_id.  Byte i of the pixel stream belongs to channel
+    i%3 (row-major RGB); means are scaled to e4 by integer floor
+    division, and each resized pixel is ``sum // 4`` (the kernel's exact
+    float64 mean truncation), re-wrapped in the FIMG container and
+    matched md5-over-hex byte-for-byte — the arithmetic of
+    multimodal/media.py:image_features_resize without sharing any code."""
     n_px = "(w * h * 3)"
     return f"""
 WITH imgs AS (
@@ -320,7 +252,7 @@ def q_video_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def registry() -> dict:
     # media_image_features + media_image_resize merged into media_image
     # (VERDICT r4: the whole registry must fit the driver's 50-query
-    # gate); both standalone callables/oracles stay public and tested.
+    # gate).
     return {
         "media_manifest": (q_media_manifest, oracle_media_manifest()),
         "media_image": (q_media_image, oracle_media_image()),

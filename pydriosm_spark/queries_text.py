@@ -6,7 +6,7 @@ against brute force)."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pydriosm_spark.functions import text as T
@@ -29,42 +29,13 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Spark queries
 # ---------------------------------------------------------------------------
 
-def q_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cols = T.quality_select_sql("text", "spark")
-    return _docs(spark, sf_dir).select(
-        "doc_id", *[F.expr(sql).alias(name) for name, sql in cols.items()]
-    )
-
-
-def q_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return T.langid_agg(_docs(spark, sf_dir))
-
-
-def q_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Token budgeting: whitespace tokens + BPE-ish pre-tokens per doc."""
-    return _docs(spark, sf_dir).select(
-        "doc_id",
-        F.expr(f"CAST({T.ntokens_sql('text', 'spark')} AS BIGINT)").alias("n_ws_tokens"),
-        F.expr(f"CAST({T.bpe_token_count_sql('text', 'spark')} AS BIGINT)").alias(
-            "n_bpe_tokens"
-        ),
-    )
-
-
-def q_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _docs(spark, sf_dir).select(
-        "doc_id", F.expr(T.fingerprint_sql("text", "spark")).alias("fp")
-    )
-
-
 def q_text_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The per-document profile table a training pipeline materializes
     in ONE pass over the corpus: quality stats, language, content
     fingerprint, token budgets, and the SimHash signature — the former
     text_quality / langid / fingerprint / token_counts / simhash registry
     queries as one 500-row-per-500-doc output (VERDICT r4: merged so the
-    whole registry fits the driver's 50-query correctness gate; each
-    component function remains public and individually tested).
+    whole registry fits the driver's 50-query correctness gate).
 
     Shape: scalar columns are a single codegen projection; langid's
     4 stopword conditional-sums RIDE the simhash aggregation's exploded
@@ -147,10 +118,6 @@ def q_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return dedup.simhash_signature(_docs(spark, sf_dir))
-
-
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash Hamming-ball near-dup pairs (block-rotation bucketed
     search + exact bit_count verify) — end-to-end SimHash dedup."""
@@ -217,28 +184,6 @@ def q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # oracles
 # ---------------------------------------------------------------------------
-
-def oracle_quality() -> str:
-    cols = T.quality_select_sql("text", "duckdb")
-    sel = ", ".join(f"{sql} AS {name}" for name, sql in cols.items())
-    return f"SELECT doc_id, {sel} FROM documents"
-
-
-def oracle_langid() -> str:
-    return f"SELECT doc_id, {T.langid_sql('text', 'duckdb')} AS lang_pred FROM documents"
-
-
-def oracle_token_counts() -> str:
-    return f"""
-SELECT doc_id,
-       CAST({T.ntokens_sql('text', 'duckdb')} AS BIGINT) AS n_ws_tokens,
-       CAST({T.bpe_token_count_sql('text', 'duckdb')} AS BIGINT) AS n_bpe_tokens
-FROM documents"""
-
-
-def oracle_fingerprint() -> str:
-    return f"SELECT doc_id, {T.fingerprint_sql('text', 'duckdb')} AS fp FROM documents"
-
 
 def oracle_text_profile() -> str:
     """All five per-doc profile components in one SQL statement: the
@@ -379,15 +324,6 @@ reach(src, dst) AS (
 )
 SELECT src AS doc_id, CAST(min(dst) AS BIGINT) AS component
 FROM reach GROUP BY src"""
-
-
-def oracle_simhash() -> str:
-    hashes, total = dedup.simhash_fragments("text", "duckdb")
-    return f"""
-WITH h AS (
-  SELECT doc_id, {hashes} AS __h, len({hashes}) AS __n FROM documents
-)
-SELECT doc_id, {total} AS simhash FROM h"""
 
 
 def oracle_simhash_pairs(
@@ -762,8 +698,7 @@ FROM rr QUALIFY rank <= {TOPK}"""
 def registry() -> dict:
     # text_quality / langid / fingerprint / token_counts / simhash merged
     # into text_profile (VERDICT r4: the whole registry must fit the
-    # driver's 50-query gate); the standalone callables/oracles above
-    # stay public and pytest-covered.
+    # driver's 50-query gate).
     return {
         "text_profile": (q_text_profile, oracle_text_profile()),
         "sketch_kmv": (q_sketch_kmv, oracle_sketch_kmv()),

@@ -169,29 +169,6 @@ def webpages(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def mentions_arithmetic(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(doc_id, mention_idx, u, v, lon, lat) via direct arithmetic —
-    bypasses extraction; used for operator-only tests."""
-    d = documents(spark, sf_dir).select("doc_id")
-    j = spark.range(M_MOD - 1).select(F.col("id").cast("int").alias("mention_idx"))
-    m = d.join(F.broadcast(j), F.expr(f"mention_idx < doc_id % {M_MOD}"))
-    m = m.select(
-        "doc_id",
-        "mention_idx",
-        F.expr(u_sql("doc_id", "mention_idx")).alias("u"),
-        F.expr(v_sql("doc_id", "mention_idx")).alias("v"),
-    )
-    return with_lonlat(m)
-
-
-def with_lonlat(m: DataFrame, u: str = "u", v: str = "v") -> DataFrame:
-    """Attach double lon/lat parsed from the canonical decimal strings —
-    the SAME parse both engines perform, guaranteeing identical doubles."""
-    return m.withColumn("lat", F.expr(f"CAST({lat_str_sql(v, 'spark')} AS DOUBLE)")).withColumn(
-        "lon", F.expr(f"CAST({lon_str_sql(u, 'spark')} AS DOUBLE)")
-    )
-
-
 # ---- geometry sides (driver-side small dims; broadcast in joins) ----------
 
 def _e5(x: int) -> float:
