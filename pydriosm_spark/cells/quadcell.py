@@ -29,6 +29,7 @@ MAX_RES = 29
 _RES_SHIFT = 58
 _X_SHIFT = 29
 _XY_MASK = (1 << 29) - 1
+COVER_SPREAD = 3  # a compact cover spans resolutions res - COVER_SPREAD .. res
 
 
 # ---------------------------------------------------------------------------
@@ -178,27 +179,26 @@ def compact(cids) -> list:
     return sorted(out)
 
 
-def cover_polygon(rings_xy, res: int, min_res: int | None = None, max_cells: int = 8192):
+def cover_polygon(rings_xy, res: int, max_cells: int = 8192):
     """Compact cover of a polygon (outer ring + optional holes) given as a
     list of (N,2) float arrays.  Recursive quadtree descent:
 
-    * a cell fully inside the polygon at ``r >= min_res`` is emitted with
-      ``full=True`` (join hits in it skip PIP refinement),
+    * a cell fully inside the polygon at ``r >= res - COVER_SPREAD`` is
+      emitted with ``full=True`` (join hits in it skip PIP refinement),
     * a boundary cell is split until ``res`` and emitted with ``full=False``,
     * cells outside are dropped.
 
-    ``min_res`` (default ``res - 3``) bounds the resolution spread of the
-    cover: the probe side of the join explodes each point into at most
-    ``res - min_res + 1`` ancestor cells, so a tight bound keeps the
-    fact-table blow-up small at 100 TB scale while the cover stays compact.
+    ``COVER_SPREAD`` bounds the resolution spread of the cover: the probe
+    side of the join explodes each point into at most ``COVER_SPREAD + 1``
+    ancestor cells, so a tight bound keeps the fact-table blow-up small at
+    100 TB scale while the cover stays compact.
 
-    Returns ``list[(cell_id, full_inside)]``.  Pure driver-side numpy —
-    used for the small (broadcast) geometry side only.
+    Returns ``list[(cell_id, full_inside)]``.  Pure numpy; runs on the
+    driver (``build_cover``) or in a task (``build_cover_df``).
     """
     from pydriosm_spark.geometry.ops import polygon_contains_box, box_intersects_polygon
 
-    if min_res is None:
-        min_res = max(0, res - 3)
+    min_res = max(0, res - COVER_SPREAD)
     outer = np.asarray(rings_xy[0], dtype=np.float64)
     minx, miny = outer.min(axis=0)
     maxx, maxy = outer.max(axis=0)

@@ -33,9 +33,12 @@ ship.
    brute-force path.  Exactness is unconditional; S and R only tune how
    much traffic takes the cheap path.
 
-Skew: points concentrate in hot cells but the join key is the *place*
-bucket — replicating the small side per salt (operators/skew.py)
-applies when the place side shuffles (``broadcast_places=False``).
+Skew: points concentrate in hot cells, but the probe join key is the
+*place* bucket and the place side is broadcast by default
+(``knn_auto`` keeps it so up to ``topk.MAX_INDEX_ROWS`` places).  With
+``broadcast_places=False`` both sides shuffle on the bucket without
+salting; AQE's skew-join splitting (on in the session factory) is then
+the only guard against a hot bucket.
 """
 
 from __future__ import annotations
@@ -396,9 +399,4 @@ def knn_auto(
     if n_places <= broadcast_nlj_threshold:
         return knn_bruteforce(points, places, k=k, **{k_: v for k_, v in kw.items() if k_ in ("point_keys", "u", "v")})
     kw.setdefault("broadcast_places", n_places <= topk.MAX_INDEX_ROWS)
-    return knn_cell(spark, points, places, k=k, **kw)
-
-
-# Backwards-compatible name used by the query registry / bench.
-def knn_ring(spark: SparkSession, points: DataFrame, places: DataFrame, k: int = 3, **kw) -> DataFrame:
     return knn_cell(spark, points, places, k=k, **kw)

@@ -8,13 +8,17 @@ guessed (SURVEY.md §4.2):
 1. aggregate a cell histogram (cheap: one partial+final count),
 2. cells whose count exceeds ``target_rows_per_task`` get
    ``n_salt = ceil(count / target)`` salts,
-3. the probe side gets ``salt = pmod(<stable row key>, n_salt)``
-   (deterministic — golden outputs must not depend on task scheduling),
+3. the probe side gets ``salt = pmod(<row key>, n_salt)``; any
+   numeric per-row value works (a stable id, or
+   ``monotonically_increasing_id``), because every salt replica of a
+   hot cell's build rows is present, so each probe row meets its build
+   rows exactly once whichever salt it draws,
 4. the build side replicates each hot cell's rows once per salt,
 5. the join key becomes ``(cell, salt)``.
 
 AQE's skew-join splitting remains enabled as a backstop, but the salt
-plan is explicit so results and task shapes are reproducible.
+plan is explicit: the join result does not depend on the salts, and the
+task shapes follow from the histogram.
 """
 
 from __future__ import annotations
@@ -23,9 +27,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def hot_cell_salts(
-    probe: DataFrame, key: str = "cell", target_rows_per_task: int = 1_000_000
-) -> DataFrame:
+def hot_cell_salts(probe: DataFrame, key: str, target_rows_per_task: int) -> DataFrame:
     """(key, n_salt) for keys needing more than one task."""
     return (
         probe.groupBy(key)
@@ -46,10 +48,10 @@ def salted_join(
     salts: DataFrame,
     how: str = "inner",
 ) -> DataFrame:
-    """Equi-join probe⋈build on ``key`` with deterministic salting.
+    """Equi-join probe⋈build on ``key`` with hot keys salted.
 
-    ``salt_src``: a stable numeric column on the probe side (e.g. doc_id)
-    whose pmod spreads a hot key's rows across ``n_salt`` sub-keys.
+    ``salt_src``: a numeric probe-side column (e.g. doc_id) whose pmod
+    spreads a hot key's rows across ``n_salt`` sub-keys.
     ``salts``: (key, n_salt) from :func:`hot_cell_salts` (small,
     broadcast).  Non-hot keys keep salt 0 with no replication.
     """

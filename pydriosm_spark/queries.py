@@ -21,7 +21,11 @@ from pydriosm_spark.cells import quadcell
 from pydriosm_spark.functions import extract
 from pydriosm_spark.operators import knn as knn_ops
 from pydriosm_spark.operators import tiling
-from pydriosm_spark.operators.spatial_join import spatial_join_points_polygons
+from pydriosm_spark.operators.spatial_join import (
+    polygon_frame,
+    spatial_join_points_polygons,
+    spatial_join_polygons_polygons,
+)
 from pydriosm_spark.sources import synth
 
 TILE_RES = 14
@@ -65,7 +69,7 @@ def q_grid_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     m = _mentions(spark, sf_dir)
-    k = knn_ops.knn_ring(spark, m, synth.places_df(spark), k=3)
+    k = knn_ops.knn_cell(spark, m, synth.places_df(spark), k=3)
     return k.select(
         "doc_id",
         "mention_idx",
@@ -151,10 +155,11 @@ def q_polygon_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polygon-polygon overlap join: L-shaped zones x bbox grid cells.
     ``sf_dir`` is unused (pure geometry; both sides synthesized) but kept
     for the uniform query signature."""
-    from pydriosm_spark.operators.spatial_join import spatial_join_polygons_polygons
-
     j = spatial_join_polygons_polygons(
-        spark, synth.zone_features(), synth.grid_features(), res=15
+        spark,
+        polygon_frame(spark, synth.zone_features()),
+        polygon_frame(spark, synth.grid_features()),
+        res=15,
     )
     return j.select(
         F.col("left_id").cast("long").alias("zone_id"),

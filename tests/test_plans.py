@@ -38,9 +38,7 @@ def test_spatial_join_plan_broadcast_single_python_stage(spark):
 
 def test_flat_cover_has_no_probe_explode(spark):
     m = extract.extract_mentions(synth.webpages(spark, SF_SMOKE))
-    j = spatial_join_points_polygons(
-        spark, m, synth.zone_features(), res=17, cover_mode="flat"
-    )
+    j = spatial_join_points_polygons(spark, m, synth.zone_features(), res=17)
     p = _plan(j)
     # one Generate from mention extraction (posexplode of geo tokens) only
     assert p.count("Generate") == 1, p

@@ -184,8 +184,36 @@ def test_format_fallback_plan(spark, tier):
     assert missing == ["france"]
 
 
+def _relations_pbf(path) -> str:
+    """A crafted PBF with relations for all three relation layers: two
+    routes (multilinestrings), two multipolygons and one turn
+    restriction (other_relations)."""
+    from tests.pbf_encode_util import PbfBuilder
+
+    b = PbfBuilder()
+    for i, (lat, lon) in enumerate(
+        [(52.0, 0.0), (52.0, 0.01), (52.01, 0.01), (52.01, 0.0), (52.02, 0.0), (52.02, 0.01)]
+    ):
+        b.node(1 + i, lat, lon)
+    b.way(10, [1, 2, 3, 4, 1], {})
+    b.way(11, [4, 3, 6, 5, 4], {})
+    b.way(12, [1, 2], {"highway": "residential"})
+    b.way(13, [2, 3], {"highway": "residential"})
+    b.relation(100, [("way", 12, ""), ("way", 13, "")], {"type": "route", "route": "bus"})
+    b.relation(101, [("way", 13, "")], {"type": "route", "route": "bicycle"})
+    b.relation(102, [("way", 10, "outer")], {"type": "multipolygon", "landuse": "grass"})
+    b.relation(103, [("way", 11, "outer")], {"type": "multipolygon", "natural": "water"})
+    b.relation(
+        104,
+        [("way", 12, "from"), ("node", 2, "via"), ("way", 13, "to")],
+        {"type": "restriction", "restriction": "no_left_turn"},
+    )
+    path.write_bytes(b.build())
+    return str(path)
+
+
 def test_pbf_to_checkpoint_to_catalogue_end_to_end(spark, tmp_path):
-    """The front-door workflow end to end on the REAL fixture: splittable
+    """The front-door workflow end to end on a crafted PBF: splittable
     PBF scan -> relation layers assembled distributed -> per-layer
     checkpointed commit (killed mid-run, resumed) -> catalogue answers
     what landed -> read-back equals the source, layer for layer."""
@@ -195,7 +223,7 @@ def test_pbf_to_checkpoint_to_catalogue_end_to_end(spark, tmp_path):
     from pydriosm_spark.plans.checkpoint import PartitionedCheckpoint
     from pydriosm_spark.sources import pbf
 
-    path = "/root/reference/tests/data/rutland/rutland-latest.osm.pbf"
+    path = _relations_pbf(tmp_path / "relations.osm.pbf")
     rel_df = pbf.relation_layers_distributed(spark, path)
     layers = rel_df.select("layer", "id", "geometry")
     want = {r["layer"]: r["n"] for r in layers.groupBy("layer").count()

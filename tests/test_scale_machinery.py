@@ -17,13 +17,27 @@ def _canon(df):
     return p[sorted(p.columns)].sort_values(sorted(p.columns), ignore_index=True)
 
 
-def test_salted_shuffle_join_equals_broadcast(spark):
+def test_salted_shuffle_join_equals_broadcast(spark, monkeypatch):
+    from pydriosm_spark.operators import skew
+    from pydriosm_spark.operators import spatial_join as SJ
+
+    salts = []
+
+    def spy(probe, key, target):
+        salts.append(skew.hot_cell_salts(probe, key, target))
+        return salts[-1]
+
+    # the busiest probe cell holds 6 rows at this scale: a target of 2
+    # salts every cell above it
+    monkeypatch.setattr(SJ, "TARGET_ROWS_PER_TASK", 2)
+    monkeypatch.setattr(SJ, "hot_cell_salts", spy)
     m = extract.extract_mentions(synth.webpages(spark, SF_SMOKE))
     zones = synth.zone_features()
-    a = spatial_join_points_polygons(spark, m, zones, res=17, mode="broadcast")
-    b = spatial_join_points_polygons(
-        spark, m, zones, res=17, mode="shuffle_salted", target_rows_per_task=50
-    )  # tiny target => salting actually engages on this data
+    a = spatial_join_points_polygons(spark, m, zones, res=17)
+    b = SJ.spatial_join_points_polygons_distributed(
+        spark, m, SJ.polygon_frame(spark, zones), res=17
+    )
+    assert salts[0].count() > 0
     pd.testing.assert_frame_equal(_canon(a), _canon(b), check_dtype=False)
 
 

@@ -1,13 +1,17 @@
-"""Distributed polygon-cover join vs the driver-side broadcast path:
-identical results on a >= 10k-polygon side (VERDICT r1 missing #10 —
-the polygon side must not be capped by a driver Sequence loop)."""
+"""Spatial join covers and plans: the distributed polygon-cover join vs
+the driver-side broadcast path, identical results on a >= 10k-polygon
+side (VERDICT r1 missing #10 — the polygon side must not be capped by a
+driver Sequence loop); the polygon overlap join vs an all-pairs
+reference; the flat/compact cover choice and the bounded cover memo."""
 
 import numpy as np
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+from pydriosm_spark.operators import spatial_join as SJ
 from pydriosm_spark.operators.spatial_join import (
+    polygon_frame,
     spatial_join_points_polygons,
     spatial_join_points_polygons_distributed,
 )
@@ -57,28 +61,25 @@ def _canon(df):
 
 def test_distributed_matches_broadcast_on_10k_polygons(spark, points):
     polys = _poly_dicts()
-    poly_df = spark.createDataFrame(
-        [(p["feature_id"], [p["rings"][0].tolist()]) for p in polys],
-        "feature_id long, rings array<array<array<double>>>",
-    ).repartition(8)
+    poly_df = polygon_frame(spark, polys).repartition(8)
 
     got = _canon(
         spatial_join_points_polygons_distributed(spark, points, poly_df, res=17)
     )
-    want = _canon(
-        spatial_join_points_polygons(spark, points, polys, res=17, cover_mode="compact")
-    )
+    broadcast = spatial_join_points_polygons(spark, points, polys, res=17)
+    # the flat cover would exceed MAX_FLAT_CELLS: the compact cover's
+    # resolutions explode the probe
+    assert "Generate" in broadcast._jdf.queryExecution().executedPlan().toString()
+    want = _canon(broadcast)
     assert len(want) > 1000  # the fixture actually joins
     pd.testing.assert_frame_equal(got, want)
 
 
-def test_polygon_polygon_distributed_matches_driver_form(spark):
-    """Both-sides-DataFrame polygon overlap join == the driver-side form
-    on offset grids (boundary-touching and containing cases included)."""
-    from pydriosm_spark.operators.spatial_join import (
-        spatial_join_polygons_polygons,
-        spatial_join_polygons_polygons_distributed,
-    )
+def test_polygon_polygon_join_matches_all_pairs_reference(spark):
+    """Polygon overlap join == all-pairs ``polygons_intersect`` on offset
+    grids (boundary-touching and containing cases included)."""
+    from pydriosm_spark.geometry.ops import polygons_intersect
+    from pydriosm_spark.operators.spatial_join import spatial_join_polygons_polygons
 
     def grid(n, cell, x0, y0, start_id=0):
         out = []
@@ -95,21 +96,17 @@ def test_polygon_polygon_distributed_matches_driver_form(spark):
     left = grid(60, 0.01, -1.0, 52.0)
     right = grid(60, 0.013, -1.004, 51.997, start_id=1000)  # offset + rescaled
 
-    def to_df(polys):
-        return spark.createDataFrame(
-            [(p["feature_id"], [p["rings"][0].tolist()]) for p in polys],
-            "feature_id long, rings array<array<array<double>>>",
-        )
-
     got = {
         (r["left_id"], r["right_id"])
-        for r in spatial_join_polygons_polygons_distributed(
-            spark, to_df(left), to_df(right), res=15
+        for r in spatial_join_polygons_polygons(
+            spark, polygon_frame(spark, left), polygon_frame(spark, right), res=15
         ).collect()
     }
     want = {
-        (r["left_id"], r["right_id"])
-        for r in spatial_join_polygons_polygons(spark, left, right, res=15).collect()
+        (a["feature_id"], b["feature_id"])
+        for a in left
+        for b in right
+        if polygons_intersect(a["rings"], b["rings"])
     }
     assert len(want) > 50
     assert got == want, (len(got), len(want), sorted(got ^ want)[:5])
@@ -119,14 +116,59 @@ def test_distributed_cover_never_collects_polygons(spark, points):
     """Plan shape: the polygon side must enter the join as a Spark scan
     (mapInPandas over the polygon DataFrame), not as a driver-built
     local relation."""
-    polys = _poly_dicts()[:200]
-    poly_df = spark.createDataFrame(
-        [(p["feature_id"], [p["rings"][0].tolist()]) for p in polys],
-        "feature_id long, rings array<array<array<double>>>",
-    )
+    poly_df = polygon_frame(spark, _poly_dicts()[:200])
     plan = spatial_join_points_polygons_distributed(
         spark, points, poly_df, res=17
     )._jdf.queryExecution().executedPlan().toString()
     # the cover side appears via Python workers (mapInPandas), and the
     # fact side never broadcasts the polygons
     assert "MapInPandas" in plan or "ArrowEvalPython" in plan
+
+
+def test_large_square_joins_with_default_arguments(spark):
+    """A 0.3 x 0.3 degree square at res 17: its flat cover (~24k cells)
+    exceeds ``quadcell.cover_polygon``'s per-polygon ``max_cells`` but not
+    ``MAX_FLAT_CELLS``, so the flat cover is expanded from the compact one
+    and the join matches a numpy ray-cast reference."""
+    from pydriosm_spark.geometry.ops import points_in_polygon
+
+    square = np.array(
+        [[-1.0, 52.0], [-0.7, 52.0], [-0.7, 52.3], [-1.0, 52.3], [-1.0, 52.0]]
+    )
+    rng = np.random.default_rng(7)
+    pts = pd.DataFrame(
+        {
+            "pid": np.arange(4000, dtype=np.int64),
+            "lon": rng.uniform(-1.05, -0.65, 4000),
+            "lat": rng.uniform(51.95, 52.35, 4000),
+        }
+    )
+    joined = spatial_join_points_polygons(
+        spark, spark.createDataFrame(pts), [{"feature_id": 1, "rings": [square]}]
+    )
+    assert "Generate" not in joined._jdf.queryExecution().executedPlan().toString()
+    got = sorted(r["pid"] for r in joined.collect())
+    want = pts["pid"][points_in_polygon(pts["lon"], pts["lat"], [square])].tolist()
+    assert 1000 < len(want) < 4000
+    assert got == want
+
+
+def test_cover_memo_is_bounded_and_reused(spark, monkeypatch):
+    """The cover memo keeps the newest ``COVER_MEMO_ENTRIES`` covers, and a
+    repeated join of one polygon set adds no entry (warm passes hit)."""
+    monkeypatch.setattr(SJ, "_COVER_MEMO", {})
+    polys = _poly_dicts()
+    n = SJ.COVER_MEMO_ENTRIES
+    for i in range(n + 1):
+        SJ.build_cover(polys[i : i + 1], 15)
+    assert len(SJ._COVER_MEMO) == n
+    assert not any(k[2][0][0] == 0 for k in SJ._COVER_MEMO)  # the oldest is gone
+
+    SJ._COVER_MEMO.clear()
+    pts = spark.range(10).select(F.lit(-0.995).alias("lon"), F.lit(52.005).alias("lat"))
+    spatial_join_points_polygons(spark, pts, polys[:4], res=17)
+    cached = dict(SJ._COVER_MEMO)
+    assert len(cached) == 2  # compact + flat
+    spatial_join_points_polygons(spark, pts, polys[:4], res=17)
+    assert SJ._COVER_MEMO.keys() == cached.keys()
+    assert all(SJ._COVER_MEMO[k] is v for k, v in cached.items())
