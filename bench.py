@@ -208,7 +208,7 @@ def run_suite(spark, sf_dir: str):
                 os.makedirs(landing)
                 shutil.copy(pbf_fixture, os.path.join(landing, "a.osm.pbf"))
                 q = (
-                    _pbf.read_pbf_points_layer_stream(spark, landing)
+                    _pbf.read_pbf_layer_stream(spark, landing, "points")
                     .writeStream.format("parquet")
                     .option("path", os.path.join(d, "out"))
                     .option("checkpointLocation", os.path.join(d, "ckpt"))

@@ -65,15 +65,15 @@ def parse_osm_xml(data: bytes):
 
 
 def read_osm_bz2(spark: SparkSession, path: str, layer_names=None) -> dict:
-    """The 5-layer read surface over .osm/.osm.bz2 files — same contract
-    as ``pbf.read_pbf`` ({layer: DataFrame(id, geometry, properties,
-    src_file)}), same assemblers."""
+    """The 5-layer read surface over .osm/.osm.bz2 files:
+    {layer: DataFrame(id, geometry, properties, src_file)}, every layer
+    (points included) in ``pbf.LAYER_SCHEMA`` and built by the PBF
+    reader's assemblers."""
     import json
 
-    from pydriosm_spark.sources.pbf import LAYER_ASSEMBLERS
+    from pydriosm_spark.sources.pbf import LAYER_ASSEMBLERS, LAYER_SCHEMA
 
     names = layer_names or list(LAYER_ASSEMBLERS)
-    schema = "id long, geometry string, properties map<string,string>, src_file string"
     out = {}
     for name in names:
         assembler = LAYER_ASSEMBLERS[name]
@@ -100,6 +100,6 @@ def read_osm_bz2(spark: SparkSession, path: str, layer_names=None) -> dict:
             spark.read.format("binaryFile")
             .load(path)
             .select("path", "content")
-            .mapInPandas(decode, schema)
+            .mapInPandas(decode, LAYER_SCHEMA)
         )
     return out

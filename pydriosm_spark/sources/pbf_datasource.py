@@ -7,7 +7,12 @@ same one-liner composes with the rest of Spark's reader API):
     spark.dataSource.register(OsmPbfDataSource)
     df = spark.read.format("osmpbf").option("layer", "points").load(path)
 
-``path`` may be a single ``.osm.pbf`` file, a directory, or a glob.
+``path`` may be a single ``.osm.pbf`` file, a directory (walked
+recursively for ``*.pbf``), or a glob.  Layers: ``points``,
+``primitives``, ``lines``, ``multilinestrings``, ``multipolygons``,
+``other_relations``.  Options: ``n_tasks`` (stripes per file, default
+16), ``max_file_bytes`` (default 1 GiB), ``paths`` (a JSON list of files
+instead of ``path``).
 
 Partitioning (VERDICT r4 item 4 — no driver-side blob loop):
 
@@ -20,18 +25,19 @@ Partitioning (VERDICT r4 item 4 — no driver-side blob loop):
   header scan is repeated per task but costs ~0.01% of the file, and in
   exchange the index build runs ON EXECUTORS with per-file AND
   intra-file parallelism;
-* relation-dependent layers (``lines``, ``multilinestrings``,
-  ``multipolygons``, ``other_relations``) need whole-file member
-  context, so they partition per FILE and run the single-machine
-  assemblers — the reference's per-extract model.  The task STREAMS
-  the file blob-by-blob (never ``fh.read()`` of the whole file), so
-  peak raw-byte memory is one blob; decoded primitives still
-  accumulate per file, which is why a LOUD size guard
-  (``max_file_bytes``, default 1 GiB) rejects files whose assembly
-  would risk a single-executor OOM and points at the distributed-join
-  forms (``lines_layer_distributed``, ``relation_layers_distributed``)
-  — the scale path for one huge file (VERDICT r4 item 2).
+* whole-file layers (``lines``, ``multilinestrings``, ``multipolygons``,
+  ``other_relations``) need whole-file member context, so they
+  partition per FILE and run the single-machine assemblers — the
+  reference's per-extract model.  The task STREAMS the file
+  blob-by-blob (never ``fh.read()`` of the whole file), so peak raw-byte
+  memory is one blob; decoded primitives still accumulate per file,
+  which is why a LOUD size guard (``max_file_bytes``) rejects files
+  whose assembly would risk a single-executor OOM and points at
+  ``relation_layers_distributed`` — the member-join plan for one huge
+  file (VERDICT r4 item 2).
 
+Every partition reads through :func:`pydriosm_spark.sources.pbf.decode_layer`,
+the decoder the streaming wrapper and the distributed assembler share.
 Blob framing has no sync marker, so a task cannot enter a PBF at an
 arbitrary byte offset; the header seek-scan is the cheapest exact way to
 find blob boundaries, which is why stripes re-scan headers rather than
@@ -40,55 +46,39 @@ guessing offsets.
 
 from __future__ import annotations
 
-import glob
-import os
+import json
 from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import DataSource, DataSourceReader, InputPartition
 
-POINTS_SCHEMA = "id long, lon double, lat double, properties map<string,string>, src_file string"
-LAYER_SCHEMA = "id long, geometry string, properties map<string,string>, src_file string"
-
-SPLITTABLE = ("points", "primitives")
-WHOLE_FILE = ("lines", "multilinestrings", "multipolygons", "other_relations")
-
-
-def list_pbf_files(path: str) -> list:
-    """File/dir/glob -> sorted .pbf file list (driver-side os listing
-    only — the per-blob work happens on executors)."""
-    if os.path.isfile(path):
-        return [path]
-    if os.path.isdir(path):
-        out = []
-        for root, _dirs, files in os.walk(path):
-            out += [os.path.join(root, f) for f in files if f.endswith(".pbf")]
-        return sorted(out)
-    return sorted(p for p in glob.glob(path) if os.path.isfile(p))
+from pydriosm_spark.sources.pbf import (
+    MAX_FILE_BYTES,
+    SPLITTABLE,
+    decode_layer,
+    layer_schema,
+    list_pbf_files,
+)
 
 
 class _Stripe(InputPartition):
+    """Stripe ``stripe`` of ``n_stripes`` of one file (a whole file is
+    stripe 0 of 1)."""
+
     def __init__(self, file: str, stripe: int, n_stripes: int):
         self.file, self.stripe, self.n_stripes = file, stripe, n_stripes
 
 
-class _WholeFile(InputPartition):
-    def __init__(self, file: str):
-        self.file = file
-
-
 class OsmPbfReader(DataSourceReader):
     def __init__(self, options):
-        import json as _json
-
         self.layer = options.get("layer", "points")
         self.n_tasks = int(options.get("n_tasks", "16"))
-        #: per-file assembly bound for relation layers (see module doc)
-        self.max_file_bytes = int(options.get("max_file_bytes", str(1 << 30)))
+        #: per-file assembly bound for whole-file layers (see module doc)
+        self.max_file_bytes = int(options.get("max_file_bytes", str(MAX_FILE_BYTES)))
         paths_opt = options.get("paths")
         if paths_opt:
             # explicit file list (JSON array) — e.g. the validated subset
             # from pbf_validate, so quarantined files never reach decode
-            self.files = sorted(_json.loads(paths_opt))
+            self.files = sorted(json.loads(paths_opt))
         else:
             path = options.get("path")
             if not path:
@@ -101,94 +91,17 @@ class OsmPbfReader(DataSourceReader):
             raise FileNotFoundError("osmpbf: no .pbf files to read")
 
     def partitions(self):
-        if self.layer in SPLITTABLE:
-            return [
-                _Stripe(f, s, self.n_tasks)
-                for f in self.files
-                for s in range(self.n_tasks)
-            ]
-        return [_WholeFile(f) for f in self.files]
+        k = self.n_tasks if self.layer in SPLITTABLE else 1
+        return [_Stripe(f, s, k) for f in self.files for s in range(k)]
 
     def read(self, partition) -> Iterator[Tuple]:
-        # imports here: this body runs on executors
-        from pydriosm_spark.sources import pbf as P
-
-        if isinstance(partition, _Stripe):
-            f, s, k = partition.file, partition.stripe, partition.n_stripes
-            index = P.index_blobs(f)  # executor-side header seek-scan
-            ranges = [
-                (start, ln)
-                for i, (start, ln, bt) in enumerate(
-                    r for r in index if r[2] == "OSMData"
-                )
-                if i % k == s
-            ]
-            with open(f, "rb") as fh:
-                for start, ln in ranges:
-                    fh.seek(start)
-                    buf = fh.read(ln)
-                    for btype, raw in P.iter_blocks(buf):
-                        if btype != "OSMData" or raw is None:
-                            continue
-                        nodes, ways, rels = P.parse_block(raw)
-                        if self.layer == "points":
-                            for nid, lat, lon, tags in nodes:
-                                feat = P.node_to_point_feature(nid, lat, lon, tags)
-                                if feat is not None:
-                                    yield (nid, lon, lat, feat["properties"], f)
-                        else:  # primitives
-                            for nid, lat, lon, tags in nodes:
-                                yield ("node", nid, lat, lon, None, None, None, None, tags, f)
-                            for wid, refs, tags in ways:
-                                yield ("way", wid, None, None, refs, None, None, None, tags, f)
-                            for rid, members, tags in rels:
-                                yield (
-                                    "relation", rid, None, None, None,
-                                    [m[0] for m in members],
-                                    [m[1] for m in members],
-                                    [m[2] for m in members],
-                                    tags, f,
-                                )
-            return
-
-        import json
-
-        f = partition.file
-        size = os.path.getsize(f)
-        if size > self.max_file_bytes:
-            raise ValueError(
-                f"osmpbf: {f!r} is {size:,} bytes, over the per-file assembly "
-                f"bound of {self.max_file_bytes:,} for layer {self.layer!r} — a "
-                "relation layer assembles one file per task.  Use "
-                "pydriosm_spark.sources.pbf.relation_layers_distributed / "
-                "lines_layer_distributed (member-join plan, no whole-file "
-                "state on any task) for files this size, or raise the "
-                "max_file_bytes option explicitly."
-            )
-        # stream blob-by-blob: peak raw-byte memory is ONE blob, not the
-        # file; decoded primitives accumulate (bounded by the guard above)
-        n, w, r = [], [], []
-        index = P.index_blobs(f)
-        with open(f, "rb") as fh:
-            for start, ln, bt in index:
-                if bt != "OSMData":
-                    continue
-                fh.seek(start)
-                for btype, raw in P.iter_blocks(fh.read(ln)):
-                    if btype != "OSMData" or raw is None:
-                        continue
-                    bn, bw, br = P.parse_block(raw)
-                    n.extend(bn)
-                    w.extend(bw)
-                    r.extend(br)
-        feats = sorted(P.LAYER_ASSEMBLERS[self.layer](n, w, r), key=lambda x: x["id"])
-        for feat in feats:
-            yield (
-                feat["id"],
-                json.dumps(feat["geometry"], separators=(",", ":")),
-                feat["properties"],
-                f,
-            )
+        return decode_layer(
+            partition.file,
+            self.layer,
+            partition.stripe,
+            partition.n_stripes,
+            self.max_file_bytes,
+        )
 
 
 class OsmPbfDataSource(DataSource):
@@ -199,19 +112,7 @@ class OsmPbfDataSource(DataSource):
         return "osmpbf"
 
     def schema(self):
-        layer = self.options.get("layer", "points")
-        if layer == "points":
-            return POINTS_SCHEMA
-        if layer == "primitives":
-            from pydriosm_spark.sources.pbf import PRIMITIVE_SCHEMA
-
-            return PRIMITIVE_SCHEMA
-        if layer in WHOLE_FILE:
-            return LAYER_SCHEMA
-        raise ValueError(
-            f"osmpbf: unknown layer {layer!r}; expected one of "
-            f"{SPLITTABLE + WHOLE_FILE}"
-        )
+        return layer_schema(self.options.get("layer", "points"))
 
     def reader(self, schema) -> OsmPbfReader:
         return OsmPbfReader(self.options)

@@ -16,3 +16,12 @@ def spark():
     s = get_spark(parallelism=int(os.environ.get("TEST_CPUS", "8")), app_name="pydriosm_spark_tests")
     yield s
     s.stop()
+
+
+@pytest.fixture(scope="session")
+def pbf_lake(tmp_path_factory):
+    """Directory holding the deterministic two-file PBF lake of
+    ``tests/pbf_lake.py`` (``a.osm.pbf``, ``b.osm.pbf``)."""
+    from tests.pbf_lake import write_lake
+
+    return write_lake(tmp_path_factory.mktemp("pbf_lake"))

@@ -46,10 +46,25 @@ def _deltas(vals: list[int]) -> list[int]:
     return out
 
 
-class PbfBuilder:
-    """Collects nodes/ways/relations, emits one OSMData block file."""
+def _blob(btype: str, block: bytes) -> bytes:
+    blob = _fv(2, len(block)) + _f(3, zlib.compress(block))
+    header = _f(1, btype.encode()) + _fv(3, len(blob))
+    return struct.pack(">i", len(header)) + header + blob
 
-    def __init__(self):
+
+def header_blob() -> bytes:
+    """One OSMHeader blob (a HeaderBlock naming its required features),
+    the first blob of a well-formed file."""
+    return _blob("OSMHeader", _f(4, b"OsmSchema-V0.6") + _f(4, b"DenseNodes"))
+
+
+class PbfBuilder:
+    """Collects nodes/ways/relations, emits one OSMData block file.
+    ``dense=True`` packs the nodes as one DenseNodes message (the form
+    real extracts use) instead of one Node message each."""
+
+    def __init__(self, dense: bool = False):
+        self.dense = dense
         self._st = [""]
         self._idx = {"": 0}
         self.nodes = []  # (id, lat, lon, {tags})
@@ -105,16 +120,30 @@ class PbfBuilder:
         m += _f(8, _packed(roles)) + _f(9, _packed(mids)) + _f(10, _packed(mtypes))
         return m
 
+    def _dense_msg(self) -> bytes:
+        raw = [(nid, round(lat * 1e7), round(lon * 1e7)) for nid, lat, lon, _t in self.nodes]
+        kv = []
+        for _n, _la, _lo, tags in self.nodes:
+            for k, v in tags.items():
+                kv += [self._s(k), self._s(v)]
+            kv.append(0)
+        m = b"".join(
+            _f(fno, _packed(_deltas([r[i] for r in raw])))
+            for fno, i in ((1, 0), (8, 1), (9, 2))
+        )
+        return m + _f(10, _packed(kv))
+
     def build(self) -> bytes:
         group = b""
-        for n in self.nodes:
-            group += _f(1, self._node_msg(*n))
+        if self.dense:
+            group += _f(2, self._dense_msg()) if self.nodes else b""
+        else:
+            for n in self.nodes:
+                group += _f(1, self._node_msg(*n))
         for w in self.ways:
             group += _f(3, self._way_msg(*w))
         for r in self.rels:
             group += _f(4, self._rel_msg(*r))
         st = b"".join(_f(1, s.encode()) for s in self._st)
         block = _f(1, st) + _f(2, group) + _fv(17, 100) + _fv(19, 0) + _fv(20, 0)
-        blob = _fv(2, len(block)) + _f(3, zlib.compress(block))
-        header = _f(1, b"OSMData") + _fv(3, len(blob))
-        return struct.pack(">i", len(header)) + header + blob
+        return _blob("OSMData", block)

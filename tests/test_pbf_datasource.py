@@ -1,17 +1,15 @@
 """spark.read.format("osmpbf") — the registered Python DataSource must
-equal the function surfaces byte-for-byte (VERDICT r4 item 4), with the
-blob index built on executors and multi-file inputs handled without any
-driver-side per-file loop."""
+equal the single-machine assemblers byte-for-byte on the generated test
+lake (VERDICT r4 item 4), with the blob index built on executors and
+multi-file inputs handled without any driver-side per-file loop; the
+stream, the distributed assembler and pbf_validate share its listing
+and its decoder."""
 
 import os
-import shutil
 
 import pytest
 
-PBF_PATH = "/root/reference/tests/data/rutland/rutland-latest.osm.pbf"
-needs_fixture = pytest.mark.skipif(
-    not os.path.exists(PBF_PATH), reason="reference fixture absent"
-)
+from tests.pbf_lake import keyed, reference
 
 
 @pytest.fixture(scope="module")
@@ -22,96 +20,81 @@ def registered(spark):
     return spark
 
 
-def _points_key(df):
-    return {
-        int(r["id"]): (r["lon"], r["lat"], dict(r["properties"]))
-        for r in df.collect()
-    }
-
-
-@needs_fixture
-def test_datasource_points_byte_identical_to_function_surface(registered):
+def test_datasource_points_byte_identical_to_assembler(registered, pbf_lake):
     spark = registered
-    from pydriosm_spark.sources import pbf
-
+    path = os.path.join(pbf_lake, "a.osm.pbf")
     via_fmt = spark.read.format("osmpbf").option("layer", "points").option(
         "n_tasks", "8"
-    ).load(PBF_PATH)
-    want = _points_key(pbf.read_pbf_points_layer(spark, PBF_PATH))
-    got = _points_key(via_fmt)
-    assert got == want
+    ).load(path)
+    got = keyed(via_fmt.collect(), "points")
+    assert got == reference(pbf_lake, "points", ["a.osm.pbf"])
     # the format string really planned 8 stripes (one read task each)
     assert via_fmt.rdd.getNumPartitions() == 8
 
 
-@needs_fixture
-def test_datasource_lines_layer_matches_read_pbf(registered):
+def test_datasource_lines_layer_matches_assembler(registered, pbf_lake):
+    spark = registered
+    via_fmt = spark.read.format("osmpbf").option("layer", "lines").load(pbf_lake)
+    got = keyed(via_fmt.collect(), "lines")
+    assert got == reference(pbf_lake, "lines")
+
+
+def test_multi_file_index_and_datasource_read(registered, pbf_lake):
+    """A directory of several PBFs: every listed file's blob index
+    tiles it, and the DataSource reads the union with src_file
+    distinguishing the files."""
     spark = registered
     from pydriosm_spark.sources import pbf
 
-    via_fmt = spark.read.format("osmpbf").option("layer", "lines").load(PBF_PATH)
-    want = {
-        int(r["id"]): (r["geometry"], dict(r["properties"]))
-        for r in pbf.read_pbf(spark, PBF_PATH, ["lines"])["lines"].collect()
-    }
-    got = {
-        int(r["id"]): (r["geometry"], dict(r["properties"]))
-        for r in via_fmt.collect()
-    }
-    assert got == want
+    files = pbf.list_pbf_files(pbf_lake)
+    assert [os.path.basename(f) for f in files] == ["a.osm.pbf", "b.osm.pbf"]
+    for f in files:
+        assert sum(ln for _s, ln, _bt in pbf.index_blobs(f)) == os.path.getsize(f)
 
-
-@needs_fixture
-def test_multi_file_index_and_datasource_read(registered, tmp_path):
-    """A directory of several PBFs: the executor-side index covers every
-    file (blob_ranges_df plans no driver loop), and the DataSource reads
-    the union with src_file distinguishing the copies."""
-    spark = registered
-    from pydriosm_spark.sources import pbf
-
-    d = tmp_path / "lake"
-    d.mkdir()
-    for name in ("a.osm.pbf", "b.osm.pbf"):
-        shutil.copy(PBF_PATH, d / name)
-
-    # distributed index: one row per blob per file, built on executors
-    idx = pbf.index_blobs_distributed(spark, str(d)).collect()
-    per_file = {}
-    for r in idx:
-        per_file.setdefault(os.path.basename(r["path"]), []).append(
-            (r["start"], r["length"], r["block_type"])
-        )
-    assert set(per_file) == {"a.osm.pbf", "b.osm.pbf"}
-    want_idx = pbf.index_blobs(PBF_PATH)
-    for f, rows in per_file.items():
-        assert sorted(rows) == sorted(want_idx)
-
-    n_single = pbf.read_pbf_points_layer(spark, PBF_PATH).count()
     df = spark.read.format("osmpbf").option("layer", "points").option(
         "n_tasks", "4"
-    ).load(str(d))
+    ).load(pbf_lake)
     from pyspark.sql import functions as F
 
     counts = {
         os.path.basename(r["src_file"]): r["n"]
         for r in df.groupBy("src_file").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    assert counts == {"a.osm.pbf": n_single, "b.osm.pbf": n_single}
+    want = {
+        f: len(reference(pbf_lake, "points", [f])) for f in ("a.osm.pbf", "b.osm.pbf")
+    }
+    assert counts == want
 
 
-@needs_fixture
-def test_split_primitives_still_byte_identical_after_executor_indexing(spark):
-    """blob_ranges_df now builds its index executor-side; the splittable
-    primitives scan must stay equal to a whole-file parse."""
+def test_datasource_primitives_equal_whole_file_parse(registered, pbf_lake):
+    """The splittable primitives scan (stripes index their file on the
+    executor) equals a whole-file parse, row for row, on every file."""
+    spark = registered
     from pydriosm_spark.sources import pbf
 
-    prims = pbf.read_pbf_primitives_split(spark, PBF_PATH, n_tasks=4)
-    node_ids = sorted(
-        r["id"] for r in prims.filter("kind = 'node'").select("id").collect()
-    )
-    with open(PBF_PATH, "rb") as f:
-        n, w, r = pbf.parse_pbf(f.read())
-    assert node_ids == sorted(nd[0] for nd in n)
+    prims = spark.read.format("osmpbf").option("layer", "primitives").option(
+        "n_tasks", "4"
+    ).load(pbf_lake)
+    got = {}
+    for r in prims.collect():
+        got[(os.path.basename(r["src_file"]), r["kind"], r["id"])] = (
+            r["lat"], r["lon"], r["refs"], r["mtypes"], r["mids"], r["roles"],
+            dict(r["tags"]),
+        )
+    want = {}
+    for f in ("a.osm.pbf", "b.osm.pbf"):
+        with open(os.path.join(pbf_lake, f), "rb") as fh:
+            n, w, rels = pbf.parse_pbf(fh.read())
+        for nid, lat, lon, tags in n:
+            want[(f, "node", nid)] = (lat, lon, None, None, None, None, tags)
+        for wid, refs, tags in w:
+            want[(f, "way", wid)] = (None, None, refs, None, None, None, tags)
+        for rid, members, tags in rels:
+            want[(f, "relation", rid)] = (
+                None, None, None, [m[0] for m in members], [m[1] for m in members],
+                [m[2] for m in members], tags,
+            )
+    assert got == want
 
 
 def test_datasource_rejects_unknown_layer(registered):
@@ -119,8 +102,7 @@ def test_datasource_rejects_unknown_layer(registered):
         registered.read.format("osmpbf").option("layer", "nope").load("/tmp").schema
 
 
-@needs_fixture
-def test_streaming_pbf_ingest_exactly_once(spark, tmp_path):
+def test_streaming_pbf_ingest_exactly_once(spark, pbf_lake, tmp_path):
     """Continuous PBF ingest (the download-loop replacement): a file
     lands -> availableNow drain decodes it; a second file lands -> the
     SAME checkpoint drains only the new one; union equals the batch
@@ -135,11 +117,11 @@ def test_streaming_pbf_ingest_exactly_once(spark, tmp_path):
     src.mkdir()
     sink = str(tmp_path / "points_out")
     ckpt = str(tmp_path / "ckpt")
-    shutil.copy(PBF_PATH, src / "a.osm.pbf")
+    shutil.copy(os.path.join(pbf_lake, "a.osm.pbf"), src / "a.osm.pbf")
 
     def drain():
         q = (
-            pbf.read_pbf_points_layer_stream(spark, str(src))
+            pbf.read_pbf_layer_stream(spark, str(src), "points")
             .writeStream.format("parquet")
             .option("path", sink)
             .option("checkpointLocation", ckpt)
@@ -149,30 +131,26 @@ def test_streaming_pbf_ingest_exactly_once(spark, tmp_path):
         q.awaitTermination(300)
 
     drain()
-    n_single = pbf.read_pbf_points_layer(spark, PBF_PATH).count()
-    assert spark.read.parquet(sink).count() == n_single
+    n_a = len(reference(pbf_lake, "points", ["a.osm.pbf"]))
+    n_b = len(reference(pbf_lake, "points", ["b.osm.pbf"]))
+    assert spark.read.parquet(sink).count() == n_a
 
-    shutil.copy(PBF_PATH, src / "b.osm.pbf")
+    shutil.copy(os.path.join(pbf_lake, "b.osm.pbf"), src / "b.osm.pbf")
     drain()  # same checkpoint: only b processed
     got = spark.read.parquet(sink)
-    assert got.count() == 2 * n_single
+    assert got.count() == n_a + n_b
     per_file = {
         os.path.basename(r["f"]): r["n"]
         for r in got.select(
             F.element_at(F.split("src_file", "/"), -1).alias("f")
         ).groupBy("f").agg(F.count(F.lit(1)).alias("n")).collect()
     }
-    assert per_file == {"a.osm.pbf": n_single, "b.osm.pbf": n_single}
-    # content equality: ids per file match the batch surface
-    ids = sorted(
-        r["id"] for r in got.filter(F.col("src_file").endswith("a.osm.pbf")).collect()
-    )
-    want = sorted(r["id"] for r in pbf.read_pbf_points_layer(spark, PBF_PATH).collect())
-    assert ids == want
+    assert per_file == {"a.osm.pbf": n_a, "b.osm.pbf": n_b}
+    # content equality: every row equals the batch reference
+    assert keyed(got.collect(), "points") == reference(pbf_lake, "points")
 
 
-@needs_fixture
-def test_pbf_validate_quarantines_corrupt_files(spark, tmp_path):
+def test_pbf_validate_quarantines_corrupt_files(spark, pbf_lake, tmp_path):
     """pbf_validate: the intact fixture passes shallow AND deep; each
     corruption mode earns its specific verdict from the bytes."""
     import shutil
@@ -181,15 +159,16 @@ def test_pbf_validate_quarantines_corrupt_files(spark, tmp_path):
 
     d = tmp_path / "lake"
     d.mkdir()
-    shutil.copy(PBF_PATH, d / "good.osm.pbf")
-    raw = open(PBF_PATH, "rb").read()
+    good = os.path.join(pbf_lake, "a.osm.pbf")
+    shutil.copy(good, d / "good.osm.pbf")
+    raw = open(good, "rb").read()
     (d / "short.osm.pbf").write_bytes(raw[:2])
     (d / "trunc.osm.pbf").write_bytes(raw[: len(raw) // 2])
     bad = bytearray(raw)
     bad[0:4] = (1 << 30).to_bytes(4, "big")  # absurd header length
     (d / "frame.osm.pbf").write_bytes(bytes(bad))
     # valid framing but garbage payload: stomp an OSMData blob body
-    idx = pbf.index_blobs(PBF_PATH)
+    idx = pbf.index_blobs(good)
     s, ln, _bt = next(r for r in idx if r[2] == "OSMData")
     deep_bad = bytearray(raw)
     deep_bad[s + ln - 64 : s + ln] = b"\xff" * 64
@@ -216,21 +195,17 @@ def test_pbf_validate_quarantines_corrupt_files(spark, tmp_path):
     assert deep["deepbad.osm.pbf"] == (False, "undecodable_block")
 
 
-@needs_fixture
-def test_streaming_layer_ingest_multipolygons(spark, tmp_path):
-    """Any-layer streaming ingest: multipolygons (whole-file member
-    context) drained with availableNow equals the batch read_pbf
-    surface."""
-    import shutil
-
+@pytest.mark.parametrize("layer", ["points", "multipolygons"])
+def test_streaming_layer_ingest_equals_datasource(registered, pbf_lake, tmp_path, layer):
+    """Any-layer streaming ingest: a drain with availableNow equals the
+    DataSource's batch read row for row, src_file included — for points
+    (striped in batch) and multipolygons (whole-file member context)."""
+    spark = registered
     from pydriosm_spark.sources import pbf
 
-    src = tmp_path / "landing"
-    src.mkdir()
-    shutil.copy(PBF_PATH, src / "a.osm.pbf")
-    sink = str(tmp_path / "mp_out")
+    sink = str(tmp_path / "out")
     q = (
-        pbf.read_pbf_layer_stream(spark, str(src), "multipolygons")
+        pbf.read_pbf_layer_stream(spark, pbf_lake, layer)
         .writeStream.format("parquet")
         .option("path", sink)
         .option("checkpointLocation", str(tmp_path / "ckpt"))
@@ -238,52 +213,37 @@ def test_streaming_layer_ingest_multipolygons(spark, tmp_path):
         .start()
     )
     q.awaitTermination(300)
-    got = {
-        (r["id"], r["geometry"]): dict(r["properties"])
-        for r in spark.read.parquet(sink).collect()
-    }
-    want = {
-        (r["id"], r["geometry"]): dict(r["properties"])
-        for r in pbf.read_pbf(spark, PBF_PATH, ["multipolygons"])["multipolygons"].collect()
-    }
-    assert got == want and len(got) > 1000
+    got = spark.read.parquet(sink).collect()
+    want = spark.read.format("osmpbf").option("layer", layer).load(pbf_lake).collect()
+    assert keyed(got, layer) == keyed(want, layer) and len(got) > 1000
+    assert {r["src_file"] for r in got} == {r["src_file"] for r in want}
 
-    import pytest as _p
-
-    with _p.raises(ValueError, match="unknown layer"):
-        pbf.read_pbf_layer_stream(spark, str(src), "nope")
+    with pytest.raises(ValueError, match="unknown layer"):
+        pbf.read_pbf_layer_stream(spark, pbf_lake, "nope")
 
 
-@needs_fixture
-def test_datasource_relation_layer_streams_and_matches_distributed(registered):
+def test_datasource_relation_layer_streams_and_matches_distributed(registered, pbf_lake):
     """VERDICT r4 item 2: the relation-layer path must (a) equal
-    relation_layers_distributed feature-for-feature on the fixture and
+    relation_layers_distributed feature-for-feature on the lake and
     (b) never whole-file fh.read() — it streams blob-by-blob under a
     loud size guard."""
     spark = registered
     from pydriosm_spark.sources import pbf
 
     via_fmt = (
-        spark.read.format("osmpbf").option("layer", "multipolygons").load(PBF_PATH)
+        spark.read.format("osmpbf").option("layer", "multipolygons").load(pbf_lake)
     )
-    got = {
-        int(r["id"]): (r["geometry"], dict(r["properties"]))
-        for r in via_fmt.collect()
-    }
-    dist = pbf.relation_layers_distributed(spark, PBF_PATH).filter(
+    got = keyed(via_fmt.collect(), "multipolygons")
+    dist = pbf.relation_layers_distributed(spark, pbf_lake).filter(
         "layer = 'multipolygons'"
     )
-    want = {
-        int(r["id"]): (r["geometry"], dict(r["properties"]))
-        for r in dist.collect()
-    }
+    want = keyed(dist.collect(), "multipolygons")
     assert got == want and len(got) > 1000
 
 
-@needs_fixture
-def test_datasource_relation_layer_size_guard(registered):
+def test_datasource_relation_layer_size_guard(registered, pbf_lake):
     """Files over max_file_bytes are rejected LOUDLY with a pointer to
-    the distributed assemblers, not silently OOM'd one task at a time."""
+    the distributed assembler, not silently OOM'd one task at a time."""
     import pytest as _p
 
     spark = registered
@@ -291,7 +251,7 @@ def test_datasource_relation_layer_size_guard(registered):
         spark.read.format("osmpbf")
         .option("layer", "multipolygons")
         .option("max_file_bytes", "1024")
-        .load(PBF_PATH)
+        .load(pbf_lake)
     )
     with _p.raises(Exception, match="relation_layers_distributed"):
         df.count()
@@ -300,7 +260,7 @@ def test_datasource_relation_layer_size_guard(registered):
         spark.read.format("osmpbf")
         .option("layer", "points")
         .option("max_file_bytes", "1024")
-        .load(PBF_PATH)
+        .load(pbf_lake)
         .count()
     )
     assert n > 5000
@@ -319,4 +279,41 @@ def test_pbf_listing_empty_landing_dir_is_not_an_error(spark, tmp_path):
     assert pbf.pbf_validate(spark, str(d)).count() == 0
     # a glob matching nothing still raises (typo'd pattern)
     with pytest.raises(Exception, match="[Nn]o PBF files|does not exist|PATH_NOT_FOUND"):
-        pbf._pbf_listing(spark, str(tmp_path / "nope" / "*.pbf")).count()
+        pbf.pbf_validate(spark, str(tmp_path / "nope" / "*.pbf")).count()
+
+
+def test_every_read_path_lists_the_same_files(registered, pbf_lake, tmp_path):
+    """One listing rule: a landing directory holding a nested .pbf and a
+    non-.pbf decoy — pbf_validate, the DataSource, the distributed
+    assembler and a stream drain all name the same two files, each as a
+    plain path."""
+    import shutil
+
+    from pydriosm_spark.sources import pbf
+
+    spark = registered
+    d = tmp_path / "landing"
+    (d / "sub").mkdir(parents=True)
+    shutil.copy(os.path.join(pbf_lake, "a.osm.pbf"), d / "a.osm.pbf")
+    shutil.copy(os.path.join(pbf_lake, "b.osm.pbf"), d / "sub" / "b.osm.pbf")
+    shutil.copy(os.path.join(pbf_lake, "a.osm.pbf"), d / "c.pbf.bak")
+    want = {str(d / "a.osm.pbf"), str(d / "sub" / "b.osm.pbf")}
+
+    assert {r["path"] for r in pbf.pbf_validate(spark, str(d)).collect()} == want
+    ds = spark.read.format("osmpbf").option("layer", "points").load(str(d))
+    assert {r["src_file"] for r in ds.select("src_file").distinct().collect()} == want
+    dist = pbf.relation_layers_distributed(spark, str(d))
+    assert {r["src_file"] for r in dist.select("src_file").distinct().collect()} == want
+    dist.release_primitives()
+    sink = str(tmp_path / "out")
+    q = (
+        pbf.read_pbf_layer_stream(spark, str(d), "points")
+        .writeStream.format("parquet")
+        .option("path", sink)
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(300)
+    got = spark.read.parquet(sink).select("src_file").distinct().collect()
+    assert {r["src_file"] for r in got} == want

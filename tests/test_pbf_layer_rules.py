@@ -169,6 +169,19 @@ def test_route_relation_is_multilinestring():
     assert [f["id"] for f in L["other"]] == []
 
 
+def test_multilinestring_relation_is_not_an_other_relation():
+    """type=multilinestring belongs to the multilinestrings layer only
+    (GDAL's rule, and the distributed assembler's): the single-machine
+    other_relations assembler must not emit it a second time."""
+    b = PbfBuilder()
+    b.node(1, 52.0, 0.0).node(2, 52.0, 0.001)
+    b.way(210, [1, 2], {"highway": "footway"})
+    b.relation(311, [("way", 210, "")], {"type": "multilinestring"})
+    L = _layers(b.build())
+    assert [f["id"] for f in L["mls"]] == [311]
+    assert [f["id"] for f in L["other"]] == []
+
+
 # ---------------------------------------------------------------------------
 # 2. Geofabrik shapefile cross-validation (independent pipeline)
 # ---------------------------------------------------------------------------

@@ -4,7 +4,6 @@ brute-force kNN kernel — each must be bit-identical to the scalar / JVM
 form it replaced."""
 
 import numpy as np
-import pytest
 
 from pydriosm_spark.sources import pbf
 
@@ -91,12 +90,9 @@ def test_round7_matches_python_round():
 
 
 def test_parse_pbf_want_selector_is_consistent():
-    fixture = "/root/reference/tests/data/rutland/rutland-latest.osm.pbf"
-    import os
+    from tests.pbf_lake import lake_file
 
-    if not os.path.exists(fixture):
-        pytest.skip("rutland fixture unavailable")
-    buf = open(fixture, "rb").read()
+    buf = lake_file(0)
     n_all, w_all, r_all = pbf.parse_pbf(buf)
     n_only, w_none, r_none = pbf.parse_pbf(buf, want="n")
     assert n_only == n_all

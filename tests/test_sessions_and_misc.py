@@ -374,12 +374,10 @@ def test_streaming_quantiles_equal_batch_sample(spark, tmp_path):
     assert got["value"].tolist() == want["value"].tolist()
 
 
-def test_factory_sessions_speak_the_full_vocabulary(spark):
+def test_factory_sessions_speak_the_full_vocabulary(spark, pbf_lake):
     """get_spark() auto-registers the SQL surface and both DataSource
     formats — a fresh factory session runs qc_*/osm_* SQL and
     spark.read.format('osmpbf'/'osmshp') without any manual setup."""
-    import os
-
     import pytest as _p
 
     row = spark.sql(
@@ -387,11 +385,9 @@ def test_factory_sessions_speak_the_full_vocabulary(spark):
     ).collect()[0]
     assert (row["r"], row["n"]) == (14, 3)
 
-    pbf = "/root/reference/tests/data/rutland/rutland-latest.osm.pbf"
-    if os.path.exists(pbf):
-        df = spark.read.format("osmpbf").option("layer", "points").option(
-            "n_tasks", "2"
-        ).load(pbf)
-        assert df.limit(5).count() == 5
+    df = spark.read.format("osmpbf").option("layer", "points").option(
+        "n_tasks", "2"
+    ).load(pbf_lake)
+    assert df.limit(5).count() == 5
     with _p.raises(Exception):
         spark.read.format("osmshp").load("/nonexistent-dir-xyz").count()

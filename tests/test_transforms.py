@@ -201,24 +201,17 @@ def test_geojson_canonical_fast_path_equals_parse_path():
     assert fast[len(rows) - 1] is None
 
 
-def test_geojson_canonical_fast_path_on_real_pbf_layers(spark):
-    """The true 100 TB layer-conversion input: real Rutland lines +
-    multilinestrings geometry strings (produced by the PBF assemblers
+def test_geojson_canonical_fast_path_on_pbf_layers(spark, pbf_lake):
+    """The true 100 TB layer-conversion input: lines, multilinestrings
+    and multipolygons geometry strings (produced by the PBF assemblers
     via json.dumps) through the fast path == parse path on every
     feature."""
-    import os
-
     import pandas as pd
-    import pytest as _p
 
     from pydriosm_spark.functions.transforms import geojson_to_wkt_batch
-    from pydriosm_spark.sources import pbf
 
-    path = "/root/reference/tests/data/rutland/rutland-latest.osm.pbf"
-    if not os.path.exists(path):
-        _p.skip("reference fixture absent")
-    layers = pbf.read_pbf(spark, path, ["lines", "multilinestrings", "multipolygons"])
-    for name, df in layers.items():
+    for name in ["lines", "multilinestrings", "multipolygons"]:
+        df = spark.read.format("osmpbf").option("layer", name).load(pbf_lake)
         geoms = pd.Series(
             [r["geometry"] for r in df.select("geometry").collect()], dtype=object
         )
@@ -228,22 +221,16 @@ def test_geojson_canonical_fast_path_on_real_pbf_layers(spark):
         assert len(geoms) > (5 if name == "multilinestrings" else 1000)
 
 
-def test_read_pbf_wkt_one_call_surface(spark):
-    """read_pbf_wkt == read_pbf + per-feature geojson_to_wkt on the real
-    extract (the fused read->transform flow), with the canonical fast
-    path carrying the load."""
+def test_canonical_wkt_udf_on_pbf_layers(spark, pbf_lake):
+    """The fused read->transform flow: the canonical WKT UDF over PBF
+    layer rows == per-feature geojson_to_wkt."""
     import json as _json
-    import os
 
-    import pytest as _p
+    from pydriosm_spark.functions.transforms import geojson_wkt_canonical_udf
 
-    from pydriosm_spark.sources import pbf
-
-    path = "/root/reference/tests/data/rutland/rutland-latest.osm.pbf"
-    if not os.path.exists(path):
-        _p.skip("reference fixture absent")
-    got = pbf.read_pbf_wkt(spark, path, ["points", "lines"])
-    for name, df in got.items():
+    for name in ["lines", "multipolygons"]:
+        df = spark.read.format("osmpbf").option("layer", name).load(pbf_lake)
+        df = df.withColumn("geometry_wkt", geojson_wkt_canonical_udf("geometry"))
         rows = df.select("id", "geometry", "geometry_wkt").limit(500).collect()
         assert len(rows) == 500
         for r in rows:
