@@ -95,11 +95,24 @@ def knn_bruteforce(
     if not broadcast:
         cand = _with_d2(points.crossJoin(places), u, v)
         return _topk(cand, point_keys, k)
+    index = places.select("place_id", "pu", "pv")
+    return _broadcast_topk(points, index, topk.pull_index(index, "place_id"), k, point_keys, u, v)
 
+
+def _broadcast_topk(
+    points: DataFrame,
+    index: DataFrame,
+    t,
+    k: int,
+    point_keys: list[str] | None = None,
+    u: str = "u",
+    v: str = "v",
+) -> DataFrame:
+    """The broadcast brute force: ``t`` is ``index`` (place_id, pu, pv)
+    pulled as a pyarrow Table sorted by place_id."""
     import numpy as np
     import pandas as pd
 
-    t = topk.pull_index(places.select("place_id", "pu", "pv"), "place_id")
     bc = points.sparkSession.sparkContext.broadcast(
         (
             t["place_id"].to_numpy(),  # keeps the declared place_id width
@@ -107,7 +120,8 @@ def knn_bruteforce(
             t["pv"].to_numpy().astype(np.int64),
         )
     )
-    place_t = dict(places.dtypes)["place_id"]
+    point_keys = point_keys or ["doc_id", "mention_idx"]
+    place_t = dict(index.dtypes)["place_id"]
     src = points.select(*point_keys, u, v)
     key_types = dict(src.dtypes)
     schema = (
@@ -388,15 +402,27 @@ def knn_auto(
     broadcast_nlj_threshold: int = 4096,
     **kw,
 ) -> DataFrame:
-    """Adaptive dispatch on |places| (one count job): up to
-    ``broadcast_nlj_threshold`` places the broadcast brute force
-    (:func:`knn_bruteforce`, the tiled numpy top-k kernel — no explode,
-    no shuffle) beats the cell path; above it the disk-probe plan
-    (:func:`knn_cell`) takes over; and past ``topk.MAX_INDEX_ROWS``
-    places the probe join and its fallback stop broadcasting (shuffle
-    join on the derived cell keys, CartesianProduct fallback)."""
-    n_places = places.count()
-    if n_places <= broadcast_nlj_threshold:
-        return knn_bruteforce(points, places, k=k, **{k_: v for k_, v in kw.items() if k_ in ("point_keys", "u", "v")})
-    kw.setdefault("broadcast_places", n_places <= topk.MAX_INDEX_ROWS)
+    """Adaptive dispatch on |places|: up to ``broadcast_nlj_threshold``
+    places the broadcast brute force (:func:`knn_bruteforce`, the tiled
+    numpy top-k kernel — no explode, no shuffle) beats the cell path;
+    above it the disk-probe plan (:func:`knn_cell`) takes over; and past
+    ``topk.MAX_INDEX_ROWS`` places the probe join and its fallback stop
+    broadcasting (shuffle join on the derived cell keys, CartesianProduct
+    fallback).
+
+    The decision rides the index pull (:func:`topk.pull_index` with
+    ``limit=broadcast_nlj_threshold``): one Arrow collect of at most
+    ``broadcast_nlj_threshold + 1`` places either is the brute force's
+    broadcast index or shows the place side is large, and only then is
+    it counted.  The pull stays under the gate: a threshold above
+    ``topk.MAX_INDEX_ROWS`` with a place side past the gate raises, as
+    the brute force's own pull does."""
+    index = places.select("place_id", "pu", "pv")
+    t = topk.pull_index(index, "place_id", limit=broadcast_nlj_threshold)
+    if t is not None:
+        return _broadcast_topk(
+            points, index, t, k,
+            **{k_: v for k_, v in kw.items() if k_ in ("point_keys", "u", "v")},
+        )
+    kw.setdefault("broadcast_places", places.count() <= topk.MAX_INDEX_ROWS)
     return knn_cell(spark, points, places, k=k, **kw)

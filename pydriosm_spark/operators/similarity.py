@@ -41,6 +41,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pydriosm_spark.operators import topk
+from pydriosm_spark.session import local_frame
 
 N_PLANES = 6
 N_TABLES = 8
@@ -613,9 +614,7 @@ def kmeans_fit(
         offsets[pid] = off
         off += pc[pid]
     off_df = F.broadcast(
-        emb.sparkSession.createDataFrame(
-            [(p, o) for p, o in offsets.items()], "_pid int, _off long"
-        )
+        local_frame(emb.sparkSession, list(offsets.items()), "_pid int, _off long")
     )
     ranked = (
         s.withColumn(

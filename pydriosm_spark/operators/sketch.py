@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pydriosm_spark.session import local_frame
+
 #: hash range: top 30 bits of the 60-bit md5 prefix (integer arithmetic
 #: stays well inside int64 for any k)
 HASH_BITS = 30
@@ -68,8 +70,8 @@ def sampled_quantiles(
         "rank", F.row_number().over(Window.orderBy(F.col("v").asc(), F.col("h").asc()))
     )
     spark = df.sparkSession
-    targets = spark.createDataFrame(
-        [(q, (q * k + 999) // 1000) for q in qs_permille], "q_permille long, rank int"
+    targets = local_frame(
+        spark, [(q, (q * k + 999) // 1000) for q in qs_permille], "q_permille long, rank int"
     )
     # Clamp target ranks to the actual sample size: inputs smaller than k
     # must return their exact max-side quantile, not silently drop the row

@@ -18,7 +18,9 @@ The form of the polygon side picks the plan; there is no mode knob:
 * a driver list (:func:`spatial_join_points_polygons`): the cover is
   built on the driver and **broadcast**, the rings ride an
   ``sc.broadcast``.  The fact side never shuffles, so hot cells cannot
-  skew it.
+  skew it.  The cover enters the plan as an Arrow local relation
+  (``session.local_frame``, a JVM ``LocalTableScan``), so the PIP
+  refine is the join's only Python stage.
 * a DataFrame (:func:`spatial_join_points_polygons_distributed`,
   :func:`spatial_join_polygons_polygons`): the cover is built in
   ``mapInPandas`` and joined with a shuffle on cell.  The points join
@@ -42,6 +44,7 @@ from pyspark.sql.types import BooleanType
 from pydriosm_spark.cells import quadcell
 from pydriosm_spark.geometry.ops import points_in_polygon, polygons_intersect
 from pydriosm_spark.operators.skew import hot_cell_salts, salted_join
+from pydriosm_spark.session import local_frame
 
 # The broadcast join uses the flat cover (one resolution, no probe
 # explode) while it has at most this many cells, else the compact one.
@@ -127,7 +130,8 @@ def _descend(rows: list, min_res: int) -> list:
 def polygon_frame(spark: SparkSession, polygons: Sequence[dict]) -> DataFrame:
     """Feature dicts -> the ``POLYGON_SCHEMA`` DataFrame that the
     DataFrame-side joins take."""
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         [
             (int(p["feature_id"]), [np.asarray(r, dtype=np.float64).tolist() for r in p["rings"]])
             for p in polygons
@@ -195,7 +199,7 @@ def spatial_join_points_polygons(
         cover_rows, res_set = build_cover(polygons, res, min_res=res), [res]
     else:
         cover_rows, res_set = compact, sorted(set(cres.tolist()))
-    cover = spark.createDataFrame(cover_rows, "feature_id int, cell long, full boolean")
+    cover = local_frame(spark, cover_rows, "feature_id int, cell long, full boolean")
     joined = (
         _probe(points, lon, lat, res_set)
         .join(F.broadcast(cover), "cell", "inner")
@@ -293,7 +297,7 @@ def spatial_join_points_polygons_distributed(
     # would hide the cover's size from it and force a shuffle.
     hot = hot_cell_salts(probe, "cell", TARGET_ROWS_PER_TASK).collect()
     if hot:
-        salts = spark.createDataFrame(hot, "cell long, n_salt int")
+        salts = local_frame(spark, hot, "cell long, n_salt int")
         probe = probe.withColumn("__rid", F.monotonically_increasing_id())
         joined = salted_join(probe, cells, "cell", "__rid", salts).drop("__rid")
     else:

@@ -8,7 +8,9 @@ selection:
 * :func:`pull_index` fetches the index side to the driver ONCE as an
   Arrow table — ``LIMIT MAX_INDEX_ROWS + 1`` and a raise past the gate,
   so the driver pull is bounded whatever the input — sorted by id.  The
-  caller broadcasts the numpy arrays it derives from that table.
+  caller broadcasts the numpy arrays it derives from that table; a
+  caller with a lower threshold of its own (``knn_auto``) passes it as
+  ``limit`` and gets None past it.
 * :func:`batch_topk` ranks one Arrow batch in query-row tiles of
   ``max(1, TILE_ELEMS // |index|)`` rows, so the score matrix and its
   temporaries stay near ``8 * TILE_ELEMS`` bytes (16 MB) each, at any
@@ -38,12 +40,17 @@ MAX_INDEX_ROWS = 2_000_000
 TILE_ELEMS = 1 << 21
 
 
-def pull_index(index: DataFrame, id_col: str):
+def pull_index(index: DataFrame, id_col: str, limit: int | None = None):
     """``index`` as a pyarrow Table sorted by ``id_col`` (stable), pulled
-    with one bounded Arrow collect; raises ValueError beyond
+    with one Arrow collect of at most ``min(limit, MAX_INDEX_ROWS) + 1``
+    rows.  None when ``index`` holds more than ``limit`` rows (a caller's
+    own threshold, at most the gate); raises ValueError beyond
     ``MAX_INDEX_ROWS`` rows."""
-    t = index.limit(MAX_INDEX_ROWS + 1).toArrow()
-    if t.num_rows > MAX_INDEX_ROWS:
+    cap = MAX_INDEX_ROWS if limit is None else min(limit, MAX_INDEX_ROWS)
+    t = index.limit(cap + 1).toArrow()
+    if t.num_rows > cap:
+        if limit is not None and limit <= MAX_INDEX_ROWS:
+            return None
         raise ValueError(
             f"broadcast top-k index would hold > {MAX_INDEX_ROWS} rows; use a "
             "distributed plan (knn broadcast=False, cosine_topk_lsh / cosine_topk_ivf)"

@@ -18,6 +18,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from pydriosm_spark.plans.checkpoint import PartitionedCheckpoint
+from pydriosm_spark.session import local_frame
 
 CATALOG_SCHEMA = (
     "partition string, format string, n_files int, bytes long, "
@@ -70,7 +71,7 @@ def catalogue(spark: SparkSession, ck: PartitionedCheckpoint) -> DataFrame:
                 path is not None and n_files > 0,
             )
         )
-    return spark.createDataFrame(rows, CATALOG_SCHEMA)
+    return local_frame(spark, rows, CATALOG_SCHEMA)
 
 
 COLUMN_INFO_SCHEMA = (
@@ -114,7 +115,7 @@ def table_column_info(
         for part, col, _pos, dtype, _n in rows:
             out.setdefault(part, {})[col] = dtype
         return out
-    return spark.createDataFrame(rows, COLUMN_INFO_SCHEMA)
+    return local_frame(spark, rows, COLUMN_INFO_SCHEMA)
 
 
 COLUMN_STATS_SCHEMA = (
@@ -152,9 +153,9 @@ def table_column_stats(
                 if f.endswith(".parquet") and not f.startswith(("_", "."))
             ]
     if not files:
-        return spark.createDataFrame([], COLUMN_STATS_SCHEMA)
+        return local_frame(spark, [], COLUMN_STATS_SCHEMA)
 
-    src = spark.createDataFrame(files, "partition string, file string").repartition(
+    src = local_frame(spark, files, "partition string, file string").repartition(
         min(len(files), int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
     )
 

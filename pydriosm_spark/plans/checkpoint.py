@@ -32,6 +32,8 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pydriosm_spark.session import local_frame
+
 
 @dataclass
 class CommitResult:
@@ -248,6 +250,4 @@ class PartitionedCheckpoint:
             (e["partition"], e["rows"], e["committed_at_run"])
             for e in self.committed().values()
         ]
-        return spark.createDataFrame(
-            rows, f"{self.col} string, rows long, committed_at_run string"
-        )
+        return local_frame(spark, rows, f"{self.col} string, rows long, committed_at_run string")

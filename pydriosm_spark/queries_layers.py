@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from pydriosm_spark.functions.transforms import geojson_wkt_udf, hstore_udf
+from pydriosm_spark.session import local_frame
 from pydriosm_spark.sources import layers, synth
 
 
@@ -163,7 +164,7 @@ def _tier_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     world -> 5 regions -> 25 nations (roots carry parent NULL)."""
     region = spark.read.parquet(f"{sf_dir}/region.parquet")
     nation = spark.read.parquet(f"{sf_dir}/nation.parquet")
-    root = spark.createDataFrame([("world", None)], "region string, parent string")
+    root = local_frame(spark, [("world", None)], "region string, parent string")
     lvl1 = region.select(F.col("r_name").alias("region"), F.lit("world").alias("parent"))
     lvl2 = nation.join(region, nation.n_regionkey == region.r_regionkey).select(
         F.col("n_name").alias("region"), F.col("r_name").alias("parent")

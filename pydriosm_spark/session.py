@@ -5,13 +5,21 @@ cluster (AQE, adaptive skew join, Arrow for pandas UDFs, sensible shuffle
 partition counts).  On a 1000-executor cluster the same builder is used
 with ``master`` unset (taken from spark-submit) and shuffle partitions
 sized ~2-3x total cores.
+
+Tables the driver builds itself (the broadcast join's cover, salt and
+offset tables, catalogue listings) enter Spark through
+:func:`local_frame`, never ``createDataFrame(<python list>)``: a Python
+list plans ``Scan ExistingRDD``, which re-serializes the rows through a
+Python worker task per core on every execution, while an Arrow table
+plans a JVM-side ``LocalTableScan`` with no Python stage.
 """
 
 from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import DataType
 
 
 def get_spark(
@@ -102,3 +110,21 @@ def get_spark(
     _register("osmpbf DataSource", _pbf_ds)
     _register("osmshp DataSource", _shp_ds)
     return spark
+
+
+def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
+    """``rows`` (tuples in the order of the DDL ``schema``) as a
+    DataFrame planned as a ``LocalTableScan``: the rows become one Arrow
+    table, handed to the JVM once, so no execution runs a Python task to
+    re-read them.  Column types and nullability are exactly those
+    ``createDataFrame(rows, schema)`` gives."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = DataType.fromDDL(schema)
+    arrow = to_arrow_schema(struct)
+    cols = list(zip(*rows)) or [()] * len(arrow)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+    )
+    return spark.createDataFrame(table, struct)

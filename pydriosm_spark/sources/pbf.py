@@ -54,6 +54,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pydriosm_spark.session import local_frame
+
 # GDAL osmconf.ini default point attributes (reference golden schema)
 POINT_ATTRS = ["name", "barrier", "highway", "ref", "address", "is_in", "place", "man_made"]
 #: keys that do NOT make a node significant (GDAL OSM driver hardcoded
@@ -694,6 +696,49 @@ def layer_schema(layer: str) -> str:
     raise ValueError(f"unknown layer {layer!r}; expected one of {SPLITTABLE + WHOLE_FILE}")
 
 
+class TruncatedPbfError(ValueError):
+    """A PBF whose blob framing promises bytes past the end of the file."""
+
+
+def _blob_frames(f, path: str) -> Iterator[tuple]:
+    """(start, length, block_type) per blob of the open PBF ``f``: the
+    one walk of the blob framing, shared by :func:`index_blobs` and
+    :func:`validate_pbf_file`.  Reads only the size prefixes and
+    BlobHeaders; each step seeks from its own offset, so a caller may
+    read a yielded blob in between.  A cut file (partial size prefix,
+    short BlobHeader, payload past EOF) raises :class:`TruncatedPbfError`,
+    a header length outside (0, 64 KiB] or a negative payload size
+    raises ValueError; both name the file and the blob's byte offset."""
+    size = os.fstat(f.fileno()).st_size
+    start = 0
+    while True:
+        f.seek(start)
+        hdr = f.read(4)
+        if not hdr:
+            return
+        if len(hdr) < 4:
+            raise TruncatedPbfError(f"truncated PBF {path!r}: partial size prefix at byte {start}")
+        (hlen,) = struct.unpack(">i", hdr)
+        if hlen <= 0 or hlen > 64 * 1024:
+            raise ValueError(f"bad PBF framing {path!r}: BlobHeader length {hlen} at byte {start}")
+        bh = f.read(hlen)
+        if len(bh) < hlen:
+            raise TruncatedPbfError(f"truncated PBF {path!r}: short BlobHeader at byte {start}")
+        btype, dsize = "", 0
+        for fno, _wt, v in _fields(bh):
+            if fno == 1:
+                btype = v.decode()
+            elif fno == 3:
+                dsize = v
+        if dsize < 0:
+            raise ValueError(f"bad PBF framing {path!r}: payload size {dsize} at byte {start}")
+        length = 4 + hlen + dsize
+        if start + length > size:
+            raise TruncatedPbfError(f"truncated PBF {path!r}: blob payload past EOF at byte {start}")
+        yield start, length, btype
+        start += length
+
+
 def index_blobs(path: str) -> list:
     """Seek-scan the PBF framing and return (start, length, block_type)
     per blob — ``[start, start+length)`` covers the 4-byte size prefix,
@@ -701,25 +746,13 @@ def index_blobs(path: str) -> list:
     slice straight to ``iter_blocks``.  Reads only the headers (~KB per
     8 MB blob), never the payloads: this is the blob-offset index job
     that makes a multi-GB PBF parse on N cores (the distributed analogue
-    of the reference's >50 MB chunked read, _reader.py:348-353)."""
-    out = []
+    of the reference's >50 MB chunked read, _reader.py:348-353).
+
+    A truncated file raises (:class:`TruncatedPbfError`, a ValueError)
+    naming the file and the offset of the cut blob, rather than reading
+    as fewer blobs, or none."""
     with open(path, "rb") as f:
-        while True:
-            start = f.tell()
-            hdr = f.read(4)
-            if len(hdr) < 4:
-                break
-            (hlen,) = struct.unpack(">i", hdr)
-            bh = f.read(hlen)
-            btype, dsize = "", 0
-            for fno, _wt, v in _fields(bh):
-                if fno == 1:
-                    btype = v.decode()
-                elif fno == 3:
-                    dsize = v
-            f.seek(dsize, 1)
-            out.append((start, 4 + hlen + dsize, btype))
-    return out
+        return list(_blob_frames(f, path))
 
 
 def _local_path(uri: str) -> str:
@@ -860,11 +893,13 @@ def validate_pbf_file(path: str, deep: bool = False) -> tuple:
     the quarantine check a 100 TB lake runs before committing an extract
     to the ingest frontier (the geo analogue of media_validate).
 
-    Shallow (default): walk the blob framing — size prefixes, BlobHeader
-    parses, payload extents vs EOF — reading only headers.  ``deep=True``
-    additionally decompresses and parses every OSMData block (full read).
-    Reasons: 'too_short', 'bad_framing' (unparseable header / negative
-    size), 'truncated' (payload extends past EOF), 'no_header' (first
+    Shallow (default): the readers' own framing walk (:func:`index_blobs`'
+    rules) — size prefixes, BlobHeader parses, payload extents vs EOF —
+    reading only headers.  ``deep=True`` additionally decompresses and
+    parses every OSMData block (full read).  Reasons: 'too_short',
+    'bad_framing' (header length out of bounds, unparseable header,
+    negative size), 'truncated' (the file ends inside a blob: partial
+    size prefix, short BlobHeader, payload past EOF), 'no_header' (first
     block is not OSMHeader), 'undecodable_block' (deep only)."""
     try:
         size = os.path.getsize(path)
@@ -876,43 +911,20 @@ def validate_pbf_file(path: str, deep: bool = False) -> tuple:
     first_type = None
     try:
         with open(path, "rb") as f:
-            while True:
-                hdr = f.read(4)
-                if len(hdr) == 0:
-                    break
-                if len(hdr) < 4:
-                    return False, "bad_framing", n
-                (hlen,) = struct.unpack(">i", hdr)
-                if hlen <= 0 or hlen > 64 * 1024:
-                    return False, "bad_framing", n
-                bh = f.read(hlen)
-                if len(bh) < hlen:
-                    return False, "truncated", n
-                btype, dsize = "", 0
-                for fno, _wt, v in _fields(bh):
-                    if fno == 1:
-                        btype = v.decode()
-                    elif fno == 3:
-                        dsize = v
+            for start, length, btype in _blob_frames(f, path):
                 if first_type is None:
                     first_type = btype
-                if dsize < 0:
-                    return False, "bad_framing", n
-                if f.tell() + dsize > size:
-                    return False, "truncated", n
                 if deep and btype == "OSMData":
-                    start = f.tell() - 4 - hlen
                     f.seek(start)
-                    buf = f.read(4 + hlen + dsize)
                     try:
-                        for _bt, raw in iter_blocks(buf):
+                        for _bt, raw in iter_blocks(f.read(length)):
                             if raw is not None:
                                 parse_block(raw)
                     except Exception:
                         return False, "undecodable_block", n
-                else:
-                    f.seek(dsize, 1)
                 n += 1
+    except TruncatedPbfError:
+        return False, "truncated", n
     except Exception:
         return False, "bad_framing", n
     if first_type != "OSMHeader":
@@ -938,7 +950,7 @@ def pbf_validate(spark: SparkSession, path: str, deep: bool = False) -> DataFram
             rows = [(p, *validate_pbf_file(p, deep=deep)) for p in b["path"]]
             yield pd.DataFrame(rows, columns=["path", "valid", "reason", "n_blobs"])
 
-    listing = spark.createDataFrame([(p,) for p in files], "path string")
+    listing = local_frame(spark, [(p,) for p in files], "path string")
     return listing.repartition(max(len(files), 1)).mapInPandas(scan, schema)
 
 

@@ -42,6 +42,8 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pydriosm_spark.session import local_frame
+
 # ---- frozen constants (changing any of these breaks golden outputs) ----
 LON0_E5 = -82000          # bbox west edge, 1e-5 deg
 LAT0_E5 = 5_252_000       # bbox south edge
@@ -311,6 +313,6 @@ def polygons_df(spark: SparkSession, which: str = "zones") -> DataFrame:
                 offs,
             )
         )
-    return spark.createDataFrame(
-        rows, "feature_id int, geometry_wkt string, xs array<double>, ys array<double>, ring_offsets array<int>"
+    return local_frame(
+        spark, rows, "feature_id int, geometry_wkt string, xs array<double>, ys array<double>, ring_offsets array<int>"
     )

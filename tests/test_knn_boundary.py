@@ -199,3 +199,22 @@ def test_auto_cell_size_ball_invariant_across_disk_radius(spark):
     for r in (2, 4):
         ratio = balls[r] / balls[1]
         assert 0.5 <= ratio <= 2.0, balls
+
+
+@pytest.mark.parametrize("threshold", [4096, 3])
+def test_knn_auto_decides_with_its_index_pull(spark, boundary_case, threshold):
+    """knn_auto equals the CartesianProduct brute force on both sides of
+    its threshold; below it, the one Arrow pull that decides is also the
+    broadcast index (one job, no count)."""
+    points, places = boundary_case
+    sc, group = spark.sparkContext, f"knn_auto_plan_{threshold}"
+    sc.setJobGroup(group, "knn_auto planning")
+    try:
+        got = knn.knn_auto(spark, points, places, k=2, broadcast_nlj_threshold=threshold,
+                           cell_size=S, disk_radius=R)
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert _knn_pairs(got) == _knn_pairs(knn.knn_bruteforce(points, places, k=2, broadcast=False))
+    if threshold == 4096:  # the 6 places take the brute-force branch
+        assert len(jobs) == 1, jobs

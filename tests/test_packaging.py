@@ -51,3 +51,32 @@ def test_no_unreferenced_top_level_definitions():
                 where[node.name] = f"{p.relative_to(root)}:{node.lineno}"
     dead = sorted(where[n] + " " + n for n, c in defs.items() if words[n] <= c)
     assert not dead, "unreferenced top-level definitions:\n" + "\n".join(dead)
+
+
+def test_driver_tables_are_local_relations():
+    """Every ``createDataFrame(`` call in the package sits inside
+    ``session.local_frame``: a Python list handed to createDataFrame
+    plans ``Scan ExistingRDD``, which runs a Python task per core to
+    re-read the rows on every execution."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    stray = []
+    for p in (root / "pydriosm_spark").rglob("*.py"):
+        tree = ast.parse(p.read_text())
+        allowed = {
+            id(n)
+            for f in ast.walk(tree)
+            if isinstance(f, ast.FunctionDef) and f.name == "local_frame"
+            for n in ast.walk(f)
+        }
+        stray += [
+            f"{p.relative_to(root)}:{n.lineno}"
+            for n in ast.walk(tree)
+            if isinstance(n, ast.Call)
+            and isinstance(n.func, ast.Attribute)
+            and n.func.attr == "createDataFrame"
+            and id(n) not in allowed
+        ]
+    assert not stray, "createDataFrame outside local_frame:\n" + "\n".join(stray)

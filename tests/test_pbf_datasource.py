@@ -317,3 +317,64 @@ def test_every_read_path_lists_the_same_files(registered, pbf_lake, tmp_path):
     q.awaitTermination(300)
     got = spark.read.parquet(sink).select("src_file").distinct().collect()
     assert {r["src_file"] for r in got} == want
+
+
+@pytest.mark.parametrize("cut", ["osm_header", "last_osm_data"])
+def test_truncated_pbf_fails_loudly_on_every_decode_path(registered, pbf_lake, tmp_path, cut):
+    """A lake file cut inside its OSMHeader blob or inside its last
+    OSMData blob must fail the DataSource read, the stream drain and the
+    distributed assembler with the file named — never read as fewer
+    rows — while pbf_validate still quarantines it as truncated."""
+    from pydriosm_spark.sources import pbf
+
+    spark = registered
+    good = os.path.join(pbf_lake, "a.osm.pbf")
+    raw = open(good, "rb").read()
+    idx = pbf.index_blobs(good)
+    start, length, btype = idx[0] if cut == "osm_header" else idx[-1]
+    assert btype == ("OSMHeader" if cut == "osm_header" else "OSMData")
+    d = tmp_path / "landing"
+    d.mkdir()
+    bad = d / "cut.osm.pbf"
+    bad.write_bytes(raw[: start + length - 10])
+
+    with pytest.raises(ValueError, match=f"truncated PBF .*cut.osm.pbf.* at byte {start}"):
+        pbf.index_blobs(str(bad))
+    with pytest.raises(Exception, match="truncated PBF"):
+        spark.read.format("osmpbf").option("layer", "points").load(str(d)).count()
+    q = (
+        pbf.read_pbf_layer_stream(spark, str(d), "points")
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    with pytest.raises(Exception, match="truncated PBF"):
+        q.awaitTermination(300)
+    dist = pbf.relation_layers_distributed(spark, str(d))
+    try:
+        with pytest.raises(Exception, match="truncated PBF"):
+            dist.count()
+    finally:
+        dist.release_primitives()
+    (row,) = pbf.pbf_validate(spark, str(d)).collect()
+    assert (row["valid"], row["reason"]) == (False, "truncated")
+
+
+def test_default_stripes_follow_file_size(registered, pbf_lake, tmp_path):
+    """Without ``n_tasks`` a file gets one stripe per STRIPE_BYTES (at
+    most MAX_STRIPES): each lake file (~18 KB) is one task, and a file
+    just past STRIPE_BYTES (lake file ``a`` repeated) is two, which read
+    the rows of one."""
+    from pydriosm_spark.sources.pbf_datasource import STRIPE_BYTES
+
+    df = registered.read.format("osmpbf").option("layer", "points").load(pbf_lake)
+    assert df.rdd.getNumPartitions() == 2
+    raw = open(os.path.join(pbf_lake, "a.osm.pbf"), "rb").read()
+    big = tmp_path / "big.osm.pbf"
+    big.write_bytes(raw * (STRIPE_BYTES // len(raw) + 1))
+    df = registered.read.format("osmpbf").option("layer", "points").load(str(big))
+    assert df.rdd.getNumPartitions() == 2
+    one = registered.read.format("osmpbf").option("layer", "points").option("n_tasks", "1")
+    assert sorted(df.collect()) == sorted(one.load(str(big)).collect())

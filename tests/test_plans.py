@@ -34,6 +34,9 @@ def test_spatial_join_plan_broadcast_single_python_stage(spark):
     # the broadcast of the cover
     assert p.count("Exchange") == p.count("BroadcastExchange"), p
     assert p.count("ArrowEvalPython") == 1, p
+    # the driver-built cover is a JVM local relation, not a Python RDD
+    # re-read by a Python task per core on every execution
+    assert "LocalTableScan" in p and "ExistingRDD" not in p, p
 
 
 def test_flat_cover_has_no_probe_explode(spark):
@@ -150,11 +153,16 @@ def test_bbox_city_join_broadcasts_catalogue_no_python(spark):
 
 
 def test_tier_query_plan_has_no_python(spark):
-    """Tier depth computation is joins + unions only — no Python stage."""
-    from pydriosm_spark.queries_layers import q_region_tier
+    """Tier depth computation is joins + unions only — no Python stage.
+    The edges' driver-built root row is a local relation, not a Python
+    RDD; the doubling rounds' localCheckpoint scans, JVM blocks, are the
+    tier plan's only ExistingRDD scans."""
+    from pydriosm_spark.queries_layers import _tier_edges, q_region_tier
 
     p = _plan(q_region_tier(spark, SF_SMOKE))
     assert "Python" not in p, p
+    e = _plan(_tier_edges(spark, SF_SMOKE))
+    assert "LocalTableScan" in e and "ExistingRDD" not in e, e
 
 
 def test_star_join_is_broadcast_chain(spark):

@@ -391,3 +391,32 @@ def test_factory_sessions_speak_the_full_vocabulary(spark, pbf_lake):
     assert df.limit(5).count() == 5
     with _p.raises(Exception):
         spark.read.format("osmshp").load("/nonexistent-dir-xyz").count()
+
+
+def test_local_frame_equals_python_list_frame(spark):
+    """session.local_frame gives the rows, types and nullability that
+    createDataFrame(<python list>) gives — for the join cover, the empty
+    column-stats table and nested polygon rings — as a LocalTableScan."""
+    import numpy as np
+
+    from pydriosm_spark.operators.spatial_join import POLYGON_SCHEMA, build_cover
+    from pydriosm_spark.plans.catalogue import COLUMN_STATS_SCHEMA
+    from pydriosm_spark.session import local_frame
+    from pydriosm_spark.sources import synth
+
+    zones = synth.zone_features()
+    rings = [
+        (int(z["feature_id"]), [np.asarray(r, dtype=np.float64).tolist() for r in z["rings"]])
+        for z in zones[:3]
+    ]
+    cases = [
+        (build_cover(zones, 17, min_res=17), "feature_id int, cell long, full boolean"),
+        ([], COLUMN_STATS_SCHEMA),
+        (rings + [(98, []), (99, None)], POLYGON_SCHEMA),
+    ]
+    for rows, schema in cases:
+        got, want = local_frame(spark, rows, schema), spark.createDataFrame(rows, schema)
+        assert got.dtypes == want.dtypes and got.schema == want.schema, schema
+        assert got.collect() == want.collect(), schema
+        plan = got._jdf.queryExecution().executedPlan().toString()
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan, plan

@@ -113,9 +113,9 @@ def test_polygon_polygon_join_matches_all_pairs_reference(spark):
 
 
 def test_distributed_cover_never_collects_polygons(spark, points):
-    """Plan shape: the polygon side must enter the join as a Spark scan
-    (mapInPandas over the polygon DataFrame), not as a driver-built
-    local relation."""
+    """Plan shape: the cover is built on executors by mapInPandas over
+    the polygon DataFrame (here ``polygon_frame``'s LocalTableScan) and
+    is never collected into a driver-built table."""
     poly_df = polygon_frame(spark, _poly_dicts()[:200])
     plan = spatial_join_points_polygons_distributed(
         spark, points, poly_df, res=17

@@ -100,3 +100,19 @@ def test_broadcast_index_gate_raises_before_shipping(spark, monkeypatch):
     points = spark.createDataFrame([(0, 0, 0, 0)], "doc_id long, mention_idx long, u long, v long")
     with pytest.raises(ValueError, match="> 3 rows"):
         knn.knn_bruteforce(points, places, k=1)
+
+
+def test_knn_auto_threshold_past_the_gate_raises(spark, monkeypatch):
+    """A broadcast_nlj_threshold above MAX_INDEX_ROWS does not lift the
+    gate: knn_auto's deciding pull is bounded by it and raises past it,
+    and at a threshold under the gate the large side goes to the cell
+    path instead."""
+    monkeypatch.setattr(topk, "MAX_INDEX_ROWS", 3)
+    places = spark.createDataFrame(
+        [(i, i, i) for i in range(4)], "place_id int, pu long, pv long"
+    )
+    points = spark.createDataFrame([(0, 0, 0, 0)], "doc_id long, mention_idx long, u long, v long")
+    with pytest.raises(ValueError, match="> 3 rows"):
+        knn.knn_auto(spark, points, places, k=1, broadcast_nlj_threshold=10)
+    got = knn.knn_auto(spark, points, places, k=1, broadcast_nlj_threshold=2, cell_size=1)
+    assert [(r["place_id"], r["d2"]) for r in got.collect()] == [(0, 0)]
