@@ -11,8 +11,10 @@ lineage for idempotent resume.
 
 Everything is built on the public PySpark DataFrame API; Python-side code
 is vectorized (numpy / Arrow pandas UDFs) — no per-row Python in hot paths.
+
+Sessions come from :func:`pydriosm_spark.session.get_spark`.  This file
+imports nothing: the Python worker daemon (``_worker_daemon``) runs inside
+the package, and every worker it forks inherits what it imports.
 """
 
 __version__ = "0.1.0"
-
-from pydriosm_spark.session import get_spark  # noqa: F401

@@ -151,14 +151,15 @@ def _broadcast_topk(
     return src.mapInPandas(kern, schema)
 
 
-def auto_cell_size(places: DataFrame, k: int, disk_radius: int) -> int:
-    """Derive the disk-probe cell size from PLACE DENSITY (VERDICT r4
-    item 7): size the certification ball (radius R*S) to hold ~4k
-    places, so a typical point certifies on the cheap path instead of
-    falling through to brute force.  Two tiny exact aggregates —
-    deterministic across runs and parallelism, and the RESULT is
-    invariant to S (S only picks the plan), so oracles are untouched
-    by construction.
+def auto_cell_size(places: DataFrame, k: int, disk_radius: int) -> tuple[int, int]:
+    """(cell size, place count): derive the disk-probe cell size from
+    PLACE DENSITY (VERDICT r4 item 7): size the certification ball
+    (radius R*S) to hold ~4k places, so a typical point certifies on the
+    cheap path instead of falling through to brute force.  The count is
+    pass 1's, returned so a caller needs no second count of the side.
+    Two tiny exact aggregates — deterministic across runs and
+    parallelism, and the RESULT is invariant to S (S only picks the
+    plan), so oracles are untouched by construction.
 
     Pass 1 (count + bbox) gives the uniform-density estimate S0.  Pass
     2 corrects for CLUSTERING (r5 caveat: bbox-average density under-
@@ -180,7 +181,7 @@ def auto_cell_size(places: DataFrame, k: int, disk_radius: int) -> int:
     ).toArrow().to_pylist()[0]
     n = int(r["n"] or 0)
     if n == 0:
-        return 1
+        return 1, 0
     area = max(1, int(r["u1"]) - int(r["u0"])) * max(1, int(r["v1"]) - int(r["v0"]))
     # pi*(R*S)^2 * n/area >= 4k  ->  (R*S)^2 >= 4k*area/(pi*n); pi ~ 3
     rs2 = max(1, (4 * k * area) // max(1, 3 * n))
@@ -229,7 +230,7 @@ def auto_cell_size(places: DataFrame, k: int, disk_radius: int) -> int:
     m = max(1, m)
     # local density ~ m / t^2; solve 3*(R*S)^2 * m / t^2 >= 4k
     rs2 = max(1, (4 * k * t * t) // (3 * m))
-    return max(1, math.isqrt(rs2) // max(1, disk_radius) + 1)
+    return max(1, math.isqrt(rs2) // max(1, disk_radius) + 1), n
 
 
 def _disk_probe_topk(
@@ -295,7 +296,7 @@ def knn_cell(
     place side the flag says is too big (ADVICE r3)."""
     point_keys = point_keys or ["doc_id", "mention_idx"]
     if cell_size == "auto":
-        cell_size = auto_cell_size(places, k, disk_radius)
+        cell_size, _ = auto_cell_size(places, k, disk_radius)
     S, R = int(cell_size), int(disk_radius)
 
     placed = places.select(
@@ -414,9 +415,11 @@ def knn_auto(
     ``limit=broadcast_nlj_threshold``): one Arrow collect of at most
     ``broadcast_nlj_threshold + 1`` places either is the brute force's
     broadcast index or shows the place side is large, and only then is
-    it counted.  The pull stays under the gate: a threshold above
-    ``topk.MAX_INDEX_ROWS`` with a place side past the gate raises, as
-    the brute force's own pull does."""
+    it counted: once, by the ``"auto"`` cell sizing, whose count also
+    sets ``broadcast_places`` unless the caller passed it.  The pull
+    stays under the gate: a threshold above ``topk.MAX_INDEX_ROWS`` with
+    a place side past the gate raises, as the brute force's own pull
+    does."""
     index = places.select("place_id", "pu", "pv")
     t = topk.pull_index(index, "place_id", limit=broadcast_nlj_threshold)
     if t is not None:
@@ -424,5 +427,9 @@ def knn_auto(
             points, index, t, k,
             **{k_: v for k_, v in kw.items() if k_ in ("point_keys", "u", "v")},
         )
-    kw.setdefault("broadcast_places", places.count() <= topk.MAX_INDEX_ROWS)
+    n = None
+    if kw.get("cell_size", "auto") == "auto":
+        kw["cell_size"], n = auto_cell_size(places, k, kw.get("disk_radius", 1))
+    if "broadcast_places" not in kw:
+        kw["broadcast_places"] = (places.count() if n is None else n) <= topk.MAX_INDEX_ROWS
     return knn_cell(spark, points, places, k=k, **kw)

@@ -134,8 +134,9 @@ def table_column_stats(
     stats view that lets a user reason about partition pruning before
     running a query.  The driver only LISTS the committed data files;
     the footer reads (pyarrow, metadata-only) run ON EXECUTORS via
-    mapInPandas, so a 10^5-file table introspects in parallel.  Min/max
-    render as strings (cross-type column)."""
+    mapInPandas in at most ``defaultParallelism`` tasks, so a 10^5-file
+    table introspects in parallel.  Min/max render as strings
+    (cross-type column)."""
     import pandas as pd
 
     done = ck.committed()
@@ -156,7 +157,7 @@ def table_column_stats(
         return local_frame(spark, [], COLUMN_STATS_SCHEMA)
 
     src = local_frame(spark, files, "partition string, file string").repartition(
-        min(len(files), int(spark.conf.get("spark.sql.shuffle.partitions", "32")))
+        min(len(files), spark.sparkContext.defaultParallelism)
     )
 
     def read_footers(batches) -> "pd.DataFrame":

@@ -1,10 +1,15 @@
 """SparkSession factory tuned for the spatial-join + tiling workload.
 
-Local-mode settings mirror what we would set on a real multi-executor
-cluster (AQE, adaptive skew join, Arrow for pandas UDFs, sensible shuffle
-partition counts).  On a 1000-executor cluster the same builder is used
-with ``master`` unset (taken from spark-submit) and shuffle partitions
-sized ~2-3x total cores.
+:func:`get_spark` always builds a ``local[N]`` session.  Its settings are
+the ones a multi-executor cluster would use too (AQE, adaptive skew join,
+Arrow for pandas UDFs, shuffle partitions sized from the cores), but
+cluster jobs (``examples/*_job.py`` under spark-submit) build their own
+session with ``SparkSession.builder`` and PySpark's stock worker daemon.
+
+A ``get_spark`` session forks its Python workers from
+``pydriosm_spark._worker_daemon`` whenever the package loads from a
+directory: the stock daemon's workers re-read every zip on their path at
+the start of each task, this one's only when a zip changed.
 
 Tables the driver builds itself (the broadcast join's cover, salt and
 offset tables, catalogue listings) enter Spark through
@@ -28,14 +33,22 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or fetch) a SparkSession.
+    """Build (or fetch) a ``local[parallelism]`` SparkSession.
+
+    The master is always ``local[N]``, whatever ``parallelism`` is; a
+    cluster job builds its session with ``SparkSession.builder`` instead.
+    Python workers fork from :mod:`pydriosm_spark._worker_daemon`, whose
+    zip importers skip re-reading unchanged archives at each task start,
+    when the package loads from a directory; the daemon imports it from
+    there, so that directory goes first on the workers' ``PYTHONPATH``.
+    Loaded from a zip (``--py-files``) the session keeps PySpark's stock
+    daemon, which the zip cannot replace before the daemon starts.
 
     Parameters
     ----------
     parallelism:
         Local-mode core count (``local[N]``).  ``None`` → value of
-        ``$SPARK_GRAFT_CPUS`` or 32.  On a cluster, pass ``None`` and set
-        master via spark-submit instead.
+        ``$SPARK_GRAFT_CPUS`` or 32.
     shuffle_partitions:
         Defaults to ``2 * parallelism`` — small enough to avoid tiny-task
         overhead at test scale, and AQE coalesces further at runtime.  At
@@ -70,7 +83,9 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    conf = dict(extra_conf or {})
+    conf.update(_worker_daemon_conf(conf.get("spark.executorEnv.PYTHONPATH")))
+    for k, v in conf.items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     # the SQL surface (qc_* / osm_* SQL-defined functions) and the two
@@ -110,6 +125,20 @@ def get_spark(
     _register("osmpbf DataSource", _pbf_ds)
     _register("osmshp DataSource", _shp_ds)
     return spark
+
+
+def _worker_daemon_conf(pythonpath: str | None) -> dict:
+    """The conf that makes Python workers fork from ``_worker_daemon``:
+    the package's parent directory goes in front of ``pythonpath`` on the
+    workers' ``PYTHONPATH``, so the daemon can import the module at start.
+    Empty when the package loads from a zip."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    if not os.path.isfile(os.path.join(root, "pydriosm_spark", "_worker_daemon.py")):
+        return {}
+    return {
+        "spark.python.daemon.module": "pydriosm_spark._worker_daemon",
+        "spark.executorEnv.PYTHONPATH": os.pathsep.join(p for p in (root, pythonpath) if p),
+    }
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:

@@ -934,12 +934,14 @@ def validate_pbf_file(path: str, deep: bool = False) -> tuple:
 
 def pbf_validate(spark: SparkSession, path: str, deep: bool = False) -> DataFrame:
     """(path, valid, reason, n_blobs) for every .pbf under ``path`` (the
-    :func:`list_pbf_files` listing) — validation runs ON EXECUTORS, one
-    file per task; corrupt extracts route to quarantine instead of
-    crashing a 1000-file ingest.  An existing directory with no PBFs
-    yet gives 0 rows (a landing directory polled between file drops);
-    any other input that lists nothing raises, since a glob matching
-    nothing is almost always a typo'd pattern."""
+    :func:`list_pbf_files` listing) — validation runs ON EXECUTORS, the
+    files spread over at most ``defaultParallelism`` tasks (each task
+    start costs a Python worker setup, so not one task per file);
+    corrupt extracts route to quarantine instead of crashing a 1000-file
+    ingest.  An existing directory with no PBFs yet gives 0 rows (a
+    landing directory polled between file drops); any other input that
+    lists nothing raises, since a glob matching nothing is almost always
+    a typo'd pattern."""
     files = list_pbf_files(path)
     if not files and not os.path.isdir(_local_path(path)):
         raise FileNotFoundError(f"no PBF files found under {path!r}")
@@ -951,7 +953,8 @@ def pbf_validate(spark: SparkSession, path: str, deep: bool = False) -> DataFram
             yield pd.DataFrame(rows, columns=["path", "valid", "reason", "n_blobs"])
 
     listing = local_frame(spark, [(p,) for p in files], "path string")
-    return listing.repartition(max(len(files), 1)).mapInPandas(scan, schema)
+    tasks = max(1, min(len(files), spark.sparkContext.defaultParallelism))
+    return listing.repartition(tasks).mapInPandas(scan, schema)
 
 
 def relation_layers_distributed(spark: SparkSession, path: str) -> DataFrame:

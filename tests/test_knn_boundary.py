@@ -165,8 +165,8 @@ def test_auto_cell_size_clustering_correction(spark):
         [(i, rng.randrange(0, 100_000), rng.randrange(0, 100_000)) for i in range(1000)],
         "place_id long, pu long, pv long",
     )
-    s_clustered = knn.auto_cell_size(clustered, k=3, disk_radius=1)
-    s_uniform = knn.auto_cell_size(uniform, k=3, disk_radius=1)
+    s_clustered = knn.auto_cell_size(clustered, k=3, disk_radius=1)[0]
+    s_uniform = knn.auto_cell_size(uniform, k=3, disk_radius=1)[0]
     assert s_clustered < s_uniform // 4, (s_clustered, s_uniform)
 
     pts = spark.createDataFrame(
@@ -194,7 +194,7 @@ def test_auto_cell_size_ball_invariant_across_disk_radius(spark):
         "place_id long, pu long, pv long",
     )
     balls = {
-        r: r * knn.auto_cell_size(places, k=1, disk_radius=r) for r in (1, 2, 4)
+        r: r * knn.auto_cell_size(places, k=1, disk_radius=r)[0] for r in (1, 2, 4)
     }
     for r in (2, 4):
         ratio = balls[r] / balls[1]
@@ -218,3 +218,34 @@ def test_knn_auto_decides_with_its_index_pull(spark, boundary_case, threshold):
     assert _knn_pairs(got) == _knn_pairs(knn.knn_bruteforce(points, places, k=2, broadcast=False))
     if threshold == 4096:  # the 6 places take the brute-force branch
         assert len(jobs) == 1, jobs
+
+
+def test_knn_auto_counts_the_place_side_once(spark, boundary_case):
+    """Past the threshold the ``"auto"`` cell sizing's count also decides
+    ``broadcast_places``: knn_auto's jobs are its index pull, the sizing's
+    and knn_cell's own, with no separate count of the place side; with a
+    fixed cell size and ``broadcast_places`` passed, nothing is counted."""
+    points, places = boundary_case
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, "knn_auto planning")
+        try:
+            out = fn()
+            return out, len(sc.statusTracker().getJobIdsForGroup(group))
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+
+    (cs, n), sizing = jobs("knn_sizing", lambda: knn.auto_cell_size(places, 2, 1))
+    assert n == 6
+    _, cell = jobs("knn_cell_auto", lambda: knn.knn_cell(
+        spark, points, places, k=2, cell_size=cs, disk_radius=1))
+    got, auto = jobs("knn_auto_auto", lambda: knn.knn_auto(
+        spark, points, places, k=2, broadcast_nlj_threshold=3))
+    _, cell_fixed = jobs("knn_cell_fixed", lambda: knn.knn_cell(
+        spark, points, places, k=2, cell_size=S, disk_radius=R, broadcast_places=False))
+    _, fixed = jobs("knn_auto_fixed", lambda: knn.knn_auto(
+        spark, points, places, k=2, broadcast_nlj_threshold=3, cell_size=S, disk_radius=R,
+        broadcast_places=False))
+    assert (auto, fixed) == (1 + sizing + cell, 1 + cell_fixed)
+    assert _knn_pairs(got) == _knn_pairs(knn.knn_bruteforce(points, places, k=2, broadcast=False))
