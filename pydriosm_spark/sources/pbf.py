@@ -36,7 +36,7 @@ blob by blob):
   assemble on one task.
 
 :func:`pbf_validate` quarantines corrupt files before decode; all four
-list files with :func:`list_pbf_files`.
+list files with :func:`list_files`.
 """
 
 from __future__ import annotations
@@ -764,20 +764,23 @@ def _local_path(uri: str) -> str:
     return uri
 
 
-def list_pbf_files(path: str) -> list:
-    """File/dir/glob -> sorted .pbf file list: the one listing rule of
-    every read path.  A single existing file is taken whatever its name;
-    a directory is walked recursively for ``*.pbf``.  Driver-side os
-    listing only — the per-blob work happens on executors."""
+def list_files(path: str, suffixes) -> list:
+    """File/dir/glob (or ``file:`` URI) -> sorted list of plain paths: the
+    one listing rule of every read path, ``osmpbf`` (``".pbf"``) and
+    ``osmshp`` (``(".shp", ".zip")``) alike.  A single existing file is
+    taken whatever its name; a directory (walked recursively) or a glob
+    gives the files whose names end in ``suffixes``, so a glob over a
+    layer's files skips its sidecars.  Driver-side os listing only — the
+    per-blob and per-record work happens on executors."""
     path = _local_path(path)
     if os.path.isfile(path):
         return [path]
     if os.path.isdir(path):
         out = []
         for root, _dirs, files in os.walk(path):
-            out += [os.path.join(root, f) for f in files if f.endswith(".pbf")]
+            out += [os.path.join(root, f) for f in files if f.endswith(suffixes)]
         return sorted(out)
-    return sorted(p for p in glob.glob(path) if os.path.isfile(p))
+    return sorted(p for p in glob.glob(path) if os.path.isfile(p) and p.endswith(suffixes))
 
 
 def _osm_data_blocks(path: str, stripe: int, n_stripes: int) -> Iterator[bytes]:
@@ -857,7 +860,7 @@ def decode_layer(
 def read_pbf_layer_stream(spark: SparkSession, path: str, layer: str) -> DataFrame:
     """CONTINUOUS ingest of any osmpbf layer: a Structured Streaming
     file source watches ``path`` (recursively, ``*.pbf`` only — the
-    :func:`list_pbf_files` rule) and decodes each new file exactly once
+    :func:`list_files` rule) and decodes each new file exactly once
     into the DataSource's schema for ``layer`` — the engine's
     replacement for the reference's download-then-import loop (files
     land in storage; the stream picks them up; the checkpoint
@@ -934,7 +937,7 @@ def validate_pbf_file(path: str, deep: bool = False) -> tuple:
 
 def pbf_validate(spark: SparkSession, path: str, deep: bool = False) -> DataFrame:
     """(path, valid, reason, n_blobs) for every .pbf under ``path`` (the
-    :func:`list_pbf_files` listing) — validation runs ON EXECUTORS, the
+    :func:`list_files` listing) — validation runs ON EXECUTORS, the
     files spread over at most ``defaultParallelism`` tasks (each task
     start costs a Python worker setup, so not one task per file);
     corrupt extracts route to quarantine instead of crashing a 1000-file
@@ -942,7 +945,7 @@ def pbf_validate(spark: SparkSession, path: str, deep: bool = False) -> DataFram
     landing directory polled between file drops); any other input that
     lists nothing raises, since a glob matching nothing is almost always
     a typo'd pattern."""
-    files = list_pbf_files(path)
+    files = list_files(path, ".pbf")
     if not files and not os.path.isdir(_local_path(path)):
         raise FileNotFoundError(f"no PBF files found under {path!r}")
     schema = "path string, valid boolean, reason string, n_blobs long"

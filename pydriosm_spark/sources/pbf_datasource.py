@@ -61,7 +61,7 @@ from pydriosm_spark.sources.pbf import (
     SPLITTABLE,
     decode_layer,
     layer_schema,
-    list_pbf_files,
+    list_files,
 )
 
 #: default stripe size: one read task per this many bytes of a file.
@@ -104,7 +104,7 @@ class OsmPbfReader(DataSourceReader):
                     "osmpbf: .load(path), .option('path', ...), or "
                     ".option('paths', json_list) is required"
                 )
-            self.files = list_pbf_files(path)
+            self.files = list_files(path, ".pbf")
         if not self.files:
             raise FileNotFoundError("osmpbf: no .pbf files to read")
 

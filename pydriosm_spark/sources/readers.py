@@ -1,4 +1,4 @@
-"""File-format scan operators mirroring the reference's reader surface:
+"""The compressed text-format scans of the reference's reader surface:
 
 * ``read_csv_xz``    — S7 (/root/reference/pydriosm/reader/parser.py:1995-2018):
   lzma-compressed tab-separated files with default columns
@@ -9,33 +9,24 @@
 * ``read_geojson_xz``— S8 (parser.py:2023-2069): lzma + JSON, the
   ``features`` array exploded to rows (id, geometry json, properties),
   dropping the constant ``type`` column like the reference (:2058-2060).
-* ``read_shp_zip``   — S4/S5 (parser.py:275-433, 472-607): zipped
-  shapefile archives; selective member extraction by layer-name
-  substring (the regex ``(?<=gis_osm_)\\w+(?=(_a)?_free_1)``,
-  parser.py:205), then a **from-scratch SHP + DBF binary parser**
-  (sources/shp.py — no pyshp in this environment) emitting one row per
-  feature with ``coordinates``/``shape_type`` like the reference's
-  pyshp engine (parser.py:595-605).
 
-All readers return DataFrames; for many files the scan parallelizes per
-file via ``binaryFile`` (at 100 TB the equivalent input is already
-landed columnar, making these the ingest edge, not the hot path).
+Both return DataFrames; for many files the scan parallelizes per file
+via ``binaryFile`` (at 100 TB the equivalent input is already landed
+columnar, making these the ingest edge, not the hot path).  Zipped and
+plain shapefiles (S4/S5) are read by ``spark.read.format("osmshp")``
+(``sources/shp_datasource.py``).
 """
 
 from __future__ import annotations
 
-import io
 import json
 import lzma
-import re
-import zipfile
 from typing import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 
 CSV_XZ_DEFAULT_COLS = ["type", "id", "feature", "note"]
-LAYER_NAME_RE = re.compile(r"(?<=gis_osm_)\w+(?=(_a)?_free_1)")
 
 
 def read_csv_xz(
@@ -79,68 +70,6 @@ def read_geojson_xz(spark: SparkSession, path: str) -> DataFrame:
                     for f in data.get("features", [])
                 ]
                 yield pd.DataFrame(rows, columns=["id", "geometry", "properties", "src_file"])
-
-    return (
-        spark.read.format("binaryFile").load(path).select("path", "content").mapInPandas(decode, schema)
-    )
-
-
-def layer_name_of_member(member: str) -> str | None:
-    """Layer name from a Geofabrik member filename — regex + the
-    reference's ``_a`` area-file suffix strip (parser.py:205-213)."""
-    m = LAYER_NAME_RE.search(member)
-    return m.group(0).replace("_a", "") if m else None
-
-
-def read_shp_zip(
-    spark: SparkSession, path: str, layer_names: list[str] | None = None
-) -> DataFrame:
-    """Zipped shapefile archive(s) -> one row per feature:
-    (layer, record_idx, shape_type, coordinates, parts, fields json)."""
-    from pydriosm_spark.sources.shp import parse_shp, parse_dbf
-
-    schema = (
-        "layer string, record_idx long, shape_type int, "
-        "coordinates array<array<double>>, parts array<int>, fields string, src_file string"
-    )
-
-    def decode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            for fpath, content in zip(b["path"], b["content"]):
-                zf = zipfile.ZipFile(io.BytesIO(bytes(content)))
-                members = zf.namelist()
-                shp_members = [m for m in members if m.endswith(".shp")]
-                for shp_m in shp_members:
-                    layer = layer_name_of_member(shp_m) or shp_m.rsplit("/", 1)[-1][:-4]
-                    if layer_names is not None and layer not in layer_names:
-                        continue  # selective extraction (parser.py:404-410)
-                    shapes = parse_shp(zf.read(shp_m))
-                    dbf_m = shp_m[:-4] + ".dbf"
-                    recs = parse_dbf(zf.read(dbf_m)) if dbf_m in members else [{}] * len(shapes)
-                    rows = [
-                        (
-                            layer,
-                            i,
-                            st,
-                            [[float(x), float(y)] for x, y in pts],
-                            list(parts),
-                            json.dumps(recs[i] if i < len(recs) else {}, default=str),
-                            fpath,
-                        )
-                        for i, (st, pts, parts) in enumerate(shapes)
-                    ]
-                    yield pd.DataFrame(
-                        rows,
-                        columns=[
-                            "layer",
-                            "record_idx",
-                            "shape_type",
-                            "coordinates",
-                            "parts",
-                            "fields",
-                            "src_file",
-                        ],
-                    )
 
     return (
         spark.read.format("binaryFile").load(path).select("path", "content").mapInPandas(decode, schema)

@@ -22,6 +22,7 @@ numpy ``frombuffer`` for all coordinate arrays — no per-point Python.
 
 from __future__ import annotations
 
+import io
 import struct
 
 import numpy as np
@@ -68,27 +69,37 @@ def parse_shp_record(content: bytes):
     raise ValueError(f"unsupported shape type {stype}")
 
 
-def parse_shp(buf: bytes):
-    """-> list of (shape_type, points [(x, y), ...], parts [int, ...])."""
-    if len(buf) < 100:
+def shp_index(fh) -> list:
+    """Walk the record headers of a seekable binary ``.shp`` stream ->
+    list of (record_content_offset_bytes, content_bytes): the same map
+    :func:`parse_shx` reads from the ``.shx`` sidecar, rebuilt with one
+    8-byte read per record when the sidecar is missing."""
+    head = fh.read(100)
+    if len(head) < 100:
         raise ValueError("not a shapefile: too short")
-    (file_code,) = struct.unpack(">i", buf[0:4])
+    (file_code,) = struct.unpack(">i", head[0:4])
     if file_code != 9994:
         raise ValueError(f"not a shapefile: file code {file_code}")
-    (file_len_words,) = struct.unpack(">i", buf[24:28])
-    end = min(len(buf), file_len_words * 2)
+    (file_len_words,) = struct.unpack(">i", head[24:28])
+    size = fh.seek(0, 2)
+    end = min(size, file_len_words * 2)
 
     out = []
     off = 100
     while off + 8 <= end:
-        _recno, content_words = struct.unpack(">ii", buf[off : off + 8])
-        off += 8
-        content = buf[off : off + content_words * 2]
-        off += content_words * 2
-        if len(content) < 4:
+        fh.seek(off)
+        _recno, content_words = struct.unpack(">ii", fh.read(8))
+        n = min(content_words * 2, size - off - 8)  # a cut last record keeps its bytes
+        if n < 4:
             break
-        out.append(parse_shp_record(content))
+        out.append((off + 8, n))
+        off += 8 + content_words * 2
     return out
+
+
+def parse_shp(buf: bytes):
+    """-> list of (shape_type, points [(x, y), ...], parts [int, ...])."""
+    return [parse_shp_record(buf[o : o + n]) for o, n in shp_index(io.BytesIO(buf))]
 
 
 def parse_shx(buf: bytes):
@@ -156,19 +167,10 @@ def parse_dbf_record(rec: bytes, fields) -> dict | None:
 
 
 def parse_dbf(buf: bytes):
-    """-> list of dicts (one per non-deleted record)."""
+    """-> one slot per record: a dict, or None for a record flagged
+    deleted, so index ``i`` is always record ``i`` of the ``.shp``."""
     if len(buf) < 32:
         return []
     fields, n_rec, hdr_size, rec_size = parse_dbf_header(buf)
-
-    out = []
-    off = hdr_size
-    for _ in range(n_rec):
-        rec = buf[off : off + rec_size]
-        off += rec_size
-        if len(rec) < rec_size:
-            continue
-        row = parse_dbf_record(rec, fields)
-        if row is not None:
-            out.append(row)
-    return out
+    recs = (buf[hdr_size + i * rec_size : hdr_size + (i + 1) * rec_size] for i in range(n_rec))
+    return [parse_dbf_record(r, fields) for r in recs if len(r) == rec_size]

@@ -1,34 +1,53 @@
-"""``spark.read.format("osmshp")`` — shapefiles as a registered Python
-DataSource, with genuine RECORD-LEVEL splits.
+"""``spark.read.format("osmshp")`` — the one shapefile reader, for plain
+``.shp`` files (with or without a ``.shx``) and zipped Geofabrik extracts
+alike — and the ``df.write.format("osmshp")`` sink.
 
-Unlike PBF (whose blob framing must be walked from byte 0), a shapefile
-ships its own random-access map: the ``.shx`` sidecar holds one
-(offset, length) pair per record, and the ``.dbf`` attribute file is
-fixed-width (record ``i`` at ``hdr_size + i*rec_size``).  So a single
-big .shp splits EXACTLY into ``n_tasks`` stripes with no scanning at
-all — each read task fetches the tiny .shx, seeks straight to its own
-records in .shp and .dbf, and never touches the rest of the file.  The
-driver only LISTS files.
+    spark.dataSource.register(OsmShpDataSource)  # get_spark() does this
+    df = spark.read.format("osmshp").option("layers", "railways,places").load(path)
 
-    spark.dataSource.register(OsmShpDataSource)
-    df = spark.read.format("osmshp").option("n_tasks", "8").load(dir_or_glob)
+``path`` is a file, a directory (walked for ``*.shp`` and ``*.zip``), a
+glob or a ``file:`` URI, listed by the rule ``osmpbf`` uses
+(:func:`pydriosm_spark.sources.pbf.list_files`).  Options:
 
-Output schema matches :func:`pydriosm_spark.sources.readers.read_shp_zip`
-row-for-row: (layer, record_idx, shape_type, coordinates, parts,
-fields json, src_file) — the reference's pyshp row surface
-(/root/reference/pydriosm/reader/parser.py:472-607) with the layer name
-derived from the filename.  Files without a ``.shx`` sidecar fall back
-to one whole-file partition.
+* ``layers`` — comma-separated layer names (default: all): the
+  reference's selective extraction (parser.py:404-410); a layer not
+  asked for is never inflated or decoded;
+* ``n_tasks`` — stripes per plain file; by default one per record, at
+  most ``MAX_STRIPES``, counted from the ``.shx`` size (one stripe
+  without a ``.shx``);
+* ``geometry`` — ``"wkt"`` appends ``geometry_wkt``.
+
+Rows are (layer, record_idx, shape_type, coordinates, parts, fields
+json, src_file), the reference's pyshp row surface (parser.py:472-607).
+The layer is named from the file or member name by the Geofabrik regex
+with its ``_a`` area suffix stripped (parser.py:205-213); ``src_file``
+is the plain path of the ``.shp`` or the zip.
+
+The driver lists files and each zip's member names, and opens no
+``.shp``.  A partition is ``(file, zip member or None, stripe,
+n_stripes)``, and every partition runs one record loop: take the
+(offset, length) record index from the ``.shx``, or walk the ``.shp``
+record headers when there is none (:func:`pydriosm_spark.sources.shp.shp_index`);
+for each record ``i`` of the stripe, parse the ``.shp`` record at its
+offset and ``.dbf`` record ``i`` at ``hdr_size + i * rec_size``, and
+emit the row.  A feature whose ``.dbf`` record is flagged deleted is not
+emitted, as in GDAL's Shapefile driver (the reference's geopandas
+engine); its neighbours keep their own attributes and record numbers.
+A plain file is read by seeking.  A zip member is inflated once and
+read by slicing, as one stripe, since inflating is sequential.
 """
 
 from __future__ import annotations
 
-import glob
+import io
 import json
 import os
-from typing import Iterator, Tuple
-
+import re
+import struct
+import zipfile
+from contextlib import ExitStack
 from dataclasses import dataclass
+from typing import Iterator, Tuple
 
 from pyspark.sql.datasource import (
     DataSource,
@@ -46,112 +65,131 @@ SHP_SCHEMA = (
 #: reference's ``emulate_gpd=True`` shapely-geometry column
 #: (parser.py:600-603) re-expressed as text geometry
 SHP_SCHEMA_WKT = SHP_SCHEMA + ", geometry_wkt string"
+LAYER_NAME_RE = re.compile(r"(?<=gis_osm_)\w+(?=(_a)?_free_1)")
+#: default stripes per plain file at most
+MAX_STRIPES = 8
 
 
-def list_shp_files(path: str) -> list:
-    if os.path.isfile(path):
-        return [path]
-    if os.path.isdir(path):
-        out = []
-        for root, _dirs, files in os.walk(path):
-            out += [os.path.join(root, f) for f in files if f.endswith(".shp")]
-        return sorted(out)
-    return sorted(p for p in glob.glob(path) if os.path.isfile(p))
+def layer_name_of_member(member: str) -> str | None:
+    """Layer name from a Geofabrik member filename — regex + the
+    reference's ``_a`` area-file suffix strip (parser.py:205-213)."""
+    m = LAYER_NAME_RE.search(member)
+    return m.group(0).replace("_a", "") if m else None
 
 
-class _RecStripe(InputPartition):
-    def __init__(self, file: str, stripe: int, n_stripes: int):
-        self.file, self.stripe, self.n_stripes = file, stripe, n_stripes
+def _layer(name: str) -> str:
+    base = os.path.basename(name)
+    return layer_name_of_member(base) or base[:-4]
 
 
-class _WholeShp(InputPartition):
-    def __init__(self, file: str):
-        self.file = file
+class _Part(InputPartition):
+    """Stripe ``stripe`` of ``n_stripes`` of the shapefile ``file``, or of
+    the ``.shp`` member ``member`` of the zip ``file``."""
+
+    def __init__(self, file: str, member: str | None, stripe: int, n_stripes: int):
+        self.file, self.member = file, member
+        self.stripe, self.n_stripes = stripe, n_stripes
 
 
 class OsmShpReader(DataSourceReader):
     def __init__(self, options):
-        self.n_tasks = int(options.get("n_tasks", "8"))
+        from pydriosm_spark.sources.pbf import list_files
+
+        #: stripes per plain file; None sizes them from each file's .shx
+        n_tasks = options.get("n_tasks")
+        self.n_tasks = None if n_tasks is None else int(n_tasks)
+        layers = options.get("layers")
+        self.layers = None if layers is None else {x.strip() for x in layers.split(",")}
         self.with_wkt = options.get("geometry", "").lower() == "wkt"
         path = options.get("path")
         if not path:
             raise ValueError("osmshp: .load(path) or .option('path', ...) is required")
-        self.files = list_shp_files(path)
+        self.files = list_files(path, (".shp", ".zip"))
         if not self.files:
-            raise FileNotFoundError(f"osmshp: no .shp files under {path!r}")
+            raise FileNotFoundError(f"osmshp: no .shp or .zip files under {path!r}")
+
+    def _wanted(self, name: str) -> bool:
+        return self.layers is None or _layer(name) in self.layers
+
+    def _stripes(self, file: str) -> int:
+        if self.n_tasks is not None:
+            return self.n_tasks
+        try:  # a stat, not an open: the .shx holds 8 bytes per record
+            n_records = (os.path.getsize(file[:-4] + ".shx") - 100) // 8
+        except OSError:
+            return 1
+        return min(MAX_STRIPES, max(1, n_records))
 
     def partitions(self):
         parts = []
         for f in self.files:
-            if os.path.exists(f[:-4] + ".shx"):
-                parts += [_RecStripe(f, s, self.n_tasks) for s in range(self.n_tasks)]
-            else:
-                parts.append(_WholeShp(f))
+            if f.endswith(".zip"):
+                with zipfile.ZipFile(f) as z:
+                    parts += [
+                        _Part(f, m, 0, 1)
+                        for m in z.namelist()
+                        if m.endswith(".shp") and self._wanted(m)
+                    ]
+            elif self._wanted(f):
+                k = self._stripes(f)
+                parts += [_Part(f, None, s, k) for s in range(k)]
         return parts
 
     def read(self, partition) -> Iterator[Tuple]:
         from pydriosm_spark.sources import shp as S
-        from pydriosm_spark.sources.readers import layer_name_of_member
 
-        f = partition.file
-        base = os.path.basename(f)
-        layer = layer_name_of_member(base) or base[:-4]
-        dbf_path = f[:-4] + ".dbf"
-
-        def row(i, st, pts, parts, rec):
-            base_row = (
-                layer, i, st,
-                [[float(x), float(y)] for x, y in pts],
-                list(parts),
-                json.dumps(rec, default=str),
-                f,
-            )
-            if not self.with_wkt:
-                return base_row
-            from pydriosm_spark.functions.transforms import shape_to_wkt
-
-            return base_row + (shape_to_wkt(st, pts, parts or None),)
-
-        if isinstance(partition, _WholeShp):
-            with open(f, "rb") as fh:
-                shapes = S.parse_shp(fh.read())
-            recs = []
-            if os.path.exists(dbf_path):
-                with open(dbf_path, "rb") as fh:
-                    recs = S.parse_dbf(fh.read())
-            for i, (st, pts, parts) in enumerate(shapes):
-                yield row(i, st, pts, parts, recs[i] if i < len(recs) else {})
+        if partition is None:  # Spark's stand-in when no layer was wanted
             return
+        f, member = partition.file, partition.member
+        layer = _layer(member or f)
+        with ExitStack() as stack:
+            if member is None:
+                shp = stack.enter_context(open(f, "rb"))
 
-        with open(f[:-4] + ".shx", "rb") as fh:
-            index = S.parse_shx(fh.read())
-        dbf = None
-        if os.path.exists(dbf_path):
-            import struct
+                def sidecar(ext):
+                    p = f[:-4] + ext
+                    return stack.enter_context(open(p, "rb")) if os.path.exists(p) else None
+            else:
+                z = stack.enter_context(zipfile.ZipFile(f))
+                names = set(z.namelist())
+                shp = io.BytesIO(z.read(member))
 
-            with open(dbf_path, "rb") as fh:
-                head = fh.read(32)
-                hdr_size = struct.unpack("<H", head[8:10])[0]
-                header = head + fh.read(max(0, hdr_size - 32))
-            fields, _n, hdr_size, rec_size = S.parse_dbf_header(header)
-            dbf = (fields, hdr_size, rec_size)
+                def sidecar(ext):
+                    m = member[:-4] + ext
+                    return io.BytesIO(z.read(m)) if m in names else None
 
-        s, k = partition.stripe, partition.n_stripes
-        with open(f, "rb") as fh, (
-            open(dbf_path, "rb") if dbf else open(os.devnull, "rb")
-        ) as dh:
-            for i in range(s, len(index), k):
+            shx, dbf = sidecar(".shx"), sidecar(".dbf")
+            index = S.parse_shx(shx.read()) if shx else S.shp_index(shp)
+            if dbf:
+                head = dbf.read(32)
+                (hdr_size,) = struct.unpack("<H", head[8:10])
+                fields, _n, hdr_size, rec_size = S.parse_dbf_header(
+                    head + dbf.read(max(0, hdr_size - 32))
+                )
+            if self.with_wkt:
+                from pydriosm_spark.functions.transforms import shape_to_wkt
+            for i in range(partition.stripe, len(index), partition.n_stripes):
                 off, ln = index[i]
-                fh.seek(off)
-                st, pts, parts = S.parse_shp_record(fh.read(ln))
+                shp.seek(off)
+                st, pts, parts = S.parse_shp_record(shp.read(ln))
                 rec = {}
-                if dbf is not None:
-                    fields, hdr_size, rec_size = dbf
-                    dh.seek(hdr_size + i * rec_size)
-                    raw = dh.read(rec_size)
+                if dbf:
+                    dbf.seek(hdr_size + i * rec_size)
+                    raw = dbf.read(rec_size)
                     if len(raw) == rec_size:
-                        rec = S.parse_dbf_record(raw, fields) or {}
-                yield row(i, st, pts, parts, rec)
+                        rec = S.parse_dbf_record(raw, fields)
+                        if rec is None:  # flagged deleted: no feature
+                            continue
+                row = (
+                    layer, i, st,
+                    [[float(x), float(y)] for x, y in pts],
+                    list(parts),
+                    json.dumps(rec, default=str),
+                    f,
+                )
+                if self.with_wkt:
+                    row += (shape_to_wkt(st, pts, parts or None),)
+                yield row
 
 
 @dataclass

@@ -55,14 +55,16 @@ def _dbf_field_spec(name: str, values: list, decimal_precision: int) -> tuple:
     """(name, type, length, decimals) from python values — the
     reference's dtype map (parser.py:631-639)."""
     non_null = [v for v in values if v is not None]
-    if non_null and all(isinstance(v, bool) for v in non_null):
+    if not non_null:  # a blank N cell reads back as None; a blank C one as ""
+        return name, "N", 1, 0
+    if all(isinstance(v, bool) for v in non_null):
         return name, "L", 1, 0
-    if non_null and all(isinstance(v, (int, np.integer)) and not isinstance(v, bool) for v in non_null):
+    if all(isinstance(v, (int, np.integer)) and not isinstance(v, bool) for v in non_null):
         ln = max(max((len(str(v)) for v in non_null), default=1), 1)
         return name, "N", min(max(ln, 1), 18), 0
-    if non_null and all(isinstance(v, (float, np.floating, int, np.integer)) for v in non_null):
+    if all(isinstance(v, (float, np.floating, int, np.integer)) for v in non_null):
         return name, "F", 19, decimal_precision
-    ln = max(max((len(str(v).encode("latin-1", "replace")) for v in non_null), default=1), 1)
+    ln = max(len(str(v).encode("latin-1", "replace")) for v in non_null)
     return name, "C", min(max(ln, 1), 254), 0
 
 

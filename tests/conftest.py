@@ -25,3 +25,12 @@ def pbf_lake(tmp_path_factory):
     from tests.pbf_lake import write_lake
 
     return write_lake(tmp_path_factory.mktemp("pbf_lake"))
+
+
+@pytest.fixture(scope="session")
+def shp_lake(tmp_path_factory):
+    """Directory holding the generated shapefile lake of
+    ``tests/shp_lake.py`` (``plain/`` and the same files as a zip)."""
+    from tests.shp_lake import write_lake
+
+    return write_lake(tmp_path_factory.mktemp("shp_lake"))

@@ -46,7 +46,7 @@ def test_multi_file_index_and_datasource_read(registered, pbf_lake):
     spark = registered
     from pydriosm_spark.sources import pbf
 
-    files = pbf.list_pbf_files(pbf_lake)
+    files = pbf.list_files(pbf_lake, ".pbf")
     assert [os.path.basename(f) for f in files] == ["a.osm.pbf", "b.osm.pbf"]
     for f in files:
         assert sum(ln for _s, ln, _bt in pbf.index_blobs(f)) == os.path.getsize(f)

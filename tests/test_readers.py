@@ -1,17 +1,10 @@
 """Reader operators: csv.xz / geojson.xz round-trips on generated
-fixtures, and the from-scratch SHP/DBF parser against the reference's
-real Rutland shapefile corpus (read-only parity anchor —
-/root/reference/tests/data/rutland/rutland-latest-free.shp.zip)."""
+fixtures, and the Geofabrik member-name rule of the shapefile reader."""
 
 import json
 import lzma
-import os
-
-import pytest
 
 from pydriosm_spark.sources import readers
-
-RUTLAND_ZIP = "/root/reference/tests/data/rutland/rutland-latest-free.shp.zip"
 
 
 def test_read_csv_xz(spark, tmp_path):
@@ -49,42 +42,8 @@ def test_read_geojson_xz(spark, tmp_path):
 
 
 def test_layer_name_regex():
-    assert readers.layer_name_of_member("gis_osm_railways_free_1.shp") == "railways"
-    assert readers.layer_name_of_member("gis_osm_water_a_free_1.shp") == "water"
-    assert readers.layer_name_of_member("README.txt") is None
+    from pydriosm_spark.sources.shp_datasource import layer_name_of_member
 
-
-@pytest.mark.skipif(not os.path.exists(RUTLAND_ZIP), reason="reference fixture absent")
-def test_read_shp_zip_rutland(spark):
-    df = readers.read_shp_zip(spark, RUTLAND_ZIP, layer_names=["railways", "places"])
-    pdf = df.toPandas()
-    layers = set(pdf["layer"])
-    assert layers == {"railways", "places"}
-    rail = pdf[pdf["layer"] == "railways"]
-    assert len(rail) > 0
-    # railways are polylines (shape type 3); every feature has coordinates
-    assert set(rail["shape_type"]) == {3}
-    assert all(len(c) >= 2 for c in rail["coordinates"])
-    # DBF fields: reference fixture schema has osm_id/code/fclass/name (+ extras)
-    f = json.loads(rail.iloc[0]["fields"])
-    for k in ("osm_id", "code", "fclass", "name"):
-        assert k in f
-    assert isinstance(f["code"], int)
-    # coordinates are WGS84 lon/lat inside the Rutland bbox
-    lon, lat = rail.iloc[0]["coordinates"][0]
-    assert -1.0 < lon < 0.0 and 52.3 < lat < 53.0
-
-
-@pytest.mark.skipif(not os.path.exists(RUTLAND_ZIP), reason="reference fixture absent")
-def test_read_shp_zip_all_layers(spark):
-    df = readers.read_shp_zip(spark, RUTLAND_ZIP)
-    counts = {r["layer"]: r["n"] for r in df.groupBy("layer").count().withColumnRenamed("count", "n").collect()}
-    # the Geofabrik contract defines 13 layer names (parser.py:105-119);
-    # the Rutland fixture ships 12 of them (no 'points' extract), with
-    # point+area files sharing a layer name
-    documented = {
-        "buildings", "landuse", "natural", "places", "pofw", "points", "pois",
-        "railways", "roads", "traffic", "transport", "water", "waterways",
-    }
-    assert set(counts) <= documented and len(counts) >= 12, counts
-    assert sum(counts.values()) > 10000
+    assert layer_name_of_member("gis_osm_railways_free_1.shp") == "railways"
+    assert layer_name_of_member("gis_osm_water_a_free_1.shp") == "water"
+    assert layer_name_of_member("README.txt") is None

@@ -120,7 +120,7 @@ def test_file_listings_run_in_at_most_default_parallelism_tasks(spark, pbf_lake,
         shutil.copy(os.path.join(pbf_lake, "ab"[i % 2] + ".osm.pbf"), lake / f"f{i}.osm.pbf")
     got = pbf.pbf_validate(spark, str(lake))
     assert got.rdd.getNumPartitions() <= cores
-    want = {(p, *pbf.validate_pbf_file(p)) for p in pbf.list_pbf_files(str(lake))}
+    want = {(p, *pbf.validate_pbf_file(p)) for p in pbf.list_files(str(lake), ".pbf")}
     assert {tuple(r) for r in got.collect()} == want and len(want) == 10
 
     ck = PartitionedCheckpoint(str(tmp_path / "ck"), "part")
