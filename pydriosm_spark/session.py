@@ -17,11 +17,26 @@ offset tables, catalogue listings) enter Spark through
 list plans ``Scan ExistingRDD``, which re-serializes the rows through a
 Python worker task per core on every execution, while an Arrow table
 plans a JVM-side ``LocalTableScan`` with no Python stage.
+
+Tungsten pages (``spark.buffer.pageSize``) are sized from the driver heap,
+a quarter of the G1 region the JVM picks for it.  Spark's own default,
+nextPow2(execution pool / cores / 16) clamped to 1-64 MB, is 32-64 MB on
+an 8 GB heap whose regions are 4 MB, so the first page of every hash
+aggregate, sort and hash build in every task would be a humongous object: a
+run of whole regions, zeroed on allocation, each able to start a
+concurrent mark cycle.  A quarter-region page stays under the humongous
+threshold (half a region), and ``TaskMemoryManager``'s ceiling of 8,192
+pages per task is 8192 x page, no less than the heap up to 64 GB.
+Sessions the ``examples/*_job.py`` jobs build with ``SparkSession.builder``
+keep Spark's default page size; submit those with
+``--conf spark.buffer.pageSize=<page_size(executor memory)>`` to size
+their executors' pages the same way.
 """
 
 from __future__ import annotations
 
 import os
+import re
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import DataType
@@ -43,6 +58,13 @@ def get_spark(
     there, so that directory goes first on the workers' ``PYTHONPATH``.
     Loaded from a zip (``--py-files``) the session keeps PySpark's stock
     daemon, which the zip cannot replace before the daemon starts.
+
+    ``spark.buffer.pageSize`` is :func:`page_size` of the driver heap
+    (``$SPARK_DRIVER_MEM``, default ``8g``, or ``spark.driver.memory`` in
+    ``extra_conf``): 1 MiB on the default heap, where Spark's default
+    would be a 32-64 MB page that G1 allocates as a zeroed humongous
+    object for every aggregate, sort and hash build.  A
+    ``spark.buffer.pageSize`` in ``extra_conf`` wins.
 
     Parameters
     ----------
@@ -80,10 +102,11 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(10 * 1024 * 1024))
         # Timestamps: keep parquet round-trip stable across engines.
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
     )
     conf = dict(extra_conf or {})
+    heap = conf.setdefault("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+    conf.setdefault("spark.buffer.pageSize", str(page_size(heap)))
     conf.update(_worker_daemon_conf(conf.get("spark.executorEnv.PYTHONPATH")))
     for k, v in conf.items():
         b = b.config(k, v)
@@ -125,6 +148,22 @@ def get_spark(
     _register("osmpbf DataSource", _pbf_ds)
     _register("osmshp DataSource", _shp_ds)
     return spark
+
+
+_UNIT_SHIFT = {"b": 0, "k": 10, "m": 20, "g": 30, "t": 40, "p": 50}
+
+
+def page_size(heap: str) -> int:
+    """Tungsten page bytes for a JVM heap of ``heap`` (a
+    ``spark.driver.memory`` string: ``"8g"``, ``"512m"``, ``"4096"`` in
+    MiB): a quarter of the G1 region the JVM chooses for that heap, which
+    is heap / 2048 clamped to 1-32 MiB and rounded up to a power of two."""
+    m = re.fullmatch(r"(\d+)([bkmgtp]?)b?", heap.strip().lower())
+    if m is None:
+        raise ValueError(f"not a JVM memory size: {heap!r}")
+    heap_bytes = int(m.group(1)) << _UNIT_SHIFT[m.group(2) or "m"]
+    region = min(32 << 20, max(1 << 20, heap_bytes // 2048))
+    return (1 << (region - 1).bit_length()) // 4
 
 
 def _worker_daemon_conf(pythonpath: str | None) -> dict:

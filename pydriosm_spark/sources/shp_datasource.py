@@ -202,10 +202,11 @@ class OsmShpWriter(DataSourceWriter):
     """``df.write.format("osmshp").save(dir)`` — the shapefile SINK as a
     DataSource (reference K1's one-call write, parser.py:631-639 dtype
     surface via `shp_writer`): each task writes
-    ``part-<pid>-<layer>.shp/.shx/.dbf/.prj/.cpg`` per layer it sees, the
-    driver commits a ``_manifest.json`` (files + row counts, the lineage
-    sidecar) and ``_SUCCESS`` only after every task reported — a
-    half-written directory has no marker and readers can tell."""
+    ``part-<pid>/<layer>.shp/.shx/.dbf/.prj/.cpg`` per layer it sees, so
+    the directory reads back with each row's layer as written; the driver
+    commits a ``_manifest.json`` (files + row counts, the lineage sidecar)
+    and ``_SUCCESS`` only after every task reported — a half-written
+    directory has no marker and readers can tell."""
 
     def __init__(self, options, overwrite: bool):
         self.path = options.get("path")
@@ -243,10 +244,12 @@ class OsmShpWriter(DataSourceWriter):
             recs.append(json.loads(rec) if isinstance(rec, str) else (rec or {}))
         files = []
         total = 0
+        part = f"part-{pid:05d}"
+        if by_layer:
+            os.makedirs(os.path.join(self.path, part), exist_ok=True)
         for layer, (shapes, recs) in by_layer.items():
-            base = os.path.join(self.path, f"part-{pid:05d}-{layer}")
-            write_shapefile(base, shapes, recs)
-            files.append(os.path.basename(base) + ".shp")
+            write_shapefile(os.path.join(self.path, part, layer), shapes, recs)
+            files.append(os.path.join(part, layer + ".shp"))
             total += len(shapes)
         return _ShpCommit(files=tuple(files), rows=total)
 
@@ -270,6 +273,10 @@ class OsmShpWriter(DataSourceWriter):
                         os.remove(base + ext)
                     except OSError:
                         pass
+                try:
+                    os.rmdir(os.path.dirname(base))
+                except OSError:  # the task's other layers are still there
+                    pass
 
 
 class OsmShpDataSource(DataSource):

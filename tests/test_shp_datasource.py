@@ -99,7 +99,7 @@ def test_osmshp_write_round_trip(registered, shp_dir, tmp_path):
     def key(df):
         rows = sorted(
             (
-                r["layer"].split("-")[-1] if "-" in r["layer"] else r["layer"],
+                r["layer"],
                 r["shape_type"],
                 tuple(tuple(p) for p in r["coordinates"]),
                 tuple(r["parts"]),
