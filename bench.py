@@ -117,6 +117,8 @@ def run_suite(spark, sf_dir: str):
     prepare_sec = round(time.time() - t0, 3)
 
     timed("extract", lambda: extract.extract_mentions(web).count())
+    # assign_tiles ends in its REBALANCE exchange on tile_parent, so this
+    # leaf times that shuffle as well as the cell arithmetic
     timed(
         "tile_assign",
         lambda: tiling.assign_tiles(

@@ -1,8 +1,11 @@
 """Tile assignment + rasterize / vectorize operators.
 
-* ``assign_tiles`` — point -> quadcell tile id at a resolution, plus the
+* ``tile_columns`` — point -> quadcell tile id at a resolution, plus the
   compact-cover parent: pure native column arithmetic (cells/quadcell.py
-  expression builders), JVM-side, no UDF, no shuffle.
+  expression builders), JVM-side, no UDF, no shuffle.  ``assign_tiles``
+  is the same projection followed by one REBALANCE exchange on the tile
+  key, so the rows leave tile-clustered for a tile-partitioned sink (see
+  its docstring).
 
 * ``rasterize`` — aggregate points onto an integer analysis raster: cells
   of ``cell_size`` (1e-5-degree units) over the fixture bbox; one
@@ -15,7 +18,10 @@
   shapefile writer fixed 5-decimal precision is the ancestor of this rule
   (/root/reference/pydriosm/reader/parser.py:659-814, decimal_precision=5).
 
-At 100 TB: rasterize is a single shuffle on the (bounded-cardinality)
+At 100 TB: ``assign_tiles``' rebalance moves each narrow point row once,
+and AQE splits a hot tile's partition into advisory-size pieces (64 MB by
+default, at map-output granularity), so skewed tiles do not land on one
+task.  Rasterize is a single shuffle on the (bounded-cardinality)
 cell key; hot cells are a skew concern only for very coarse rasters —
 partial aggregation bounds the shuffle volume by |cells|, not |points|.
 """
@@ -29,14 +35,38 @@ from pydriosm_spark.cells import quadcell
 from pydriosm_spark.sources import synth
 
 
-def assign_tiles(points: DataFrame, res: int, parent_res: int | None = None,
+def tile_columns(points: DataFrame, res: int, parent_res: int | None = None,
                  lon: str = "lon", lat: str = "lat") -> DataFrame:
+    """Add ``tile`` (the cell at ``res``) and, with ``parent_res``,
+    ``tile_parent``: a projection, the rows stay where they are."""
     out = points.withColumn("tile", F.expr(quadcell.cell_expr(lon, lat, res)))
     if parent_res is not None:
         out = out.withColumn(
             "tile_parent", F.expr(quadcell.parent_expr("tile", parent_res, res))
         )
     return out
+
+
+def assign_tiles(points: DataFrame, res: int, parent_res: int | None = None,
+                 lon: str = "lon", lat: str = "lat") -> DataFrame:
+    """:func:`tile_columns`, with the rows rebalanced by ``tile_parent``,
+    or by ``tile`` without a parent.
+
+    The layout is for a tile-partitioned sink.  In scan order every task
+    holds every tile, so a ``partitionBy(tile_parent)`` write creates up
+    to tasks x tiles files, each with a fixed cost (on a ``file:`` path a
+    ``.crc`` twin and a forked ``chmod``); clustered, it writes about one
+    file per tile.  The zone join (broadcast cover), PIP refine and
+    broadcast kNN after it are narrow, so the layout reaches the sink
+    (tests/test_plans.py locks that chain).  A caller whose sink is not
+    partitioned by tile pays the exchange for nothing and takes
+    :func:`tile_columns` instead, as the streaming pipeline does.
+
+    REBALANCE, unlike ``repartition``, lets AQE pick the partition count
+    from the shuffle size and split a hot tile into advisory-size
+    partitions instead of sending it to one task."""
+    key = "tile" if parent_res is None else "tile_parent"
+    return tile_columns(points, res, parent_res, lon, lat).hint("rebalance", key)
 
 
 def cell_coord(col: str, cell_size: int):

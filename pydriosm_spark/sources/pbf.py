@@ -158,8 +158,16 @@ def _round7(vals: np.ndarray) -> np.ndarray:
     exact-half decimal boundaries (the error of y vs the exact d*1e7 is
     < 1 ulp ~ 2.4e-7 for |d| <= 90), so np.rint + correctly-rounded
     division equals Python's correctly-rounded decimal result away from
-    the guard band, and the (in practice empty: granularity-100 coords
-    scale to near-integers) guard band falls back to Python round."""
+    the guard band, and the guard band falls back to Python round, one
+    call per value.
+
+    A coordinate is in the band when its nanodegree value
+    (offset + granularity * raw) ends in 50.  With offsets that are
+    multiples of 100 (zero in practice) the band stays empty whenever the
+    granularity is a multiple of 4, the standard 100 included: the value
+    mod 100 is then a multiple of 4.  Any other granularity (1, 10, 50,
+    ...) can fill it, which brings DenseNodes back to the scalar loop's
+    speed, still bit-identical."""
     y = vals * 1e7
     out = np.rint(y) / 1e7
     fr = y - np.floor(y)

@@ -21,7 +21,13 @@ from pydriosm_spark.operators import tiling
 
 def extract_and_tile(webpages: DataFrame) -> DataFrame:
     """Works identically on batch and streaming frames (stateless —
-    pure per-row transforms + explode)."""
+    pure per-row transforms + explode, no exchange).
+
+    It takes ``tiling.tile_columns``, not ``assign_tiles``: the sink here
+    is not partitioned by tile, so ``assign_tiles``' rebalance would buy
+    no tile layout and add a shuffle to every micro-batch (about +20%
+    CPU per drain on one-file micro-batches; SCALE.md, "Designs tried and
+    kept out")."""
     m = extract.extract_mentions(webpages)
-    t = tiling.assign_tiles(m, Q.TILE_RES, Q.TILE_PARENT_RES)
+    t = tiling.tile_columns(m, Q.TILE_RES, Q.TILE_PARENT_RES)
     return t.select("doc_id", "mention_idx", "lat", "lon", "tile", "tile_parent")

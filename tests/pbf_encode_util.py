@@ -61,10 +61,13 @@ def header_blob() -> bytes:
 class PbfBuilder:
     """Collects nodes/ways/relations, emits one OSMData block file.
     ``dense=True`` packs the nodes as one DenseNodes message (the form
-    real extracts use) instead of one Node message each."""
+    real extracts use) instead of one Node message each; ``granularity``
+    is the block's nanodegrees per raw coordinate unit (OSM's default 100
+    is 1e-7 degrees)."""
 
-    def __init__(self, dense: bool = False):
+    def __init__(self, dense: bool = False, granularity: int = 100):
         self.dense = dense
+        self.gran = granularity
         self._st = [""]
         self._idx = {"": 0}
         self.nodes = []  # (id, lat, lon, {tags})
@@ -89,13 +92,16 @@ class PbfBuilder:
         self.rels.append((rid, list(members), tags or {}))
         return self
 
+    def _raw(self, deg: float) -> int:
+        return round(deg * (1e9 / self.gran))
+
     def _node_msg(self, nid, lat, lon, tags) -> bytes:
         keys = [self._s(k) for k in tags]
         vals = [self._s(v) for v in tags.values()]
         m = _fv(1, _zz(nid))
         if keys:
             m += _f(2, _packed(keys)) + _f(3, _packed(vals))
-        m += _fv(8, _zz(round(lat * 1e7))) + _fv(9, _zz(round(lon * 1e7)))
+        m += _fv(8, _zz(self._raw(lat))) + _fv(9, _zz(self._raw(lon)))
         return m
 
     def _way_msg(self, wid, refs, tags) -> bytes:
@@ -121,7 +127,7 @@ class PbfBuilder:
         return m
 
     def _dense_msg(self) -> bytes:
-        raw = [(nid, round(lat * 1e7), round(lon * 1e7)) for nid, lat, lon, _t in self.nodes]
+        raw = [(nid, self._raw(lat), self._raw(lon)) for nid, lat, lon, _t in self.nodes]
         kv = []
         for _n, _la, _lo, tags in self.nodes:
             for k, v in tags.items():
@@ -145,5 +151,5 @@ class PbfBuilder:
         for r in self.rels:
             group += _f(4, self._rel_msg(*r))
         st = b"".join(_f(1, s.encode()) for s in self._st)
-        block = _f(1, st) + _f(2, group) + _fv(17, 100) + _fv(19, 0) + _fv(20, 0)
+        block = _f(1, st) + _f(2, group) + _fv(17, self.gran) + _fv(19, 0) + _fv(20, 0)
         return _blob("OSMData", block)

@@ -2,10 +2,18 @@
 that the engine stays Spark-first — broadcast where intended, no stray
 shuffles or extra Python stages, pushdown reaching the scan."""
 
+import glob
+import re
+
+from pyspark.sql import functions as F
+
+from pydriosm_spark import queries as Q
 from pydriosm_spark.functions import extract
+from pydriosm_spark.operators import knn, tiling
 from pydriosm_spark.operators.spatial_join import spatial_join_points_polygons
 from pydriosm_spark.queries_rel import q_pricing_summary
 from pydriosm_spark.sources import synth
+from pydriosm_spark.streaming.pipeline import extract_and_tile
 from tests.conftest import SF_SMOKE
 
 
@@ -45,6 +53,69 @@ def test_flat_cover_has_no_probe_explode(spark):
     p = _plan(j)
     # one Generate from mention extraction (posexplode of geo tokens) only
     assert p.count("Generate") == 1, p
+
+
+def _shuffles(p: str) -> int:
+    return p.count("Exchange") - p.count("BroadcastExchange")
+
+
+def test_assign_tiles_is_one_rebalance_on_the_tile_key(spark):
+    """assign_tiles' only exchange is the REBALANCE on its tile key."""
+    m = extract.extract_mentions(synth.webpages(spark, SF_SMOKE))
+    for parent_res, key in ((Q.TILE_PARENT_RES, "tile_parent"), (None, "tile")):
+        p = _plan(tiling.assign_tiles(m, Q.TILE_RES, parent_res))
+        assert _shuffles(p) == 1 and "BroadcastExchange" not in p, p
+        assert re.search(rf"Exchange hashpartitioning\({key}#\d+L?, \d+\), "
+                         r"REBALANCE_PARTITIONS_BY_COL", p), p
+
+
+def _tile_spans(df) -> tuple:
+    """(most partitions one tile_parent spans, distinct tile_parents)."""
+    return tuple(df.withColumn("pid", F.spark_partition_id())
+                 .groupBy("tile_parent").agg(F.countDistinct("pid").alias("n_parts"))
+                 .agg(F.max("n_parts"), F.count(F.lit(1))).first())
+
+
+def test_assign_tiles_output_is_tile_clustered(spark, tmp_path):
+    """At run time no tile_parent value spans two partitions, so a
+    tile-partitioned write emits one file per tile, not one per task x
+    tile.  The mentions are spread over 4 tasks first, as a scan of several
+    splits leaves them."""
+    m = extract.extract_mentions(synth.webpages(spark, SF_SMOKE)).repartition(4)
+    t = tiling.assign_tiles(m, Q.TILE_RES, Q.TILE_PARENT_RES)
+    widest, n_tiles = _tile_spans(t)
+    assert n_tiles > 1 and widest == 1, (widest, n_tiles)
+    out = str(tmp_path / "tiles")
+    t.write.partitionBy("tile_parent").parquet(out)
+    assert len(glob.glob(f"{out}/tile_parent=*")) == n_tiles
+    assert len(glob.glob(f"{out}/tile_parent=*/*.parquet")) == n_tiles
+
+
+def _geo_chain(spark, mentions):
+    """The chain in front of the tile-partitioned geo sink: tiles, the
+    zone join, and the nearest of <= 4,096 places (knn_auto's broadcast
+    brute force)."""
+    t = tiling.assign_tiles(mentions, Q.TILE_RES, Q.TILE_PARENT_RES)
+    z = spatial_join_points_polygons(spark, t, synth.zone_features(), res=Q.JOIN_RES)
+    return knn.knn_auto(spark, z, synth.places_df(spark), k=1,
+                        point_keys=["doc_id", "mention_idx", "tile_parent", "feature_id"])
+
+
+def test_geo_chain_keeps_the_tile_layout(spark):
+    """assign_tiles' rebalance is the chain's only shuffle and the zone
+    join adds nothing but the cover's broadcast, so the tile clustering
+    reaches the sink.  A point-keyed exchange after it (the knn_cell
+    branch's windows, an unbroadcast brute force) would pay for the
+    rebalance and throw its layout away; the streaming pipeline, whose
+    sink is not partitioned by tile, takes no exchange at all."""
+    web = synth.webpages(spark, SF_SMOKE)
+    m = extract.extract_mentions(web)
+    p = _plan(_geo_chain(spark, m))
+    assert _shuffles(p) == 1 and p.count("REBALANCE_PARTITIONS_BY_COL") == 1, p
+    assert p.count("BroadcastExchange") == 1 and "BroadcastHashJoin" in p, p
+    widest, n_tiles = _tile_spans(_geo_chain(spark, m.repartition(4)))
+    assert n_tiles > 1 and widest == 1, (widest, n_tiles)
+    assert "Exchange" not in _plan(extract_and_tile(web))
 
 
 def test_shingle_explode_plan_has_no_lambda(spark):

@@ -89,6 +89,34 @@ def test_round7_matches_python_round():
     assert (got_h == want_h).all()
 
 
+def test_round7_guard_band_at_granularity_50_matches_python_round():
+    """Granularity 50 puts every odd raw coordinate on an exact 1e-7 half
+    (nanodegrees ending in 50), so each DenseNodes coordinate takes
+    ``_round7``'s guard band; the decode must still equal per-value
+    ``round(x, 7)``, the Node path's scalar rounding."""
+    from tests.pbf_encode_util import PbfBuilder, header_blob
+
+    gran = 50
+    raws = [(2 * i + 1, -(4 * i + 3)) for i in range(64)]
+    raws += [(1_638_479_001 + 2 * i, -5_000_001 - 2 * i) for i in range(64)]
+    files = {}
+    for dense in (True, False):
+        b = PbfBuilder(dense=dense, granularity=gran)
+        for nid, (la, lo) in enumerate(raws, 1):
+            b.node(nid, la * gran * 1e-9, lo * gran * 1e-9, {"k": "v"})
+        files[dense] = pbf.parse_pbf(header_blob() + b.build(), want="n")[0]
+    d = np.array([la * gran for la, _ in raws] + [lo * gran for _, lo in raws],
+                 dtype=np.float64) * 1e-9
+    y = d * 1e7
+    assert (np.abs(y - np.floor(y) - 0.5) < 1e-4).all()  # the band is full
+    want = [round(float(x), 7) for x in d]
+    n = len(raws)
+    for nodes in files.values():
+        assert [r[0] for r in nodes] == list(range(1, n + 1))
+        got = [r[1] for r in nodes] + [r[2] for r in nodes]
+        assert [x.hex() for x in got] == [x.hex() for x in want]
+
+
 def test_parse_pbf_want_selector_is_consistent():
     from tests.pbf_lake import lake_file
 
