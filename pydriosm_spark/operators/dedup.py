@@ -1,23 +1,25 @@
 """Deduplication operators for the training-data pipeline:
 
-* ``dedup_exact``      — content-hash groupBy; canonical keeper = min id.
-* ``minhash_lsh_pairs``— shingle -> banded MinHash -> bucket self-join ->
-  exact n-gram Jaccard verification.  The classic near-dup pipeline
-  (Broder MinHash + LSH banding) as pure DataFrame ops.
-* ``simhash``          — 60-bit majority-vote SimHash over token hashes,
-  computed with native higher-order functions (zero shuffle, zero
-  Python): per-bit counts via ``filter()`` over the token-hash array.
+* ``dedup_exact``      — content-hash window; canonical keeper = min id.
+* ``minhash_lsh_pairs``— shingle -> banded MinHash -> per-bucket pair
+  expansion -> exact n-gram Jaccard verification.  The classic near-dup
+  pipeline (Broder MinHash + LSH banding) as pure DataFrame ops.
+* ``simhash_pairs``    — 60-bit majority-vote SimHash over token hashes
+  (token explode + one hash aggregate), searched by block-rotation
+  composite keys.
+* ``connected_components`` — the near-dup pair graph's clusters.
 
 Determinism: all hashes are md5-derived (identical across engines and
-partitionings); MinHash permutations are ``md5(band || ':' || shingle)``
-compared lexicographically; Jaccard is integer-scaled.
+partitionings); a shingle's fingerprint is its md5's first 15 hex
+digits as a 60-bit int, and each MinHash band permutes it with an
+integer mix (``_band_hash_sql``); Jaccard is integer-scaled.
 
 Scale notes: dedup_exact shuffles once on the hash (bounded by distinct
-content); minhash explodes |docs| x BANDS rows — the band groupBy is the
-shuffle; bucket skew (a viral shingle set) is bounded by capping bucket
+content); minhash aggregates each document once (its band minima and its
+fingerprint set), then moves |docs| x BANDS ids through the bucket
+groupBy; bucket skew (a viral shingle set) is bounded by capping bucket
 size (``max_bucket``), the standard guard in web-scale dedup; the
-verify join only touches candidate pairs.  SimHash is embarrassingly
-parallel; its Hamming-ball search would bucket on rotated prefixes.
+verify joins each candidate pair to the two documents' fingerprint sets.
 """
 
 from __future__ import annotations
@@ -33,20 +35,20 @@ SIMHASH_BITS = 60
 def _ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
     """Repartition CPU-bound kernels off a too-narrow source (e.g. one
     small parquet file = one task) without touching the RDD lineage:
-    ``inputFiles()`` reads the plan's file listing (no physical-plan
-    conversion the way ``df.rdd.getNumPartitions()`` forces — VERDICT r2
-    residual).  File count underestimates split counts for huge files,
-    so this errs toward one extra (cheap) shuffle on small inputs and is
-    a no-op on many-file tables at scale.
+    ``inputFiles()`` reads the plan's file listing, with no conversion to
+    a physical plan the way ``df.rdd.getNumPartitions()`` forces.  File
+    count underestimates split counts for huge files, so this errs toward
+    one extra (cheap) shuffle on small inputs and is a no-op on many-file
+    tables at scale.
 
-    ``key`` (r6, guide §2.4): when the downstream aggregation groups by
-    ``key``, repartitioning BY that key lets the groupBy reuse this very
-    exchange — EnsureRequirements sees the clustered distribution is
-    already satisfied and the partial+final aggregate pair collapses
-    into the map stage (measured: the sf0.1 signature pass halved).
-    Hash-of-key placement co-locates each document's exploded rows,
-    which is exactly what the aggregation needs; doc sizes bound the
-    per-task work."""
+    ``key``: when the downstream aggregation groups by ``key``,
+    repartitioning BY that key lets the groupBy reuse this very exchange
+    — EnsureRequirements sees the clustered distribution is already
+    satisfied and the partial+final aggregate pair collapses into the
+    map stage (measured: the sf0.1 signature pass halved).  Hash-of-key
+    placement co-locates each document's exploded rows, which is exactly
+    what the aggregation needs; doc sizes bound the per-task work
+    (SCALE.md, "Keyed spread in the text operators")."""
     par = df.sparkSession.sparkContext.defaultParallelism
     try:
         nparts = len(df.inputFiles())
@@ -67,15 +69,14 @@ def shingles_exploded(df: DataFrame, key: str = "doc_id", text: str = "text") ->
     ``transform(sequence(...))`` form was INTERPRETED and alone cost 4s
     of the 10s sf0.1 minhash run.
 
-    Duplicate shingles don't affect MIN aggregation (signatures); the
-    Jaccard verify applies ``.distinct()`` after narrowing to candidate
-    docs.
+    Duplicate shingles affect neither the MIN aggregation (signatures)
+    nor the verify, which compares each document's ``collect_set``.
 
     Small inputs (e.g. a single parquet file = one partition) are
     repartitioned to the session's parallelism first: shingling + md5
     is CPU-bound and must not serialize onto one task.  The repartition
     is keyed so a downstream per-``key`` aggregation reuses the same
-    exchange (guide §2.4)."""
+    exchange."""
     df = _ensure_parallelism(df, key)
     toks = f"split(trim({text}), '\\\\s+')"
     m = f"(size({toks}) - {SHINGLE_K - 1})"
@@ -120,32 +121,6 @@ def _band_hash_sql(h: str, band: int) -> str:
     return f"((({h}) % {MINHASH_P}) * {a} + {c}) % {MINHASH_P}"
 
 
-def minhash_signatures(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
-    """(key, band, minhash) — one row per (doc, band).
-
-    One md5 per distinct shingle, then each band's permutation is a cheap
-    integer mix; per-band minima via ``array_min(transform(...))`` inside
-    whole-stage codegen — the signature computation never explodes or
-    shuffles; only the tiny (|docs| x BANDS) signature table moves.
-    """
-    # exploded shingles (codegen) -> 16 min-aggregates in ONE hash agg
-    # (partial aggregation map-side; only |docs| x 16 values shuffle).
-    # NOT a higher-order-function fold: Spark evaluates HOF lambdas
-    # interpreted per element (~10x slower than this codegen path).
-    # The base md5 hash is PROJECTED ONCE per shingle (r5, same recipe
-    # as tokens_with_hash): inlining it into the 16 band aggregates left
-    # 16 md5 evaluations per row on the table (~20% of signature time).
-    sh = shingles_exploded(df, key, text).select(
-        key, F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").alias("__h")
-    )
-    aggs = [
-        F.min(F.expr(_band_hash_sql("__h", b))).alias(f"__mh{b}") for b in range(BANDS)
-    ]
-    wide = sh.groupBy(key).agg(*aggs)
-    stack = ", ".join(f"{b}, __mh{b}" for b in range(BANDS))
-    return wide.select(key, F.expr(f"stack({BANDS}, {stack}) AS (band, minhash)"))
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
     key: str = "doc_id",
@@ -155,20 +130,47 @@ def minhash_lsh_pairs(
 ) -> DataFrame:
     """Candidate pairs via LSH banding + exact Jaccard verify.
 
-    Returns (id_a, id_b, inter, union, jaccard_e6) with id_a < id_b and
-    jaccard_e6 >= threshold.
-    """
-    # NULL minhash (null/empty-text docs) can never match in an equi-join;
-    # dropping it here preserves the old self-join-on-minhash semantics
-    # while the bucket groupBy below would otherwise co-group NULL keys.
-    sig = minhash_signatures(df, key, text).filter(F.col("minhash").isNotNull())
+    Returns (id_a, id_b, inter, union, jaccard_e6) with id_a < id_b,
+    inter > 0 and jaccard_e6 >= threshold.
 
-    # r6 (guide §2.4): each (band, minhash) bucket gathered in ONE hash
-    # aggregate; the viral-bucket cap is a free size() filter on the
-    # bucket array (was: a window count — an extra full sort of the
-    # signature table — followed by a bucket self-join).  Shuffle
-    # volume is identical (|docs| x BANDS ids move once), but the sort
-    # and both join exchanges are gone.
+    Each document is shingled and hashed once.  One aggregate per
+    document computes its ``BANDS`` band minima and its distinct
+    fingerprint set together; that per-document table is materialised
+    once (the call's one eager job) and feeds both the banding and the
+    verify.
+    """
+    # exploded shingles (codegen) -> 16 min-aggregates plus the
+    # fingerprint set in ONE aggregate on the keyed spread's exchange
+    # (collect_set keeps a repeated shingle once).  NOT a
+    # higher-order-function fold: Spark evaluates HOF lambdas interpreted
+    # per element (~10x slower than this codegen path).  The base md5
+    # hash is PROJECTED ONCE per shingle, as in tokens_with_hash:
+    # inlining it into the 16 band aggregates left 16 md5 evaluations per
+    # row on the table (~20% of signature time).
+    sh = shingles_exploded(df, key, text).select(
+        key, F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").alias("__h")
+    )
+    aggs = [
+        F.min(F.expr(_band_hash_sql("__h", b))).alias(f"__mh{b}") for b in range(BANDS)
+    ]
+    # Consumed twice (banding and both sides of the verify).  Without the
+    # checkpoint column pruning splits the aggregate and the corpus is
+    # shingled again for the verify; a lazy checkpoint makes the DAG
+    # scheduler log "Failed to update accumulator" errors.
+    # localCheckpoint persists memory-and-disk, so a large corpus spills
+    # rather than recomputes or OOMs.
+    docs = sh.groupBy(key).agg(*aggs, F.collect_set("__h").alias("fps")).localCheckpoint(
+        eager=True
+    )
+    # A document with null text explodes to no shingle and so has no row
+    # here; every row's band minima are non-null.
+    stack = ", ".join(f"{b}, __mh{b}" for b in range(BANDS))
+    sig = docs.select(key, F.expr(f"stack({BANDS}, {stack}) AS (band, minhash)"))
+
+    # Each (band, minhash) bucket is gathered in ONE hash aggregate; the
+    # viral-bucket cap is a free size() filter on the bucket array (a
+    # window count would add a full sort of the signature table, and a
+    # bucket self-join two more exchanges).
     buckets = (
         sig.groupBy("band", "minhash")
         .agg(F.sort_array(F.collect_list(key)).alias("ids"))
@@ -177,7 +179,7 @@ def minhash_lsh_pairs(
     # pairwise expansion as two codegen Generates (posexplode + explode
     # of the sorted tail slice) — no interpreted lambda, and ids sorted
     # means id_a < id_b by construction.  Explode factor per bucket is
-    # C(n, 2), n <= max_bucket — exactly the old self-join's output.
+    # C(n, 2), n <= max_bucket.
     pairs = (
         buckets.select("ids", F.posexplode("ids").alias("__i", "id_a"))
         .select(
@@ -191,59 +193,19 @@ def minhash_lsh_pairs(
             ).alias("id_b"),
         )
         .distinct()
-        # small; consumed twice (candidate-id filter + verify join) —
-        # materialize so the LSH chain runs once
-        .localCheckpoint(eager=True)
     )
 
-    # verify only touches docs that appear in a candidate pair: semi-join
-    # the DOCUMENTS down to that (small) id set BEFORE exploding (r5):
-    # Catalyst does not push joins below a Generate, so filtering after
-    # shingles_exploded would re-explode the ENTIRE corpus.  Narrowing df
-    # first means the verify explode touches candidate docs only —
-    # corpus-sized savings whenever candidates << corpus.
-    cand_ids = (
-        pairs.select(F.explode(F.array("id_a", "id_b")).alias(key)).distinct()
-    )
-    # No broadcast hint: cand_ids is DATA-DEPENDENT (every doc in a
-    # near-dup pair) — tiny on clean corpora, potentially billions on
-    # dup-heavy ones — so AQE picks broadcast vs shuffle from the
-    # runtime size instead of a wired-in assumption.
     # The verify runs over the 60-bit md5 shingle FINGERPRINT (the same
     # engine-identical hash the signatures use), not the raw string:
-    # 8-byte longs instead of ~30-byte string shuffles.  Jaccard is
-    # therefore over each doc's distinct fingerprint set — identical to
-    # the string-set Jaccard unless two distinct shingles collide in 60
-    # bits (~n^2/2^61; never at any tested scale), and the oracle
-    # mirrors the same fingerprint so both engines agree by construction
-    # either way.
-    # r6 (guide §2.3/§2.4): each candidate doc's distinct fingerprint
-    # SET is gathered in one hash aggregate (collect_set dedups in the
-    # partial agg, map-side), so the verify is a single pairs ⋈ fps ⋈
-    # fps join + array_intersect — replacing the r5 shape's separate
-    # distinct, sizes aggregate, and three-join intersect count (two
-    # fewer shuffles and one fewer materialization pass).  Set sizes are
-    # bounded by the doc's shingle count; only candidate docs pay.
-    # localCheckpoint spills memory-and-disk, so a dup-heavy corpus
-    # degrades to disk rather than recompute or OOM.
-    cand_fps = (
-        shingles_exploded(df.join(cand_ids, key, "left_semi"), key, text)
-        .select(
-            key,
-            F.expr("CAST(conv(substr(md5(s), 1, 15), 16, 10) AS BIGINT)").alias("f"),
-        )
-        .groupBy(key)
-        .agg(F.collect_set("f").alias("fps"))
-        # eager=False (r6): the first consumer materializes it and the
-        # persisted partitions serve the other side of the verify join —
-        # same single-execution guarantee without an extra driver-blocking
-        # job round-trip (measured ~0.3s at sf0.1).  Worst case under
-        # concurrent AQE broadcast builds is one duplicate pass over the
-        # CANDIDATE-bounded chain, never the corpus chain.
-        .localCheckpoint(eager=False)
-    )
-    fa = cand_fps.select(F.col(key).alias("id_a"), F.col("fps").alias("fa"))
-    fb = cand_fps.select(F.col(key).alias("id_b"), F.col("fps").alias("fb"))
+    # 8-byte longs instead of ~30-byte strings.  Jaccard is therefore
+    # over each doc's distinct fingerprint set — identical to the
+    # string-set Jaccard unless two distinct shingles collide in 60 bits
+    # (~n^2/2^61; never at any tested scale), and the oracle mirrors the
+    # same fingerprint so both engines agree by construction either way.
+    # No broadcast hint: the per-document table is corpus-sized, so AQE
+    # picks broadcast or shuffle from its runtime size.
+    fa = docs.select(F.col(key).alias("id_a"), F.col("fps").alias("fa"))
+    fb = docs.select(F.col(key).alias("id_b"), F.col("fps").alias("fb"))
     out = (
         pairs.join(fa, "id_a")
         .join(fb, "id_b")
@@ -254,9 +216,9 @@ def minhash_lsh_pairs(
             "union", F.expr("CAST(size(fa) + size(fb) AS BIGINT) - inter")
         )
         .withColumn("jaccard_e6", F.expr("CAST(inter * 1000000 DIV `union` AS BIGINT)"))
-        # inter > 0 preserves the r5 inner-join-on-fingerprint semantics:
-        # a candidate pair with an empty intersection never appears, even
-        # at jaccard_e6_min = 0
+        # a candidate pair with an empty intersection (linked only by a
+        # shared band minimum) never appears, even at jaccard_e6_min = 0,
+        # as in the oracle's inner join on fingerprint
         .filter((F.col("jaccard_e6") >= jaccard_e6_min) & (F.col("inter") > 0))
         .select("id_a", "id_b", "inter", "union", "jaccard_e6")
     )
@@ -408,7 +370,7 @@ def simhash_signature(
     hash agg — only |docs| x 61 longs shuffle.  Matches the HOF/oracle
     form bit-for-bit (duplicates kept: explode == full-array filter()).
     The parallelism repartition is keyed on ``key`` so the aggregate
-    collapses onto the same exchange (guide §2.4)."""
+    collapses onto the same exchange (``_ensure_parallelism``)."""
     df = _ensure_parallelism(df, key)
     aggs, bits = simhash_agg_exprs()
     wide = tokens_with_hash(df, key, text).groupBy(key).agg(*aggs)

@@ -4,12 +4,13 @@ shuffles or extra Python stages, pushdown reaching the scan."""
 
 import glob
 import re
+from contextlib import contextmanager
 
 from pyspark.sql import functions as F
 
 from pydriosm_spark import queries as Q
 from pydriosm_spark.functions import extract
-from pydriosm_spark.operators import knn, tiling
+from pydriosm_spark.operators import dedup, knn, tiling
 from pydriosm_spark.operators.spatial_join import spatial_join_points_polygons
 from pydriosm_spark.queries_rel import q_pricing_summary
 from pydriosm_spark.sources import synth
@@ -128,6 +129,80 @@ def test_shingle_explode_plan_has_no_lambda(spark):
     p = _plan(df)
     assert "lambdafunction" not in p and "transform(" not in p, p[:2000]
     assert "arrays_zip" in p
+
+
+def _sql_plan_nodes(spark, since: int) -> tuple[int, list[str]]:
+    """(last SQL execution id, node descriptions of every execution
+    after ``since``): each execution's final adaptive plan, read from the
+    status store, so an eager checkpoint's plan counts as well as the
+    plan that reads it."""
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    last, nodes = since, []
+    for i in range(execs.size()):
+        eid = execs.apply(i).executionId()
+        last = max(last, eid)
+        if eid > since:
+            graph = store.planGraph(eid).allNodes()
+            nodes += [graph.apply(j).desc() for j in range(graph.size())]
+    return last, nodes
+
+
+@contextmanager
+def _driver_log(spark):
+    """Yields a java StringWriter that receives every driver log event
+    while the block runs."""
+    jvm = spark._jvm
+    core = jvm.org.apache.logging.log4j.core
+    ctx = jvm.org.apache.logging.log4j.LogManager.getContext(False)
+    root = ctx.getConfiguration().getRootLogger()
+    out = jvm.java.io.StringWriter()
+    app = core.appender.WriterAppender.createAppender(
+        core.layout.PatternLayout.createDefaultLayout(), None, out, "test_plans", False, True)
+    app.start()
+    root.addAppender(app, None, None)
+    ctx.updateLoggers()
+    try:
+        yield out
+    finally:
+        root.removeAppender("test_plans")
+        ctx.updateLoggers()
+        app.stop()
+
+
+#: jobs of minhash_lsh_pairs plus a noop write of its output on the smoke
+#: corpus: the per-document checkpoint's exchange and aggregate, then the
+#: bucket and pair exchanges, the fingerprint table's broadcast and the
+#: write
+MINHASH_SMOKE_JOBS = 6
+
+
+def test_minhash_shingles_the_corpus_once(spark):
+    """minhash_lsh_pairs scans and shingles the documents once: one
+    aggregate per document gathers the band minima and the fingerprint
+    set, and its checkpoint feeds both the banding and the verify.  No
+    second scan, no semi-join of the corpus to the candidates, and no
+    lazy checkpoint's accumulator errors in the driver log."""
+    docs = spark.read.parquet(f"{SF_SMOKE}/documents.parquet")
+    sc, gid = spark.sparkContext, "test_plans-minhash"
+    start, _ = _sql_plan_nodes(spark, -1)
+    with _driver_log(spark) as log:
+        sc.setJobGroup(gid, gid)
+        try:
+            dedup.minhash_lsh_pairs(docs).write.format("noop").mode("overwrite").save()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        _, nodes = _sql_plan_nodes(spark, start)
+        log = log.toString()
+    scans = [d for d in nodes if d.startswith("FileScan") and "documents.parquet" in d]
+    shingles = [d for d in nodes if re.match(r"Generate .*split\(trim\(text#", d)]
+    assert len(scans) == 1 and len(shingles) == 1, (scans, shingles)
+    assert not any("LeftSemi" in d for d in nodes), nodes
+    jobs = sc.statusTracker().getJobIdsForGroup(gid)
+    assert 0 < len(jobs) <= MINHASH_SMOKE_JOBS, sorted(jobs)
+    assert "Failed to update accumulator" not in log, log
 
 
 def test_simhash_plan_is_one_hash_agg_no_hofs(spark):
