@@ -6,17 +6,17 @@ an ``array<float>`` embedding column), shipped like the other jobs:
     python package.py
     spark-submit --master local[8] \
         --py-files dist/pydriosm_spark.zip examples/ann_job.py \
-        /root/testdata/sf0.001 /tmp/ann_out [lsh|ivf|ivf-coarse|brute]
+        <sf_dir> <out_dir> [lsh|ivf|brute]
 
 Every variant self-sizes from count(*) (sized_lsh_planes /
-sized_ivf_params / sized_coarse_params), so the SAME job text runs at
-10^2 and 10^9 vectors; the method argument only picks the plan:
+sized_ivf_params) and reads the embedding width from the vectors, so
+the SAME job text runs at 10^2 and 10^9 vectors of any width; the
+method argument only picks the plan:
 
-* ``brute``      — exact broadcast-matmul top-k (gated at 2M index rows);
-* ``lsh``        — guided multi-probe hyperplane LSH + exact re-rank
-                   (``max_bucket="auto"`` viral-bucket cap);
-* ``ivf``        — two-stage budget IVF (distributed Lloyd quantizer);
-* ``ivf-coarse`` — IVF + the hierarchical stage-0 super-centroid router.
+* ``brute`` — exact broadcast-matmul top-k (gated at 2M index rows);
+* ``lsh``   — guided multi-probe hyperplane LSH + exact re-rank
+              (``max_bucket="auto"`` viral-bucket cap), the default;
+* ``ivf``   — two-stage budget IVF (distributed Lloyd quantizer).
 
 Writes (vec_id, rank, neighbor_id) and prints a one-line summary.
 """
@@ -36,14 +36,9 @@ def main(sf_dir: str, out_dir: str, method: str = "lsh") -> None:
     if method == "brute":
         topk = similarity.cosine_topk_bruteforce(spark, emb, k=k)
     elif method == "lsh":
-        # derive dim from the data — the same job text must run on any
-        # embedding width
-        dim = len(emb.select("embedding").head()[0])
-        topk = similarity.cosine_topk_lsh(spark, emb, dim=dim, k=k)
+        topk = similarity.cosine_topk_lsh(spark, emb, k=k)
     elif method == "ivf":
         topk = similarity.cosine_topk_ivf(spark, emb, k=k)
-    elif method == "ivf-coarse":
-        topk = similarity.cosine_topk_ivf(spark, emb, k=k, coarse=True)
     else:
         raise SystemExit(f"unknown method {method!r}")
 

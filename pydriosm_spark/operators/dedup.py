@@ -63,7 +63,8 @@ def _ensure_parallelism(df: DataFrame, key: str | None = None) -> DataFrame:
 
 def shingles_exploded(df: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
     """(key, s): one row per 3-word shingle OCCURRENCE (duplicates kept;
-    whole text as fallback when the doc has < K tokens) — entirely
+    a doc with < K tokens is one shingle, its tokens joined by one
+    space, as in the oracle) — entirely
     whole-stage-codegen: split -> arrays_zip of three shifted slices ->
     explode -> concat.  The previous per-doc HOF
     ``transform(sequence(...))`` form was INTERPRETED and alone cost 4s
@@ -86,7 +87,7 @@ def shingles_exploded(df: DataFrame, key: str = "doc_id", text: str = "text") ->
         + ")"
     )
     short = (
-        f"array(named_struct('0', trim({text}), "
+        f"array(named_struct('0', array_join({toks}, ' '), "
         "'1', CAST(NULL AS STRING), '2', CAST(NULL AS STRING)))"
     )
     arr = f"CASE WHEN size({toks}) < {SHINGLE_K} THEN {short} ELSE {zipped} END"

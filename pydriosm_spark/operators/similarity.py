@@ -22,9 +22,10 @@ Cross-engine determinism: embeddings are quantized to integers
 dots of bounded magnitude are exact in float64 REGARDLESS of summation
 order, so numpy kernels here and DuckDB ``list_dot_product`` oracles
 produce bit-identical buckets, centroids, and similarity scores — both
-ANN paths carry full SQL oracles (queries_text.py).  Bounds: |q| <=
-~2^20 (QUANT x max|e|), plane dot <= 64 * 2^20 * 48 < 2^32, re-rank dot
-<= 64 * 2^40 < 2^47, all << 2^53.
+ANN paths carry full SQL oracles (queries_text.py).  Bounds at 64
+dimensions (they grow linearly with the width the kernels read from the
+data): |q| <= ~2^20 (QUANT x max|e|), plane dot <= 64 * 2^20 * 48 <
+2^32, re-rank dot <= 64 * 2^40 < 2^47, all << 2^53.
 
 At 10^12-scale the LSH/IVF variants shard the index by bucket/list and
 co-partition queries by the same key — a shuffle-light equi-join;
@@ -103,77 +104,6 @@ def sized_ivf_params(n: int) -> tuple:
     return n_lists, n_probe_max, budget
 
 
-def sized_coarse_params(n_lists: int) -> tuple:
-    """(n_super, s_probe) for the hierarchical stage-0 (coarse routing
-    over the centroid set; closes the "stage 1 evaluates all n_lists
-    centroid dots per query" honest-limit).  Integer-exact and mirrored
-    in the SQL oracle:
-
-    * ``n_super = 2^ceil(ceil_log2(n_lists) / 2)`` (~sqrt(n_lists),
-      power of two; clamped to n_lists on tiny quantizers).
-    * ``s_probe = max(2, ceil(5 * n_super / 8))`` — supers kept per
-      query.  MEASURED at the 8k gate (uniform-sphere corpus — the
-      WORST case for coarse routing, since neighbors scatter across
-      Voronoi cells with no cluster structure to exploit): recall vs
-      allowed fraction is nearly hierarchy-shape-invariant
-      ((k2, s) sweeps of (16,4..10), (32,8..12), (64,12..20) all track
-      allowed/n_lists), and 5/8 is the smallest fraction holding the
-      0.8 recall bar (0.8039 vs flat IVF's 0.82).  Per-query centroid
-      dots drop from ``n_lists`` to ``n_super + ~5/8 n_lists`` — a
-      ~1.6x cut on worst-case data with a sqrt-bounded stage-0;
-      CLUSTERED corpora (the realistic case) can pass a smaller
-      ``s_probe`` explicitly and approach the 4x regime the same
-      oracle covers.
-    """
-    n_super = min(n_lists, 1 << ((ceil_log2(n_lists) + 1) // 2))
-    s_probe = min(n_super, max(2, (5 * n_super + 7) // 8))
-    return n_super, s_probe
-
-
-def _kmeans_np(X: np.ndarray, k: int, iterations: int = 5) -> tuple:
-    """Driver-side deterministic Lloyd over an ALREADY-QUANTIZED int64
-    matrix (the super-centroid fit runs over at most ~4*sqrt(N)
-    centroids — driver numpy is the cheap exact path).  Arithmetic is
-    identical to :func:`kmeans_fit` / the unrolled SQL oracle: stride
-    seeding by row order, assignment by ``dot(q, c)/sqrt(dot(c, c))``
-    with first-max (lowest id) tie-break, integer half-away re-quantized
-    means, empty clusters keep their previous centroid.  Integer dots
-    are exact in float64, so engine and oracle agree bit-for-bit.
-
-    Returns (centers: (k, dim) int64, assign: (len(X),) int — final
-    assignment under the FINAL centers, i.e. the oracle's ``rn = 1``
-    over the last iteration's centroid set)."""
-    n = len(X)
-    if n < k:
-        raise ValueError(f"_kmeans_np: need >= k={k} rows, got {n}")
-    stride = max(1, n // k)
-    C = X[(np.arange(n) % stride) == 0][:k].copy()
-
-    def _assign(C: np.ndarray) -> np.ndarray:
-        # chunk rows: at the extreme sizing (n_lists ~ 4*sqrt(N) rows x
-        # k ~ sqrt(n_lists) centers) a full sims matrix is ~0.5 GB;
-        # 64k-row chunks bound it at ~250 MB whatever the scale
-        denom = np.sqrt((C.astype(np.float64) ** 2).sum(axis=1))
-        denom[denom == 0] = 1.0
-        out = np.empty(len(X), dtype=np.int64)
-        for lo in range(0, len(X), 65536):
-            sims = (X[lo:lo + 65536] @ C.T).astype(np.float64) / denom
-            out[lo:lo + 65536] = np.argmax(sims, axis=1)  # first max = lowest id
-        return out
-
-    for _ in range(iterations):
-        a = _assign(C)
-        new = C.copy()
-        for c in np.unique(a):
-            m = a == c
-            means = X[m].sum(axis=0).astype(np.float64) / int(m.sum())
-            new[c] = np.where(
-                means >= 0, np.floor(means + 0.5), np.ceil(means - 0.5)
-            ).astype(np.int64)
-        C = new
-    return C, _assign(C)
-
-
 def _norm_rows(m: np.ndarray) -> np.ndarray:
     n = np.linalg.norm(m, axis=1, keepdims=True)
     n[n == 0] = 1.0
@@ -186,13 +116,6 @@ def quantize_sql(vec_col: str, dialect: str) -> str:
     if dialect == "spark":
         return f"transform({vec_col}, x -> CAST(round(CAST(x AS DOUBLE) * {QUANT}) AS BIGINT))"
     return f"list_transform({vec_col}, x -> CAST(round(x::DOUBLE * {QUANT}) AS BIGINT))"
-
-
-def quantized(emb: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding") -> DataFrame:
-    """SQL-side quantization — kept for tests/reference; the engine hot
-    paths quantize inside their numpy kernels (:func:`_qmat`) instead of
-    paying an interpreted per-element transform() lambda per row."""
-    return emb.select(id_col, F.expr(quantize_sql(vec_col, "spark")).alias("qv"))
 
 
 def _qmat(series: pd.Series) -> np.ndarray:
@@ -280,17 +203,31 @@ def _planes(dim: int, table: int, n_planes: int = N_PLANES) -> np.ndarray:
 
 def lsh_buckets(
     emb: DataFrame,
-    dim: int,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     n_planes: int = N_PLANES,
+    n_guided: int = 0,
 ) -> DataFrame:
-    """(vec_id, table, bucket): sign-pattern bucket per plane table.
+    """(vec_id, table, bucket): the sign-pattern bucket per plane table,
+    plus, with ``n_guided > 0``, its distance-GUIDED multi-probe buckets.
 
     ONE numpy kernel computes all N_TABLES x n_planes integer dots per
     Arrow batch (int64 matmul — exact, so bucket bits match the SQL
     oracle bit-for-bit); replaces 48 interpreted ``aggregate(zip_with)``
     HOF expressions per row (~10x slower, the repo's own anti-pattern).
+    The planes come from the batch's vector width, so any embedding
+    width works without being told.
+
+    Guided probes (Lv et al., 'Multi-Probe LSH', VLDB'07 shape): a
+    query's most likely sign flips are the planes it lies closest to, so
+    each table emits the base bucket, the ``n_guided`` smallest-|dot|
+    single flips and their pair flips — 1 + g + C(g,2) rows (7 at
+    g=3) instead of n_planes+1 blind flips, a count INDEPENDENT of
+    n_planes, so recall holds as sizing deepens the bucket space.
+    Tie-break (|dot| asc, plane asc) over exact integer dots ->
+    bit-reproducible in SQL (the oracle mirrors it via row_number).  The
+    index side calls with ``n_guided=0`` (one bucket per table); the
+    fan-out is query-side only.
 
     SIZING RULE (the selectivity knob that makes or breaks LSH at
     scale): candidates per query ~ N_TABLES * (n_flips + 1) * N /
@@ -299,138 +236,30 @@ def lsh_buckets(
     ~14-18 or the candidate join degenerates toward all-pairs (measured:
     at 8k vectors, 6 planes made ANN 40x SLOWER than brute force; 12
     planes fixed it — tests/test_ann_scaling.py)."""
-    P = np.concatenate(
-        [_planes(dim, t, n_planes) for t in range(N_TABLES)]
-    ).astype(np.int64)
     pows = (1 << np.arange(n_planes, dtype=np.int64))
+    pairs = [(a, c) for a in range(n_guided) for c in range(a + 1, n_guided)]
 
     schema = f"{id_col} long, table int, bucket int"
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        P = np.empty((0, 0), dtype=np.int64)  # the task's planes, per width
         for b in batches:
             Q = _qmat(b[vec_col])  # (n, dim) int64, quantized in-kernel
-            bits = (Q @ P.T) > 0  # (n, T*PL) exact integer dots
-            bk = (
-                bits.reshape(len(Q), N_TABLES, n_planes).astype(np.int64) * pows
-            ).sum(axis=2)
             n = len(Q)
-            yield pd.DataFrame(
-                {
-                    id_col: np.repeat(b[id_col].to_numpy(), N_TABLES),
-                    "table": np.tile(np.arange(N_TABLES, dtype=np.int32), n),
-                    "bucket": bk.astype(np.int32).ravel(),
-                }
-            )
-
-    return emb.select(id_col, vec_col).mapInPandas(kernel, schema)
-
-
-def _qcosine():
-    """Arrow-vectorized exact-deterministic cosine of two raw embedding
-    vectors, quantized in-kernel (:func:`_qmat`): integer dots
-    (order-independent in int64), then the identical float64 ``dot /
-    sqrt(double(n2a) * double(n2b))`` the SQL oracle computes —
-    bit-equal across engines.  (Factory: pandas_udf registration needs
-    an active session.)"""
-
-    @F.pandas_udf("double")
-    def qcos(qa: pd.Series, qb: pd.Series) -> pd.Series:
-        A, B = _qmat(qa), _qmat(qb)
-        dot = np.einsum("ij,ij->i", A, B).astype(np.float64)
-        n2a = np.einsum("ij,ij->i", A, A).astype(np.float64)
-        n2b = np.einsum("ij,ij->i", B, B).astype(np.float64)
-        denom = np.sqrt(n2a * n2b)
-        return pd.Series(np.where(denom > 0, dot / np.maximum(denom, 1e-300), 0.0))
-
-    return qcos
-
-
-def qcosine_sql(a: str, b: str) -> str:
-    """DuckDB mirror of ``_qcosine`` over two BIGINT[] columns."""
-    dot = f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
-    n2a = f"list_dot_product({a}::DOUBLE[], {a}::DOUBLE[])"
-    n2b = f"list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])"
-    return f"(CASE WHEN {n2a} * {n2b} > 0 THEN {dot} / sqrt({n2a} * {n2b}) ELSE 0.0 END)"
-
-
-def _rerank(
-    cand: DataFrame, emb: DataFrame, k: int, id_col: str, vec_col: str = "embedding"
-) -> DataFrame:
-    """(qid, nid) candidates -> exact quantized-cosine top-k per qid
-    (raw vectors travel; the UDF quantizes in-kernel)."""
-    qv = emb.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qa"))
-    nv = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("qb"))
-    scored = (
-        cand.join(qv, "qid")
-        .join(nv, "nid")
-        .withColumn("sim", _qcosine()(F.col("qa"), F.col("qb")))
-    )
-    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(
-            F.col("qid").alias(id_col),
-            F.col("rank").cast("long").alias("rank"),
-            F.col("nid").alias("neighbor_id"),
-        )
-    )
-
-
-def multiprobe(buckets: DataFrame, n_flips: int = N_PLANES) -> DataFrame:
-    """Blind query-side multi-probe: each (table, bucket) also probes ALL
-    ``n_flips`` single-bit-flip neighbors.  Superseded on the ANN path by
-    :func:`lsh_probes` (distance-guided — same recall from fewer, better
-    probes); kept for comparison tests."""
-    flips = F.array(
-        F.col("bucket"), *[F.expr(f"bucket ^ {1 << p}") for p in range(n_flips)]
-    )
-    return buckets.select(
-        buckets.columns[0], "table", F.explode(flips).alias("bucket")
-    )
-
-
-def lsh_probes(
-    emb: DataFrame,
-    dim: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_planes: int = N_PLANES,
-    n_guided: int = N_GUIDED,
-) -> DataFrame:
-    """Distance-GUIDED multi-probe buckets (Lv et al., 'Multi-Probe LSH',
-    VLDB'07 shape): a query's most likely sign flips are the planes it
-    lies closest to, so probe the base bucket, the ``n_guided``
-    smallest-|dot| single flips, and their pair flips — 1 + g + C(g,2)
-    probes/table (7 at g=3) instead of n_planes+1 blind flips.  Probe
-    count is INDEPENDENT of n_planes, so recall holds as sizing deepens
-    the bucket space.  Tie-break (|dot| asc, plane asc) over exact
-    integer dots -> bit-reproducible in SQL (oracle mirrors via
-    row_number).  Emits (id, table, bucket) probe rows — index side stays
-    single-bucket (:func:`lsh_buckets`), fan-out is query-side only."""
-    P = np.concatenate(
-        [_planes(dim, t, n_planes) for t in range(N_TABLES)]
-    ).astype(np.int64)
-    pows = (1 << np.arange(n_planes, dtype=np.int64))
-    pairs = [(a, b) for a in range(n_guided) for b in range(a + 1, n_guided)]
-
-    schema = f"{id_col} long, table int, bucket int"
-
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for b in batches:
-            Q = _qmat(b[vec_col])
-            n = len(Q)
-            D = (Q @ P.T).reshape(n, N_TABLES, n_planes)
+            if P.shape[1] != Q.shape[1]:
+                P = np.concatenate(
+                    [_planes(Q.shape[1], t, n_planes) for t in range(N_TABLES)]
+                )
+            D = (Q @ P.T).reshape(n, N_TABLES, n_planes)  # exact integer dots
             bk = ((D > 0).astype(np.int64) * pows).sum(axis=2)  # (n, T)
-            A = np.abs(D)
-            idx = np.broadcast_to(np.arange(n_planes), A.shape)
-            order = np.lexsort((idx, A), axis=2)[:, :, :n_guided]  # (n,T,g)
-            flip = (1 << order.astype(np.int64))  # bucket xor masks
             probes = [bk]
-            for g in range(n_guided):
-                probes.append(bk ^ flip[:, :, g])
-            for a, c in pairs:
-                probes.append(bk ^ flip[:, :, a] ^ flip[:, :, c])
+            if n_guided:
+                A = np.abs(D)
+                idx = np.broadcast_to(np.arange(n_planes), A.shape)
+                order = np.lexsort((idx, A), axis=2)[:, :, :n_guided]  # (n,T,g)
+                flip = (1 << order.astype(np.int64))  # bucket xor masks
+                probes += [bk ^ flip[:, :, g] for g in range(n_guided)]
+                probes += [bk ^ flip[:, :, a] ^ flip[:, :, c] for a, c in pairs]
             pk = np.stack(probes, axis=2)  # (n, T, n_probes)
             n_pr = pk.shape[2]
             yield pd.DataFrame(
@@ -444,6 +273,53 @@ def lsh_probes(
             )
 
     return emb.select(id_col, vec_col).mapInPandas(kernel, schema)
+
+
+def _score_pairs(cand: DataFrame, emb: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(qid, nid) candidates -> (qid, nid, sim): both raw vectors joined
+    on, then one Arrow-vectorized exact-deterministic cosine, quantized
+    in-kernel (:func:`_qmat`): integer dots (order-independent in
+    int64), then the identical float64 ``dot / sqrt(double(n2a) *
+    double(n2b))`` the SQL oracle computes (:func:`qcosine_sql`) —
+    bit-equal across engines.  The pandas_udf is built per call because
+    its registration needs an active session."""
+
+    @F.pandas_udf("double")
+    def qcos(qa: pd.Series, qb: pd.Series) -> pd.Series:
+        A, B = _qmat(qa), _qmat(qb)
+        dot = np.einsum("ij,ij->i", A, B).astype(np.float64)
+        n2a = np.einsum("ij,ij->i", A, A).astype(np.float64)
+        n2b = np.einsum("ij,ij->i", B, B).astype(np.float64)
+        denom = np.sqrt(n2a * n2b)
+        return pd.Series(np.where(denom > 0, dot / np.maximum(denom, 1e-300), 0.0))
+
+    qv = emb.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qa"))
+    nv = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("qb"))
+    return cand.join(qv, "qid").join(nv, "nid").withColumn("sim", qcos("qa", "qb"))
+
+
+def qcosine_sql(a: str, b: str) -> str:
+    """DuckDB mirror of :func:`_score_pairs`' cosine over two BIGINT[]
+    columns."""
+    dot = f"list_dot_product({a}::DOUBLE[], {b}::DOUBLE[])"
+    n2a = f"list_dot_product({a}::DOUBLE[], {a}::DOUBLE[])"
+    n2b = f"list_dot_product({b}::DOUBLE[], {b}::DOUBLE[])"
+    return f"(CASE WHEN {n2a} * {n2b} > 0 THEN {dot} / sqrt({n2a} * {n2b}) ELSE 0.0 END)"
+
+
+def _rerank(cand: DataFrame, emb: DataFrame, k: int, id_col: str, vec_col: str) -> DataFrame:
+    """(qid, nid) candidates -> exact quantized-cosine top-k per qid."""
+    w = Window.partitionBy("qid").orderBy(F.col("sim").desc(), F.col("nid").asc())
+    return (
+        _score_pairs(cand, emb, id_col, vec_col)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(
+            F.col("qid").alias(id_col),
+            F.col("rank").cast("long").alias("rank"),
+            F.col("nid").alias("neighbor_id"),
+        )
+    )
 
 
 def auto_bucket_cap(
@@ -464,7 +340,6 @@ def auto_bucket_cap(
 def cosine_topk_lsh(
     spark: SparkSession,
     emb: DataFrame,
-    dim: int,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -497,10 +372,10 @@ def cosine_topk_lsh(
     registry path) or an int to force a specific cap."""
     if n_planes is None:
         n_planes = sized_lsh_planes(emb.count())
-    b = lsh_buckets(emb, dim, id_col, vec_col, n_planes)
+    b = lsh_buckets(emb, id_col, vec_col, n_planes)
     if max_bucket == "auto":
         max_bucket = auto_bucket_cap(b)
-    a = lsh_probes(emb, dim, id_col, vec_col, n_planes).select(
+    a = lsh_buckets(emb, id_col, vec_col, n_planes, N_GUIDED).select(
         F.col(id_col).alias("qid"), "table", "bucket"
     )
     c = b.select(F.col(id_col).alias("nid"), "table", "bucket")
@@ -523,7 +398,6 @@ def cosine_topk_lsh(
 def embedding_dedup_pairs(
     spark: SparkSession,
     emb: DataFrame,
-    dim: int,
     sim_e6_min: int = 400_000,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -542,7 +416,7 @@ def embedding_dedup_pairs(
     re-derives the same rule from count(*)."""
     if n_planes is None:
         n_planes = sized_lsh_planes(emb.count())
-    b = lsh_buckets(emb, dim, id_col, vec_col, n_planes)
+    b = lsh_buckets(emb, id_col, vec_col, n_planes)
     a = b.select(F.col(id_col).alias("qid"), "table", "bucket")
     c = b.select(F.col(id_col).alias("nid"), "table", "bucket")
     cand = (
@@ -551,15 +425,22 @@ def embedding_dedup_pairs(
         .select("qid", "nid")
         .distinct()
     )
-    qv = emb.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qa"))
-    nv = emb.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("qb"))
     return (
-        cand.join(qv, "qid")
-        .join(nv, "nid")
-        .withColumn("sim_e6", F.floor(_qcosine()(F.col("qa"), F.col("qb")) * 1e6).cast("long"))
+        _score_pairs(cand, emb, id_col, vec_col)
+        .withColumn("sim_e6", F.floor(F.col("sim") * 1e6).cast("long"))
         .filter(F.col("sim_e6") >= sim_e6_min)
         .select(F.col("qid").alias("id_a"), F.col("nid").alias("id_b"), "sim_e6")
     )
+
+
+def _centroid_sims(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
+    """The IVF assignment metric ``dot(q, c) / sqrt(dot(c, c))`` of every
+    quantized row of ``Q`` against every integer centroid of ``C`` (a
+    zero centroid divides by 1).  Integer dots are exact in float64, so
+    this equals the oracle's ``queries_text._ivf_sim_sql`` bit for bit."""
+    denom = np.sqrt((C.astype(np.float64) ** 2).sum(axis=1))
+    denom[denom == 0] = 1.0
+    return (Q @ C.T).astype(np.float64) / denom
 
 
 def kmeans_fit(
@@ -587,7 +468,6 @@ def kmeans_fit(
     if n < k:
         raise ValueError(f"kmeans_fit: need >= k={k} vectors, got {n}")
     stride = max(1, n // k)
-    from pyspark.sql import Window
 
     # Global rank by id WITHOUT a global window (ADVICE r3: an
     # un-partitioned Window.orderBy funnels the whole table through one
@@ -635,13 +515,10 @@ def kmeans_fit(
         bc = sc.broadcast(cents)
 
         def partials(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            C = bc.value
-            denom = np.sqrt((C.astype(np.float64) ** 2).sum(axis=1))
-            denom[denom == 0] = 1.0
             for b in batches:
                 Q = _qmat(b[vec_col])
-                sims = (Q @ C.T).astype(np.float64) / denom
-                assign = np.argmax(sims, axis=1)  # first max = lowest list_id
+                # first max = lowest list_id
+                assign = np.argmax(_centroid_sims(Q, bc.value), axis=1)
                 rows = []
                 for c in np.unique(assign):
                     m = assign == c
@@ -677,23 +554,9 @@ def cosine_topk_ivf(
     budget: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    coarse: bool = False,
-    s_probe: int | None = None,
 ) -> DataFrame:
     """IVF ANN: distributed k-means coarse quantizer -> inverted lists
     keyed by centroid -> TWO-STAGE probe -> exact re-rank.
-
-    ``coarse=True`` adds a hierarchical STAGE 0 (r5): ~sqrt(n_lists)
-    super-centroids fit over the centroid set route each query to its
-    top ``s_probe`` supers, and stage 1 ranks only the centroids
-    assigned to those supers — per-query centroid dots drop from
-    ``n_lists`` to ``n_super + ~5/8 n_lists`` at the default
-    :func:`sized_coarse_params` rule (the recall-preserving cut on the
-    8k gate's uniform-sphere worst case; clustered corpora can pass
-    ``s_probe`` explicitly and approach 4x).  Index assignment stays
-    EXACT (every vector to its true nearest list); only query routing
-    is approximated, and the oracle mirrors the same rule
-    (``oracle_ann_ivf(coarse=True, s_probe=...)``).
 
     Stage 1 ranks each query's ``n_probe`` nearest lists by centroid
     similarity; stage 2 walks them in rank order and keeps a list only
@@ -713,7 +576,7 @@ def cosine_topk_ivf(
     same integer rule from count(*)."""
     cand = ivf_candidate_pairs(
         spark, emb, n_lists=n_lists, n_probe=n_probe, budget=budget,
-        id_col=id_col, vec_col=vec_col, coarse=coarse, s_probe=s_probe,
+        id_col=id_col, vec_col=vec_col,
     )
     return _rerank(cand, emb, k, id_col, vec_col)
 
@@ -726,75 +589,26 @@ def ivf_candidate_pairs(
     budget: int | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    coarse: bool = False,
-    s_probe: int | None = None,
 ) -> DataFrame:
     """The IVF probe WITHOUT the re-rank: distinct (qid, nid) candidate
     pairs after the two-stage budget probe — public so the scan-fraction
-    economics are directly measurable (tests/test_ann_scaling.py).
-    ``coarse`` as in :func:`cosine_topk_ivf`."""
+    economics are directly measurable (tests/test_ann_scaling.py)."""
     if n_lists is None or n_probe is None or budget is None:
         sl, sp, sb = sized_ivf_params(emb.count())
         n_lists = sl if n_lists is None else n_lists
         n_probe = sp if n_probe is None else n_probe
         budget = sb if budget is None else budget
     cents = kmeans_fit(emb, k=n_lists, id_col=id_col, vec_col=vec_col)
-    if s_probe is not None and not coarse:
-        raise ValueError("s_probe only applies to the coarse=True probe")
-    if s_probe is not None and s_probe < 1:
-        raise ValueError(f"s_probe must be >= 1, got {s_probe}")
-    if coarse:
-        n_super, default_sp = sized_coarse_params(n_lists)
-        s_probe = default_sp if s_probe is None else min(n_super, s_probe)
-        supers, cassign = _kmeans_np(cents, k=n_super)
-    else:
-        supers, cassign, s_probe = None, None, 0
-    bc = spark.sparkContext.broadcast((cents, supers, cassign))
+    bc = spark.sparkContext.broadcast(cents)
     raw = emb.select(id_col, vec_col)
 
     schema = f"{id_col} long, list_id int"
     rank_schema = f"{id_col} long, list_id int, rnk int"
 
-    def _sims(Q: np.ndarray, C: np.ndarray) -> np.ndarray:
-        denom = np.sqrt((C.astype(np.float64) ** 2).sum(axis=1))
-        denom[denom == 0] = 1.0
-        return (Q @ C.T).astype(np.float64) / denom
-
     def topn(batches: Iterator[pd.DataFrame], n_top: int, with_rank: bool):
-        C, S, CA = bc.value
         for b in batches:
             Q = _qmat(b[vec_col])
-            if with_rank and S is not None:
-                # stage 0: rank supers (stable: ties keep super order),
-                # keep top s_probe, and compute stage-1 dots ONLY for
-                # centroids inside them — one gathered BLAS matmul per
-                # super, so the per-query dot count actually IS
-                # n_super + |allowed| (a full-matmul-then-mask here
-                # would silently pay MORE than the flat path).  Each
-                # dot is an independent integer product — subsetting
-                # cannot change its float64-exact value, so the oracle
-                # contract is untouched.  A query can end with fewer
-                # than n_top allowed centroids — those rows are dropped
-                # below (the oracle ranks within the allowed set the
-                # same way).
-                stop = np.argsort(-_sims(Q, S), axis=1, kind="stable")[:, :s_probe]
-                ok = np.zeros((len(Q), len(S)), dtype=bool)
-                np.put_along_axis(ok, stop, True, axis=1)
-                cden = np.sqrt((C.astype(np.float64) ** 2).sum(axis=1))
-                cden[cden == 0] = 1.0
-                sims = np.full((len(Q), len(C)), -np.inf)
-                for g in range(len(S)):
-                    rows = np.nonzero(ok[:, g])[0]
-                    cols = np.nonzero(CA == g)[0]
-                    if len(rows) and len(cols):
-                        sims[np.ix_(rows, cols)] = (
-                            Q[rows] @ C[cols].T
-                        ).astype(np.float64) / cden[cols]
-                allowed = ok[:, CA]  # (n, n_lists)
-                n_allowed = np.minimum(allowed.sum(axis=1), n_top)
-            else:
-                sims = _sims(Q, C)
-                n_allowed = None
+            sims = _centroid_sims(Q, bc.value)
             # stable sort on -sim: equal sims keep list_id order
             top = np.argsort(-sims, axis=1, kind="stable")[:, :n_top]
             out = {
@@ -803,10 +617,7 @@ def ivf_candidate_pairs(
             }
             if with_rank:
                 out["rnk"] = np.tile(np.arange(1, n_top + 1, dtype=np.int32), len(b))
-            o = pd.DataFrame(out)
-            if n_allowed is not None:
-                o = o[o["rnk"].to_numpy() <= np.repeat(n_allowed, n_top)]
-            yield o
+            yield pd.DataFrame(out)
 
     def assign(batches):
         return topn(batches, 1, False)

@@ -141,7 +141,7 @@ EMB_DEDUP_SIM_E6 = 400_000
 def q_dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding-cosine near-dup pairs (LSH candidates + exact verify)."""
     return similarity.embedding_dedup_pairs(
-        spark, _emb(spark, sf_dir), dim=DIM, sim_e6_min=EMB_DEDUP_SIM_E6
+        spark, _emb(spark, sf_dir), sim_e6_min=EMB_DEDUP_SIM_E6
     )
 
 
@@ -159,7 +159,7 @@ def q_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     at any scale (the public default is "auto"; the capped branch gets
     its own driver-gated entry below)."""
     return similarity.cosine_topk_lsh(
-        spark, _emb(spark, sf_dir), dim=DIM, k=TOPK, max_bucket=None
+        spark, _emb(spark, sf_dir), k=TOPK, max_bucket=None
     )
 
 
@@ -170,7 +170,7 @@ def q_ann_lsh_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the deterministic-prefix cap is cross-engine exact
     (VERDICT r4 item 3)."""
     return similarity.cosine_topk_lsh(
-        spark, _emb(spark, sf_dir), dim=DIM, k=TOPK, max_bucket=ANN_CAP
+        spark, _emb(spark, sf_dir), k=TOPK, max_bucket=ANN_CAP
     )
 
 
@@ -376,7 +376,8 @@ QUALIFY rank <= {TOPK}"""
 def _lsh_dot_arrays(n_planes: int) -> list[str]:
     """One DuckDB expression per plane table: the array of ``n_planes``
     exact integer plane dots (as DOUBLE — exact below 2^53), mirroring
-    the numpy kernels in similarity.lsh_buckets/lsh_probes."""
+    the one plane-hash kernel, similarity.lsh_buckets (base buckets and
+    guided probes alike)."""
     out = []
     for t in range(similarity.N_TABLES):
         P = similarity._planes(DIM, t, n_planes)
@@ -512,18 +513,18 @@ def _ivf_sim_sql(q: str, c: str) -> str:
     return f"({dot} / (CASE WHEN sqrt({n2}) = 0 THEN 1.0 ELSE sqrt({n2}) END))"
 
 
-def _ivf_assign_cte(name: str, cents: str, src: str = "e") -> str:
-    """Assignment CTE: every vector of ``src`` (vec_id, qv) ranked
+def _ivf_assign_cte(name: str, cents: str) -> str:
+    """Assignment CTE: every vector of ``e`` (vec_id, qv) ranked
     against every centroid of ``cents`` (list_id, cent)."""
     sim = _ivf_sim_sql("e.qv", "c.cent")
     return f"""{name} AS (
   SELECT e.vec_id, e.qv, c.list_id,
          row_number() OVER (PARTITION BY e.vec_id ORDER BY {sim} DESC, c.list_id ASC) AS rn
-  FROM {src} e CROSS JOIN {cents} c
+  FROM e e CROSS JOIN {cents} c
 )"""
 
 
-def oracle_ann_ivf(iterations: int = 5, coarse: bool = False, s_probe: int | None = None) -> str:
+def oracle_ann_ivf(iterations: int = 5) -> str:
     """Unrolled distributed-Lloyd oracle: every iteration's assignment +
     integer re-quantized mean is exact arithmetic, so the final inverted
     lists, probes, and re-rank equal similarity.cosine_topk_ivf's.
@@ -531,16 +532,7 @@ def oracle_ann_ivf(iterations: int = 5, coarse: bool = False, s_probe: int | Non
     with the engine's integer sizing rule (similarity.sized_ivf_params),
     and the TWO-STAGE budget probe (centroid-rank order, keep a list
     while the running size of prior kept lists < budget) is mirrored
-    with the same window — one string, any scale.
-
-    ``coarse=True`` mirrors the hierarchical stage-0 (r5): a SECOND
-    unrolled Lloyd over the final centroid set fits ~sqrt(n_lists)
-    super-centroids (same stride seeding / assignment metric / integer
-    means — sized_coarse_params in SQL), each query keeps its top
-    ``s_probe`` supers, and the stage-1 rank runs WITHIN the centroids
-    assigned to those supers (the engine masks the same set and ranks
-    with the same sim-desc, list-asc order).  Index assignment stays
-    the exact full rank in both engines."""
+    with the same window — one string, any scale."""
     qz = similarity.quantize_sql("embedding", "duckdb")
     AVG, BF = similarity.IVF_AVG_LIST, similarity.IVF_BUDGET_FLOOR
     parts = [
@@ -585,83 +577,12 @@ def oracle_ann_ivf(iterations: int = 5, coarse: bool = False, s_probe: int | Non
     parts.append(_ivf_assign_cte("af", f"c{iterations}"))
     parts.append("idx AS (SELECT vec_id AS nid, list_id FROM af WHERE rn = 1)")
     parts.append("lsz AS (SELECT list_id, count(*) AS lsize FROM idx GROUP BY list_id)")
-    probe_src = "af"
-    if coarse:
-        it = iterations
-        # super-level source: the FINAL centroids as (vec_id, qv) rows
-        parts.append(f"ce AS MATERIALIZED (SELECT list_id AS vec_id, cent AS qv FROM c{it})")
-        # sized_coarse_params in SQL: k2 = min(nl, 2^ceil(ceil_log2(nl)/2)),
-        # sp (in qsup below) = min(k2, max(2, ceil(5*k2/8)))
-        parts.append(
-            """pp2 AS (
-  SELECT nl,
-         least(nl, 1::BIGINT << ((CASE WHEN nl <= 1 THEN 0
-                                       ELSE length(bin(nl - 1)) END + 1) // 2)) AS k2
-  FROM pp
-)"""
-        )
-        parts.append(
-            """s0 AS (
-  SELECT row_number() OVER (ORDER BY rn) - 1 AS list_id, qv AS cent
-  FROM (SELECT qv, rn
-        FROM (SELECT qv, row_number() OVER (ORDER BY vec_id) - 1 AS rn FROM ce), pp2
-        WHERE rn % greatest(pp2.nl // pp2.k2, 1) = 0
-        QUALIFY row_number() OVER (ORDER BY rn) <= pp2.k2)
-)"""
-        )
-        for j in range(1, iterations + 1):
-            parts.append(_ivf_assign_cte(f"sa{j}", f"s{j - 1}", src="ce"))
-            parts.append(
-                f"""sm{j} AS (
-  SELECT a.list_id, r.i AS ord,
-         CAST(round(CAST(sum(a.qv[r.i]) AS DOUBLE) / count(*)) AS BIGINT) AS cx
-  FROM sa{j} a, range(1, {DIM + 1}) r(i) WHERE a.rn = 1 GROUP BY a.list_id, r.i
-)"""
-            )
-            parts.append(
-                f"sg{j} AS (SELECT list_id, list(cx ORDER BY ord) AS cent FROM sm{j} GROUP BY list_id)"
-            )
-            parts.append(
-                f"""s{j} AS MATERIALIZED (
-  SELECT c.list_id, coalesce(g.cent, c.cent) AS cent
-  FROM s{j - 1} c LEFT JOIN sg{j} g USING (list_id)
-)"""
-            )
-        parts.append(_ivf_assign_cte("saf", f"s{iterations}", src="ce"))
-        parts.append(
-            "sassign AS (SELECT vec_id AS clist, list_id AS super_id FROM saf WHERE rn = 1)"
-        )
-        parts.append(_ivf_assign_cte("qs", f"s{iterations}"))
-        sp_sql = (
-            "least(pp2.k2, greatest(2, (5 * pp2.k2 + 7) // 8))"
-            if s_probe is None
-            else f"least(pp2.k2, {int(s_probe)})"
-        )
-        parts.append(
-            f"""qsup AS (
-  SELECT qs.vec_id AS qid, qs.list_id AS super_id
-  FROM qs, pp2 WHERE qs.rn <= {sp_sql}
-)"""
-        )
-        # stage-1 rank WITHIN the allowed centroid set (same sim-desc,
-        # list-asc order the engine's masked stable argsort applies)
-        parts.append(
-            f"""afq AS (
-  SELECT vec_id, list_id,
-         row_number() OVER (PARTITION BY vec_id ORDER BY sim DESC, list_id ASC) AS rn
-  FROM (SELECT e.vec_id, c.list_id, {_ivf_sim_sql('e.qv', 'c.cent')} AS sim
-        FROM e CROSS JOIN c{it} c
-        JOIN sassign s ON s.clist = c.list_id
-        JOIN qsup q ON q.qid = e.vec_id AND q.super_id = s.super_id)
-)"""
-        )
-        probe_src = "afq"
     # stage 1: top n_probe_max lists by centroid rank; stage 2: keep a
     # list while the running size of higher-ranked kept lists < budget
     parts.append(
-        f"""pw AS (
+        """pw AS (
   SELECT af.vec_id AS qid, af.list_id, af.rn, coalesce(l.lsize, 0) AS lsize
-  FROM {probe_src} af LEFT JOIN lsz l ON l.list_id = af.list_id, pp
+  FROM af af LEFT JOIN lsz l ON l.list_id = af.list_id, pp
   WHERE af.rn <= least(pp.nl, greatest(8, pp.nl // 16))
 )"""
     )

@@ -50,12 +50,9 @@ def exact8k(spark, emb8k):
     return set(map(tuple, exact[["vec_id", "neighbor_id"]].itertuples(index=False)))
 
 
-def _lsh_cand_count(emb, n_planes, guided):
-    b = similarity.lsh_buckets(emb, dim=64, n_planes=n_planes)
-    if guided:
-        a = similarity.lsh_probes(emb, dim=64, n_planes=n_planes)
-    else:
-        a = similarity.multiprobe(b, n_flips=n_planes)
+def _lsh_cand_count(emb, n_planes):
+    b = similarity.lsh_buckets(emb, n_planes=n_planes)
+    a = similarity.lsh_buckets(emb, n_planes=n_planes, n_guided=similarity.N_GUIDED)
     a = a.select(F.col("vec_id").alias("qid"), "table", "bucket")
     c = b.select(F.col("vec_id").alias("nid"), "table", "bucket")
     return (
@@ -90,22 +87,16 @@ def test_sizing_rules_are_monotone_and_bounded():
 
 
 def test_sized_planes_keep_candidates_subquadratic(spark, emb8k):
-    """At 8k vectors the sized rule (7 planes + guided probes) must cut
-    the candidate join far below both all-pairs and the round-2
-    degenerate fixed-6-plane blind-probe config."""
+    """At 8k vectors the sized rule (7 planes + guided probes) must keep
+    the candidate join well under all-pairs."""
     n = emb8k.count()
     all_pairs = n * (n - 1)
-    sized = similarity.sized_lsh_planes(n)
-    c_sized = _lsh_cand_count(emb8k, sized, guided=True)
-    c_degen = _lsh_cand_count(emb8k, 6, guided=False)
-    # measured (decorrelated planes, r4): degenerate 6-plane blind ->
-    # ~39% of all pairs; sized 7-plane guided -> ~42.5%... of DISTINCT
-    # pairs on this 55%-near-dup corpus the collision mass is DATA-bound
-    # (mutually similar vectors genuinely co-bucket), so the honest
-    # bound here is "clearly below the blind-probe EMISSION count and
-    # bounded well under all-pairs"; absolute economics are pinned by
-    # the uniform 1M gate below, and hostile density by the cap gate.
-    assert c_degen > 0.3 * all_pairs, (c_degen, all_pairs)
+    c_sized = _lsh_cand_count(emb8k, similarity.sized_lsh_planes(n))
+    # measured (decorrelated planes, r4): ~42.5% of DISTINCT pairs on
+    # this 55%-near-dup corpus — the collision mass is DATA-bound
+    # (mutually similar vectors genuinely co-bucket); absolute economics
+    # are pinned by the uniform 1M gate below, and hostile density by
+    # the cap gate.
     assert c_sized < 0.5 * all_pairs, (c_sized, all_pairs)
 
 
@@ -134,9 +125,7 @@ def test_sized_planes_hold_recall_and_beat_degenerate_runtime(spark, emb8k, exac
     # exact-oracle registry path); the default ("auto") on this clustered
     # corpus triggers the cap, gated separately below.
     t0 = time.time()
-    approx = similarity.cosine_topk_lsh(
-        spark, emb8k, dim=64, max_bucket=None
-    ).toPandas()
+    approx = similarity.cosine_topk_lsh(spark, emb8k, max_bucket=None).toPandas()
     t_sized = time.time() - t0
     a = set(map(tuple, approx[["vec_id", "neighbor_id"]].itertuples(index=False)))
     recall = len(exact8k & a) / len(exact8k)
@@ -166,8 +155,8 @@ def test_lsh_no_degeneration_at_100k(spark):
     sized = similarity.sized_lsh_planes(n)
     assert sized == 11
     t0 = time.time()
-    b = similarity.lsh_buckets(emb, dim=64, n_planes=sized)
-    probes = similarity.lsh_probes(emb, dim=64, n_planes=sized)
+    b = similarity.lsh_buckets(emb, n_planes=sized)
+    probes = similarity.lsh_buckets(emb, n_planes=sized, n_guided=similarity.N_GUIDED)
     sizes = b.groupBy("table", "bucket").count()
     fanout = (
         probes.join(sizes, ["table", "bucket"])
@@ -203,9 +192,7 @@ def test_lsh_bucket_cap_preserves_recall_at_8k(spark, emb8k, exact8k):
     prefix still supplies good candidates).  Uncapped keeps the 0.8
     floor (tested above); the cap's floor is the documented
     graceful-degradation trade."""
-    approx = similarity.cosine_topk_lsh(
-        spark, emb8k, dim=64, max_bucket=256
-    ).toPandas()
+    approx = similarity.cosine_topk_lsh(spark, emb8k, max_bucket=256).toPandas()
     a = set(map(tuple, approx[["vec_id", "neighbor_id"]].itertuples(index=False)))
     recall = len(exact8k & a) / len(exact8k)
     assert recall >= 0.75, recall
@@ -243,20 +230,14 @@ def test_auto_bucket_cap_triggers_on_skew_only(spark, emb8k):
     skew-conditional, not clustering-phobic); a viral corpus (500
     near-identical replicas per base) still does."""
     viral, n = _viral_corpus(spark)
-    skewed = similarity.lsh_buckets(
-        viral, dim=64, n_planes=similarity.sized_lsh_planes(n)
-    )
+    skewed = similarity.lsh_buckets(viral, n_planes=similarity.sized_lsh_planes(n))
     assert similarity.auto_bucket_cap(skewed) == 4 * similarity.TARGET_BUCKET
 
-    mild = similarity.lsh_buckets(
-        emb8k, dim=64, n_planes=similarity.sized_lsh_planes(8000)
-    )
+    mild = similarity.lsh_buckets(emb8k, n_planes=similarity.sized_lsh_planes(8000))
     assert similarity.auto_bucket_cap(mild) is None
 
     raw = spark.read.parquet("/root/testdata/sf0.1/embeddings.parquet")
-    uniform = similarity.lsh_buckets(
-        raw, dim=64, n_planes=similarity.sized_lsh_planes(raw.count())
-    )
+    uniform = similarity.lsh_buckets(raw, n_planes=similarity.sized_lsh_planes(raw.count()))
     assert similarity.auto_bucket_cap(uniform) is None
 
 
@@ -297,8 +278,8 @@ def test_lsh_no_degeneration_at_1M(spark):
     assert sized == 14
 
     t0 = time.time()
-    b = similarity.lsh_buckets(emb, dim=64, n_planes=sized)
-    probes = similarity.lsh_probes(emb, dim=64, n_planes=sized)
+    b = similarity.lsh_buckets(emb, n_planes=sized)
+    probes = similarity.lsh_buckets(emb, n_planes=sized, n_guided=similarity.N_GUIDED)
     sizes = b.groupBy("table", "bucket").count()
     fanout = (
         probes.join(sizes, ["table", "bucket"])
@@ -338,49 +319,37 @@ def test_sized_ivf_tiny_corpora(spark):
     )
 
 
-def test_coarse_ivf_holds_recall_and_cuts_centroid_dots(spark, emb8k, exact8k):
-    """Hierarchical stage-0 (r5: sqrt(n_lists) super-centroids route each
-    query to its top s_probe supers; stage 1 ranks only centroids inside
-    them).  Gates: recall stays >= 0.8 at the 8k sizing, and the
-    per-query centroid-dot budget — n_super + |allowed centroids| — is
-    analytically < half of n_lists (the honest-limit this closes: stage
-    1 no longer evaluates ALL n_lists centroid dots per query)."""
-    approx = similarity.cosine_topk_ivf(spark, emb8k, coarse=True).toPandas()
-    a = set(map(tuple, approx[["vec_id", "neighbor_id"]].itertuples(index=False)))
-    recall = len(exact8k & a) / len(exact8k)
-    assert recall >= 0.8, recall
 
-    n = emb8k.count()
-    nl, _np, _b = similarity.sized_ivf_params(n)
-    n_super, s_probe = similarity.sized_coarse_params(nl)
-    # allowed pool averages nl * s_probe / n_super = ~5/8 nl (the
-    # measured recall-preserving fraction on this worst-case corpus);
-    # the per-query dot budget n_super + ~5/8 nl must stay under 3/4 nl
-    assert n_super + (nl * s_probe) // n_super <= (3 * nl) // 4, (n_super, s_probe, nl)
-
-    # candidate economics must stay in the same regime as the flat probe
-    cand = similarity.ivf_candidate_pairs(spark, emb8k, coarse=True).count()
-    frac = cand / n / n
-    assert frac < 0.05, (cand, frac)
-
-
-def test_coarse_super_fit_matches_flat_kmeans_arithmetic():
-    """_kmeans_np must reproduce kmeans_fit's arithmetic contract on a
-    hand-checkable case: stride seeding, first-max tie-break, half-away
-    integer means, empty clusters keeping their previous centroid."""
+def test_lsh_buckets_read_the_width_from_the_vectors(spark):
+    """16-dimension vectors (every other test uses 64): the kernel takes
+    its planes from the batch's vector width, so its base buckets and
+    guided probes equal a numpy recompute over ``_planes(16, t, n)``."""
     import numpy as np
+    import pandas as pd
 
-    X = np.array([[10, 0], [9, 1], [0, 10], [1, 9], [-10, 0], [-9, -1]], dtype=np.int64)
-    C, assign = similarity._kmeans_np(X, k=3, iterations=3)
-    # three clear direction clusters; membership is pinned exactly —
-    # rows [0,1], [2,3], [4,5] must land together, in distinct clusters
-    assert assign[0] == assign[1]
-    assert assign[2] == assign[3]
-    assert assign[4] == assign[5]
-    assert len({assign[0], assign[2], assign[4]}) == 3
-    # integer means with half-away rounding: cluster of [10,0],[9,1]
-    # -> mean (9.5, 0.5) -> (10, 1); and [-10,0],[-9,-1] -> (-9.5,-0.5)
-    # -> half-AWAY-from-zero (-10, -1), not banker's (-9, 0)
-    assert C[assign[0]].tolist() == [10, 1]
-    assert C[assign[4]].tolist() == [-10, -1]
-    assert C[assign[2]].tolist() == [1, 10]
+    from pydriosm_spark.session import local_frame
+
+    n_planes, g = 5, similarity.N_GUIDED
+    vecs = np.random.default_rng(16).standard_normal((40, 16)).astype(np.float32)
+    emb = local_frame(
+        spark, [(i, v.tolist()) for i, v in enumerate(vecs)], "vec_id long, embedding array<float>"
+    )
+    Q = similarity._qmat(pd.Series(list(vecs)))
+    base, probes = set(), set()
+    for t in range(similarity.N_TABLES):
+        D = Q @ similarity._planes(16, t, n_planes).T  # (40, n_planes)
+        bk = (D > 0).astype(np.int64) @ (1 << np.arange(n_planes))
+        for i in range(len(Q)):
+            base.add((i, t, int(bk[i])))
+            near = sorted(range(n_planes), key=lambda p: (abs(D[i, p]), p))[:g]
+            flips = [1 << p for p in near]
+            flips += [flips[a] ^ flips[c] for a in range(g) for c in range(a + 1, g)]
+            probes |= {(i, t, int(bk[i])), *((i, t, int(bk[i] ^ f)) for f in flips)}
+
+    def rows(df):
+        return sorted(map(tuple, df.toPandas()[["vec_id", "table", "bucket"]].to_numpy().tolist()))
+
+    assert rows(similarity.lsh_buckets(emb, n_planes=n_planes)) == sorted(base)
+    got = rows(similarity.lsh_buckets(emb, n_planes=n_planes, n_guided=g))
+    assert len(got) == len(Q) * similarity.N_TABLES * (1 + g + g * (g - 1) // 2)
+    assert set(got) == probes

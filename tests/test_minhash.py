@@ -33,18 +33,22 @@ EDGE_DOCS = [
     (13, "x y z"),
 ]
 
+# one two-token document spelled with one space, two spaces and a tab:
+# both engines split on any whitespace run, so all three are one shingle
+WHITESPACE_DOCS = [(1, "alpha beta"), (2, "alpha  beta"), (3, "alpha\tbeta")]
+
 
 def _fp(s: str) -> int:
     return int(hashlib.md5(s.encode()).hexdigest()[:15], 16)
 
 
-def _oracle(threshold: int) -> pd.DataFrame:
-    """The oracle's pair rows at ``threshold``: its CTEs up to the
-    fingerprint intersection, with the threshold applied here instead of
-    the registry's fixed one."""
+def _oracle(rows: list, threshold: int) -> pd.DataFrame:
+    """The oracle's pair rows over ``rows`` at ``threshold``: its CTEs up
+    to the fingerprint intersection, with the threshold applied here
+    instead of the registry's fixed one."""
     con = duckdb.connect()
     try:
-        con.register("documents", pd.DataFrame(EDGE_DOCS, columns=["doc_id", "text"]))
+        con.register("documents", pd.DataFrame(rows, columns=["doc_id", "text"]))
         return con.execute(f"""
 WITH {QT._minhash_pairs_ctes()}
 SELECT i.id_a, i.id_b, i.inter, na.n_sh + nb.n_sh - i.inter AS "union",
@@ -57,20 +61,29 @@ WHERE (i.inter * 1000000) // (na.n_sh + nb.n_sh - i.inter) >= {threshold}""").df
         con.close()
 
 
+def _pairs_match_the_oracle(spark, rows: list, threshold: int) -> pd.DataFrame:
+    docs = local_frame(spark, rows, "doc_id BIGINT, text STRING")
+    got = canon(dedup.minhash_lsh_pairs(docs, jaccard_e6_min=threshold).toPandas())
+    want = canon(_oracle(rows, threshold))
+    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+    return got
+
+
 @pytest.mark.parametrize("threshold", [0, 100_000])
 def test_minhash_pairs_match_the_oracle_on_edge_cases(spark, threshold):
     """Null and blank text, one- and two-token documents, a repeated
-    shingle, identical documents and a pair linked only by a shared band
-    minimum give the oracle's rows, at threshold 0 as at the registry's."""
+    shingle, identical documents, a pair linked only by a shared band
+    minimum, and two-token documents whose tokens are split by different
+    whitespace give the oracle's rows, at threshold 0 as at the
+    registry's."""
     a, b = (_fp(s) for s in CONGRUENT)
     assert a != b and a % dedup.MINHASH_P == b % dedup.MINHASH_P
-    docs = local_frame(spark, EDGE_DOCS, "doc_id BIGINT, text STRING")
-    got = canon(dedup.minhash_lsh_pairs(docs, jaccard_e6_min=threshold).toPandas())
-    want = canon(_oracle(threshold))
-    pd.testing.assert_frame_equal(got, want, check_dtype=False, check_exact=True)
+    got = _pairs_match_the_oracle(spark, EDGE_DOCS, threshold)
     pairs = set(zip(got.id_a, got.id_b))
     assert (8, 9) in pairs and (5, 6) in pairs and (2, 3) in pairs, pairs
     assert (11, 12) not in pairs and not any(1 in p for p in pairs), pairs
     # 7's seven shingles are three distinct ones, one of them 13's only one
     row = got[(got.id_a == 7) & (got.id_b == 13)]
     assert (row.inter.tolist(), row.union.tolist()) == ([1], [3]), got
+    ws = _pairs_match_the_oracle(spark, WHITESPACE_DOCS, threshold)
+    assert sorted(zip(ws.id_a, ws.id_b, ws.inter)) == [(1, 2, 1), (1, 3, 1), (2, 3, 1)], ws

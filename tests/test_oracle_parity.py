@@ -17,21 +17,3 @@ def test_query_matches_oracle(spark, name):
         return
     compare(fn(spark, SF_CORRECT), sql, SF_CORRECT)
 
-
-def test_coarse_ivf_matches_oracle(spark):
-    """The opt-in hierarchical IVF stage-0 (r5) vs its own mirrored
-    oracle — not a registry entry (the registry is pinned at the driver
-    gate's 50 queries), so the cross-engine proof lives here."""
-    from pydriosm_spark import queries_text as QT
-    from pydriosm_spark.operators import similarity
-
-    df = similarity.cosine_topk_ivf(
-        spark, QT._emb(spark, SF_CORRECT), k=QT.TOPK, coarse=True
-    )
-    compare(df, QT.oracle_ann_ivf(coarse=True), SF_CORRECT)
-    # the aggressive clustered-corpus setting (explicit narrow s_probe)
-    # must stay cross-engine exact too — the oracle renders the literal
-    df2 = similarity.cosine_topk_ivf(
-        spark, QT._emb(spark, SF_CORRECT), k=QT.TOPK, coarse=True, s_probe=2
-    )
-    compare(df2, QT.oracle_ann_ivf(coarse=True, s_probe=2), SF_CORRECT)

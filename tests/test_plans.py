@@ -223,7 +223,7 @@ def test_lsh_rerank_plan_has_no_hof_dots(spark):
     from pydriosm_spark.operators import similarity
 
     df = similarity.cosine_topk_lsh(
-        spark, spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet"), dim=64
+        spark, spark.read.parquet(f"{SF_SMOKE}/embeddings.parquet")
     )
     p = _plan(df)
     assert "zip_with(" not in p and "aggregate(" not in p, p[:2000]

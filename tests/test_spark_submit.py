@@ -137,8 +137,9 @@ def test_spark_submit_media_job(tmp_path):
 
 @pytest.mark.skipif(shutil.which("spark-submit") is None, reason="spark-submit not on PATH")
 def test_spark_submit_ann_job(tmp_path):
-    """The ANN retrieval job ships the same way; ivf-coarse exercises the
-    hierarchical stage-0 router end-to-end under spark-submit."""
+    """The ANN retrieval job ships the same way; its default method, lsh,
+    runs end-to-end under spark-submit with the embedding width read
+    from the vectors."""
     sys.path.insert(0, "/root/repo")
     import package
 
@@ -154,7 +155,7 @@ def test_spark_submit_ann_job(tmp_path):
             "/root/repo/examples/ann_job.py",
             "/root/testdata/sf0.001",
             out,
-            "ivf-coarse",
+            "lsh",
         ],
         capture_output=True,
         text=True,
@@ -162,7 +163,7 @@ def test_spark_submit_ann_job(tmp_path):
     )
     assert r.returncode == 0, r.stderr[-2000:]
     line = [ln for ln in r.stdout.splitlines() if ln.startswith("ANN_JOB_RESULT")]
-    assert line and "method=ivf-coarse" in line[0], (line, r.stdout[-500:])
+    assert line and "method=lsh" in line[0], (line, r.stdout[-500:])
     # every vector is a query; each gets up to k=5 neighbors
     n_q = int(line[0].split("queries=")[1].split()[0])
     assert n_q > 0, line
