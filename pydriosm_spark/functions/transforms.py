@@ -19,8 +19,12 @@ the reference's transform semantics, including its quirks:
     transformer.py:255-257).
   - Rings are closed shapely-style (first point appended if open).
 
-The vectorized UDF wrappers run these per Arrow batch (the reference
-maps them per-row in pandas, transformer.py:329-338).
+The reference maps these per-row in pandas (transformer.py:329-338).
+Here each has one batch form that the vectorized UDFs run per Arrow
+batch: ``geojson_to_wkt_batch`` parses a batch with one ``json.loads``
+and formats all coordinates of a geometry family at once, keeping the
+per-row builder only for GeometryCollection; ``parse_hstore_batch``
+splits the batch's flattened pair stream with C string ops.
 """
 
 from __future__ import annotations
@@ -159,151 +163,29 @@ def _pair_strs(mat: np.ndarray) -> np.ndarray:
     return _fmt_f64_batch(mat[:, 0]) + " " + _fmt_f64_batch(mat[:, 1])
 
 
-def _ring_strs(rings: list) -> list:
+def _ring_strs(rings: list, gtype: str) -> list:
     """List of per-ring coordinate lists -> per-ring joined coordinate
     strings.  Per-POINT work (float formatting) happens ONCE over the
     whole flattened batch; only the per-ring join is a Python-level loop
     (C ``str.join`` over precomputed pair strings) — the same altitude
-    as the reduceat kernels in geometry/ops.py."""
+    as the reduceat kernels in geometry/ops.py.  Raises ``ValueError``
+    naming ``gtype`` unless every position is exactly two numbers (a z
+    would otherwise re-pair into the next position's x)."""
     if not rings:
         return []
     counts = np.fromiter((len(r) for r in rings), dtype=np.int64, count=len(rings))
-    flat = np.concatenate([np.asarray(r, dtype=np.float64).reshape(-1, 2) for r in rings])
+    try:
+        flat = np.concatenate([np.asarray(r, dtype=np.float64).reshape(len(r), 2) for r in rings])
+    except ValueError:  # ragged positions, or a uniform z
+        raise ValueError(f"{gtype} positions must be exactly two numbers") from None
     pairs = _pair_strs(flat)
     offs = np.concatenate(([0], np.cumsum(counts)))
     return [", ".join(pairs[offs[j]:offs[j + 1]]) for j in range(len(rings))]
 
 
-#: canonical-form prefixes (json.dumps with separators=(",", ":") and
-#: the fixed type-first key order our PBF/OSM builders emit)
-_CANON_PT = '{"type":"Point","coordinates":['
-_CANON_LS = '{"type":"LineString","coordinates":[['
-_CANON_MLS = '{"type":"MultiLineString","coordinates":[[['
-_CANON_PG = '{"type":"Polygon","coordinates":[[['
-_CANON_MP = '{"type":"MultiPolygon","coordinates":[[[['
-
-
-def _is_2d(body: pd.Series) -> pd.Series:
-    """Exactly-2D guard for a sliced canonical coordinate body (ADVICE
-    r4): every separator at EVERY nesting depth (``],[``, ``]],[[``,
-    ``]]],[[[``) contains exactly one ``,`` and one ``],[`` occurrence,
-    so a 2D stream satisfies ``commas == 2*seps + 1`` for any family
-    (Point: seps == 0) while a 3D stream reads ``3n - 1`` commas and
-    falls through to the parse path (which drops/raises on z) instead of
-    silently emitting 3-number tuples."""
-    return body.str.count(",") == 2 * body.str.count(r"\],\[") + 1
-
-
-#: one closed->=4-point ring: first point captured, >= 2 interior
-#: points, last point a backreference to the first.  The capture
-#: re-binds on every iteration of the enclosing repetition, so a single
-#: fullmatch checks EVERY ring of a body (second alternative group for
-#: rings after the first \x00 marker).  Character classes exclude the
-#: separator bytes, so matching is backtracking-free in practice.
-_RING_N = r"[^,\]\x00]+"
-_RING_CLOSED_RE = re.compile(
-    rf"({_RING_N},{_RING_N})(?:\],\[{_RING_N},{_RING_N}){{2,}}\],\[\1"
-    rf"(?:\x00({_RING_N},{_RING_N})(?:\],\[{_RING_N},{_RING_N}){{2,}}\],\[\2)*"
-)
-
-
-def _rings_closed(body: pd.Series) -> pd.Series:
-    """Per-row check that EVERY ring (rows = bodies whose ring markers
-    are already ``\\x00``) is closed (first point == last point) with
-    >= 4 points — i.e. :func:`_close_ring` would be a no-op, so string
-    surgery is byte-safe.  Open / short / degenerate rings (incl. the
-    ``point_as_polygon`` 2-point case) fail and take the parse path.
-    ONE regex pass per row (no per-ring flattening): the ring pattern's
-    backreference re-binds per repetition, closing the check for every
-    ring in a single C-level fullmatch."""
-    return body.str.fullmatch(_RING_CLOSED_RE)
-
-
-def _canon_fix_nums(body: pd.Series) -> pd.Series:
-    """'x.0' integral tokens -> 'x' and '-0' -> '0' (byte-parity with
-    ``_fmt``; CPython float repr never emits any other non-shortest
-    form, which is the canonical-producer contract)."""
-    body = body.str.replace(r"\.0(?=[ ,)]|$)", "", regex=True)
-    return body.str.replace(r"(?<![\d.])-0(?=[ ,)]|$)", "0", regex=True)
-
-
-def _canonical_text_rows(vals: pd.Series) -> pd.Series:
-    """Pure STRING-SURGERY WKT for canonical-form Point / LineString /
-    MultiLineString / Polygon / MultiPolygon rows (object-dtype result;
-    non-matching or not-surgery-safe rows NaN -> parse path).
-    No float round-trip at all: the number bytes in the JSON were
-    written by CPython's ``repr`` (shortest round-trip), so after the
-    integral-token fix they ARE the WKT number bytes — measured ~12x
-    faster than the parse path on way-heavy batches."""
-    out = pd.Series(np.full(len(vals), None, dtype=object), index=vals.index)
-
-    def _points_to_pairs(body: pd.Series) -> pd.Series:
-        body = body.str.replace("],[", "|", regex=False)
-        body = body.str.replace(",", " ", regex=False)
-        return body.str.replace("|", ", ", regex=False)
-
-    m = vals.str.startswith(_CANON_LS) & vals.str.endswith("]]}")
-    if m.any():
-        body = vals[m].str.slice(len(_CANON_LS), -3)
-        body = _points_to_pairs(body[_is_2d(body)])
-        out[body.index] = "LINESTRING (" + _canon_fix_nums(body) + ")"
-
-    m = vals.str.startswith(_CANON_MLS) & vals.str.endswith("]]]}")
-    if m.any():
-        body = vals[m].str.slice(len(_CANON_MLS), -4)
-        body = body[_is_2d(body)]
-        body = body.str.replace("]],[[", "\x00", regex=False)
-        body = _points_to_pairs(body)
-        body = body.str.replace("\x00", "), (", regex=False)
-        out[body.index] = "MULTILINESTRING ((" + _canon_fix_nums(body) + "))"
-
-    # Polygon: rings stay rings; surgery only when every ring is already
-    # closed with >= 4 points (so the parse path's _close_ring is a
-    # no-op) — open/short rings fall through to the parse path.
-    m = vals.str.startswith(_CANON_PG) & vals.str.endswith("]]]}")
-    if m.any():
-        body = vals[m].str.slice(len(_CANON_PG), -4)
-        body = body[_is_2d(body)]
-        if len(body):
-            body = body.str.replace("]],[[", "\x00", regex=False)
-            body = body[_rings_closed(body)]
-        if len(body):
-            body = _points_to_pairs(body)
-            body = body.str.replace("\x00", "), (", regex=False)
-            out[body.index] = "POLYGON ((" + _canon_fix_nums(body) + "))"
-
-    # MultiPolygon (the reference's HEAVIEST layer): the holes-become-
-    # polygons quirk flattens every ring into its own single-ring
-    # polygon, so BOTH the polygon separator (]]],[[[) and the ring
-    # separator (]],[[) map to the same ring boundary.  The degenerate
-    # 2-point first ring (point_as_polygon) fails the >= 4-point check
-    # and parses.
-    m = vals.str.startswith(_CANON_MP) & vals.str.endswith("]]]]}")
-    if m.any():
-        body = vals[m].str.slice(len(_CANON_MP), -5)
-        body = body[_is_2d(body)]
-        if len(body):
-            body = body.str.replace("]]],[[[", "\x00", regex=False)
-            body = body.str.replace("]],[[", "\x00", regex=False)
-            body = body[_rings_closed(body)]
-        if len(body):
-            body = _points_to_pairs(body)
-            body = body.str.replace("\x00", ")), ((", regex=False)
-            out[body.index] = "MULTIPOLYGON (((" + _canon_fix_nums(body) + ")))"
-
-    m = vals.str.startswith(_CANON_PT) & vals.str.endswith("]}")
-    if m.any():
-        body = vals[m].str.slice(len(_CANON_PT), -2)
-        # exactly 2D (the per-row path drops a z; surgery can't)
-        body = body[_is_2d(body)].str.replace(",", " ", regex=False)
-        out[body.index] = "POINT (" + _canon_fix_nums(body) + ")"
-
-    return out
-
-
-def geojson_to_wkt_batch(s: pd.Series, assume_canonical: bool = False) -> pd.Series:
+def geojson_to_wkt_batch(s: pd.Series) -> pd.Series:
     """Batch path for :func:`geojson_to_wkt` over a series of GeoJSON
-    strings — identical output, no per-row lambda (VERDICT r4 item 2):
+    strings — identical output, no per-row lambda:
 
     * ONE ``json.loads`` per batch (the strings wrap into a single JSON
       array, so parsing is one C call);
@@ -312,43 +194,11 @@ def geojson_to_wkt_batch(s: pd.Series, assume_canonical: bool = False) -> pd.Ser
     * assembly joins precomputed pair strings per ring / per geometry;
     * only GeometryCollection (the rare other_relations shape) falls
       back to the per-geometry builder — over already-parsed dicts.
-
-    ``assume_canonical=True`` additionally enables the STRING-SURGERY
-    fast path for Point / LineString / MultiLineString / Polygon /
-    MultiPolygon rows in the canonical form our own PBF/OSM builders
-    emit (``json.dumps`` with ``separators=(",", ":")``, type key
-    first): ~12x faster — the number bytes are reused verbatim instead
-    of being parsed and re-formatted.  Polygon families take surgery
-    only when every ring is already closed with >= 4 points (so ring
-    closure / the degenerate-ring quirk are no-ops); 3D coordinate
-    streams are rejected by a comma-parity check at every family.
-    OPT-IN ONLY: the producer must guarantee json.dumps serialization
-    (external JSON may carry non-shortest numbers like ``0.50`` that a
-    prefix check cannot detect); rows of other types — and anything not
-    matching a canonical prefix or failing a safety check — take the
-    parse path, so semantics (ring closure, quirks, EMPTY) are
-    unchanged.
     """
     out = np.full(len(s), None, dtype=object)
     mask = s.notna().to_numpy()
     if not mask.any():
         return pd.Series(out, index=s.index)
-    if assume_canonical:
-        sv = s[s.notna()]
-        fast = _canonical_text_rows(sv)
-        done = fast.notna()
-        if done.any():
-            slow_idx = sv.index[~done]
-            slow = (
-                geojson_to_wkt_batch(s.loc[slow_idx].reset_index(drop=True))
-                if len(slow_idx)
-                else pd.Series([], dtype=object)
-            )
-            res = pd.Series(out, index=s.index)
-            res.loc[sv.index[done]] = fast[done]
-            if len(slow_idx):
-                res.loc[slow_idx] = slow.to_numpy()
-            return res
     vals = s.to_numpy(dtype=object)[mask]
     geoms = json.loads("[" + ",".join(vals) + "]")
     types = np.array([g["type"] for g in geoms], dtype=object)
@@ -364,7 +214,7 @@ def geojson_to_wkt_batch(s: pd.Series, assume_canonical: bool = False) -> pd.Ser
     idx = np.nonzero(types == "LineString")[0]
     if len(idx):
         coords = [geoms[i]["coordinates"] for i in idx]
-        body = _ring_strs(coords)
+        body = _ring_strs(coords, "LineString")
         res[idx] = [
             "LINESTRING EMPTY" if len(c) == 0 else "LINESTRING (" + b + ")"
             for c, b in zip(coords, body)
@@ -374,7 +224,7 @@ def geojson_to_wkt_batch(s: pd.Series, assume_canonical: bool = False) -> pd.Ser
     if len(idx):
         lines = [geoms[i]["coordinates"] for i in idx]
         nlines = [len(ls) for ls in lines]
-        body = _ring_strs([l for ls in lines for l in ls])
+        body = _ring_strs([l for ls in lines for l in ls], "MultiLineString")
         offs = np.concatenate(([0], np.cumsum(nlines)))
         res[idx] = [
             "MULTILINESTRING EMPTY" if nlines[j] == 0 else
@@ -388,7 +238,7 @@ def geojson_to_wkt_batch(s: pd.Series, assume_canonical: bool = False) -> pd.Ser
     if len(idx):
         rings_per = [[_close_ring(r) for r in geoms[i]["coordinates"]] for i in idx]
         nrings = [len(rs) for rs in rings_per]
-        body = _ring_strs([r for rs in rings_per for r in rs])
+        body = _ring_strs([r for rs in rings_per for r in rs], "Polygon")
         offs = np.concatenate(([0], np.cumsum(nrings)))
         res[idx] = [
             "POLYGON EMPTY" if nrings[j] == 0 else
@@ -408,7 +258,7 @@ def geojson_to_wkt_batch(s: pd.Series, assume_canonical: bool = False) -> pd.Ser
             for i in idx
         ]
         nrings = [len(rs) for rs in rings_per]
-        body = _ring_strs([r for rs in rings_per for r in rs])
+        body = _ring_strs([r for rs in rings_per for r in rs], "MultiPolygon")
         offs = np.concatenate(([0], np.cumsum(nrings)))
         res[idx] = [
             "MULTIPOLYGON ("
@@ -501,11 +351,3 @@ def hstore_udf(s: pd.Series) -> pd.Series:
 def geojson_wkt_udf(s: pd.Series) -> pd.Series:
     return geojson_to_wkt_batch(s)
 
-
-@F.pandas_udf(StringType())
-def geojson_wkt_canonical_udf(s: pd.Series) -> pd.Series:
-    """For geometry columns OUR OWN builders serialized (json.dumps,
-    separators=(",", ":")): enables the ~12x string-surgery fast path
-    for Point/LineString/MultiLineString/Polygon/MultiPolygon (polygon
-    rings must be closed with >= 4 points); everything else parses."""
-    return geojson_to_wkt_batch(s, assume_canonical=True)

@@ -114,11 +114,13 @@ def test_polygon_measures_batch_equals_per_row_forms():
 
 
 def test_geojson_batch_equals_per_row():
-    """The vectorized batch path (VERDICT r4 item 2: one json.loads per
-    batch + flattened coordinate formatting) must equal the per-row
-    builder byte-for-byte across every geometry family, integral and
-    shortest-repr floats, holes-become-polygons MultiPolygons, the
-    degenerate-ring quirk, empty geometries, and nulls."""
+    """The vectorized batch path (one json.loads per batch + flattened
+    coordinate formatting) must equal the per-row builder byte-for-byte
+    across every geometry family, integral, exponent, negative-zero and
+    shortest-repr floats, closed, open and short rings, holes,
+    holes-become-polygons MultiPolygons, the degenerate-ring quirk, a
+    3D point (z dropped), empty geometries and nulls, in both spaced and
+    compact JSON."""
     import json
 
     import pandas as pd
@@ -150,62 +152,65 @@ def test_geojson_batch_equals_per_row():
              {"type": "Polygon",
               "coordinates": [[[0, 0], [1, 0], [1, 1]], [[5, 5], [6, 5], [6, 6]]]},
          ]},
+        {"type": "Point", "coordinates": [1e-07, -0.0]},
+        {"type": "Point", "coordinates": [1.5, 2.5, 3.5]},  # z dropped
+        {"type": "LineString", "coordinates": [[0.1, 0.2], [3.0, -4.5], [1e-07, 2.0]]},
+        {"type": "MultiLineString",
+         "coordinates": [[[0.5, 1.5], [2.0, 3.0]], [[4.25, 5.0], [6.0, 7.125], [8.0, 9.0]]]},
+        {"type": "Polygon",  # closed but 3 points -> padded to 4
+         "coordinates": [[[0.0, 0.0], [2.0, 0.0], [0.0, 0.0]]]},
+        {"type": "Polygon",  # closed shell and closed hole
+         "coordinates": [[[0.0, 0.0], [9.5, 0.0], [9.5, 9.5], [0.0, 0.0]],
+                         [[2.25, 2.25], [3.0, 2.25], [3.0, 3.0], [2.25, 2.25]]]},
+        {"type": "MultiPolygon",  # negative zero
+         "coordinates": [[[[-0.5134241, 52.6555853], [-0.51, 52.66],
+                           [-0.0, 52.0], [-0.5134241, 52.6555853]]]]},
     ]
     raw = [json.dumps(g) for g in geoms]
+    raw += [json.dumps(g, separators=(",", ":")) for g in geoms]
     s = pd.Series(raw[:3] + [None] + raw[3:] + [None], dtype=object)
     got = geojson_to_wkt_batch(s)
     want = s.map(lambda x: geojson_to_wkt(json.loads(x)), na_action="ignore")
     assert list(got) == list(want)
     assert got[3] is None and got[len(s) - 1] is None
+    assert got[1] == "POINT (1 -2)"
+    assert got[13] == "POINT (1e-07 0)"
 
 
-def test_geojson_canonical_fast_path_equals_parse_path():
-    """assume_canonical=True must equal the parse path byte-for-byte on
-    canonical json.dumps output (incl. integral, exponent, and -0.0
-    coordinates), and FALL BACK to parsing for anything not in
-    canonical form (spaced JSON, other types, empty coords, 3D
-    points)."""
+def test_geojson_rejects_positions_that_are_not_pairs():
+    """A 3D position in a line or ring must raise on both paths, not
+    re-pair into the next position's x (even value counts) or fail in
+    a reshape (odd counts); the batch error names the geometry type."""
     import json
 
     import pandas as pd
+    import pytest
 
     from pydriosm_spark.functions.transforms import geojson_to_wkt_batch
 
-    canon = [
-        {"type": "Point", "coordinates": [-0.5134241, 52.6555853]},
-        {"type": "Point", "coordinates": [1.0, -2.0]},
-        {"type": "Point", "coordinates": [1e-07, -0.0]},
-        {"type": "LineString", "coordinates": [[0.1, 0.2], [3.0, -4.5], [1e-07, 2.0]]},
-        {"type": "MultiLineString",
-         "coordinates": [[[0.5, 1.5], [2.0, 3.0]], [[4.25, 5.0], [6.0, 7.125], [8.0, 9.0]]]},
-    ]
-    rows = [json.dumps(g, separators=(",", ":")) for g in canon]
-    # non-canonical / fallback rows interleaved
-    rows += [
-        json.dumps(canon[0]),                               # spaced separators
-        json.dumps({"type": "LineString", "coordinates": []},
-                   separators=(",", ":")),                  # EMPTY
-        json.dumps({"type": "Polygon",
-                    "coordinates": [[[0, 0], [2, 0], [2, 2]]]},
-                   separators=(",", ":")),                  # other type
-        json.dumps({"type": "Point", "coordinates": [1.5, 2.5, 3.5]},
-                   separators=(",", ":")),                  # 3D point
-        None,
-    ]
-    s = pd.Series(rows, dtype=object)
-    fast = geojson_to_wkt_batch(s, assume_canonical=True)
-    slow = geojson_to_wkt_batch(s)
-    assert list(fast) == list(slow)
-    assert fast[1] == "POINT (1 -2)"
-    assert fast[2] == "POINT (1e-07 0)"
-    assert fast[len(rows) - 1] is None
+    even = [[0, 0, 1], [2, 0, 1], [2, 2, 1], [0, 0, 1]]  # 12 values
+    odd = [[0, 0, 1], [2, 0], [2, 2], [0, 0]]  # 9 values
+    for ring in (even, odd):
+        for gtype, coords in [
+            ("LineString", ring),
+            ("MultiLineString", [[[5, 5], [6, 6]], ring]),
+            ("Polygon", [ring]),
+            ("MultiPolygon", [[[[5, 5], [6, 5], [6, 6], [5, 5]]], [ring]]),
+        ]:
+            g = {"type": gtype, "coordinates": coords}
+            with pytest.raises(ValueError):
+                geojson_to_wkt(g)
+            with pytest.raises(ValueError, match=rf"^{gtype} positions"):
+                geojson_to_wkt_batch(pd.Series([json.dumps(g)], dtype=object))
 
 
-def test_geojson_canonical_fast_path_on_pbf_layers(spark, pbf_lake):
-    """The true 100 TB layer-conversion input: lines, multilinestrings
-    and multipolygons geometry strings (produced by the PBF assemblers
-    via json.dumps) through the fast path == parse path on every
-    feature."""
+def test_geojson_batch_on_pbf_layers(spark, pbf_lake):
+    """The true layer-conversion input: lines, multilinestrings and
+    multipolygons geometry strings (produced by the PBF assemblers via
+    json.dumps) through the batch converter == per-feature
+    geojson_to_wkt on every feature."""
+    import json as _json
+
     import pandas as pd
 
     from pydriosm_spark.functions.transforms import geojson_to_wkt_batch
@@ -215,26 +220,25 @@ def test_geojson_canonical_fast_path_on_pbf_layers(spark, pbf_lake):
         geoms = pd.Series(
             [r["geometry"] for r in df.select("geometry").collect()], dtype=object
         )
-        fast = geojson_to_wkt_batch(geoms, assume_canonical=True)
-        slow = geojson_to_wkt_batch(geoms)
-        assert list(fast) == list(slow), name
+        want = [geojson_to_wkt(_json.loads(g)) for g in geoms]
+        assert list(geojson_to_wkt_batch(geoms)) == want, name
         assert len(geoms) > (5 if name == "multilinestrings" else 1000)
 
 
-def test_canonical_wkt_udf_on_pbf_layers(spark, pbf_lake):
-    """The fused read->transform flow: the canonical WKT UDF over PBF
-    layer rows == per-feature geojson_to_wkt."""
+def test_wkt_udf_on_pbf_layers(spark, pbf_lake):
+    """The fused read->transform flow: the WKT UDF over PBF layer rows
+    == per-feature geojson_to_wkt on every feature."""
     import json as _json
 
-    from pydriosm_spark.functions.transforms import geojson_wkt_canonical_udf
+    from pydriosm_spark.functions.transforms import geojson_wkt_udf
 
-    for name in ["lines", "multipolygons"]:
+    for name in ["lines", "multilinestrings", "multipolygons"]:
         df = spark.read.format("osmpbf").option("layer", name).load(pbf_lake)
-        df = df.withColumn("geometry_wkt", geojson_wkt_canonical_udf("geometry"))
-        rows = df.select("id", "geometry", "geometry_wkt").limit(500).collect()
-        assert len(rows) == 500
+        df = df.withColumn("geometry_wkt", geojson_wkt_udf("geometry"))
+        rows = df.select("geometry", "geometry_wkt").collect()
+        assert len(rows) > (5 if name == "multilinestrings" else 1000), name
         for r in rows:
-            assert r["geometry_wkt"] == geojson_to_wkt(_json.loads(r["geometry"]))
+            assert r["geometry_wkt"] == geojson_to_wkt(_json.loads(r["geometry"])), name
 
 
 def test_hstore_batch_equals_scalar():
@@ -279,64 +283,3 @@ def test_hstore_batch_equals_scalar():
         else:
             assert g == w, (i, corpus[i], g, w)
 
-
-def test_geojson_canonical_polygon_multipolygon_fast_path():
-    """Canonical-form Polygon/MultiPolygon string surgery (VERDICT r4
-    item 4 — multipolygons are the reference's heaviest layer) must
-    equal the parse path byte-for-byte when all rings are closed with
-    >= 4 points, and FALL BACK to parsing for open rings, short rings,
-    the degenerate 2-point first ring, and 3D coordinates."""
-    import json
-
-    import pandas as pd
-
-    from pydriosm_spark.functions.transforms import (
-        _canonical_text_rows,
-        geojson_to_wkt_batch,
-    )
-
-    fast_expected = [
-        # closed square, integral coords -> "0 0" etc.
-        {"type": "Polygon",
-         "coordinates": [[[0.0, 0.0], [4.0, 0.0], [4.0, 4.0], [0.0, 4.0], [0.0, 0.0]]]},
-        # polygon with hole: both rings closed -> hole STAYS a ring
-        {"type": "Polygon",
-         "coordinates": [[[0.0, 0.0], [9.5, 0.0], [9.5, 9.5], [0.0, 0.0]],
-                         [[2.25, 2.25], [3.0, 2.25], [3.0, 3.0], [2.25, 2.25]]]},
-        # multipolygon, 2 polygons, hole flattens into its own polygon
-        {"type": "MultiPolygon",
-         "coordinates": [[[[0.0, 0.0], [9.0, 0.0], [9.0, 9.0], [0.0, 0.0]],
-                          [[2.0, 2.0], [3.0, 2.0], [3.0, 3.0], [2.0, 2.0]]],
-                         [[[20.5, 20.5], [21.0, 20.5], [21.0, 21.0], [20.5, 20.5]]]]},
-        # shortest-repr floats + negative zero
-        {"type": "MultiPolygon",
-         "coordinates": [[[[-0.5134241, 52.6555853], [-0.51, 52.66],
-                           [-0.0, 52.0], [-0.5134241, 52.6555853]]]]},
-    ]
-    fallback = [
-        # open ring (parse path closes it)
-        {"type": "Polygon",
-         "coordinates": [[[0.0, 0.0], [2.0, 0.0], [2.0, 2.0]]]},
-        # closed but only 3 points (parse path pads to 4)
-        {"type": "Polygon",
-         "coordinates": [[[0.0, 0.0], [2.0, 0.0], [0.0, 0.0]]]},
-        # degenerate 2-point first ring (point_as_polygon quirk)
-        {"type": "MultiPolygon",
-         "coordinates": [[[[-0.6920145, 52.6753268], [-0.6920145, 52.6753268]]]]},
-        # 3D ring
-        {"type": "Polygon",
-         "coordinates": [[[0.0, 0.0, 1.0], [2.0, 0.0, 1.0], [2.0, 2.0, 1.0],
-                          [0.0, 0.0, 1.0]]]},
-    ]
-    rows = [json.dumps(g, separators=(",", ":")) for g in fast_expected + fallback]
-    s = pd.Series(rows + [None], dtype=object)
-    fast = geojson_to_wkt_batch(s, assume_canonical=True)
-    slow = geojson_to_wkt_batch(s)
-    assert list(fast) == list(slow)
-    # the fast rows really took surgery; the fallback rows really didn't
-    surg = _canonical_text_rows(pd.Series(rows, dtype=object))
-    assert surg.notna().tolist() == [True] * len(fast_expected) + [False] * len(fallback)
-    assert fast[0] == "POLYGON ((0 0, 4 0, 4 4, 0 4, 0 0))"
-    assert fast[2] == ("MULTIPOLYGON (((0 0, 9 0, 9 9, 0 0)), "
-                       "((2 2, 3 2, 3 3, 2 2)), "
-                       "((20.5 20.5, 21 20.5, 21 21, 20.5 20.5)))")
