@@ -6,8 +6,6 @@ from pydriosm_spark.cells.quadcell import (  # noqa: F401
     parent,
     parent_expr,
     children,
-    disk,
-    ring,
     cell_bounds,
     cover_bbox,
     compact,

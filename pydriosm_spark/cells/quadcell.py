@@ -8,9 +8,9 @@ A quadtree over the equirectangular projection of WGS84:
 * packed 64-bit id: ``(r << 58) | (x << 29) | y``
 
 Like H3/S2 this gives O(1) point->cell, parent/child traversal (bit
-shifts), k-rings (Chebyshev rings), and *compact covers* (mixed-resolution
-cell sets covering a region — coarse cells where fully contained, fine
-cells on the boundary).  Unlike H3 the cells are axis-aligned rectangles,
+shifts), and *compact covers* (mixed-resolution cell sets covering a
+region — coarse cells where fully contained, fine cells on the
+boundary).  Unlike H3 the cells are axis-aligned rectangles,
 which makes the index expressible as pure integer/float arithmetic in BOTH
 Spark native column expressions (JVM-side, whole-stage codegen — no Python
 in the hot path) and ANSI SQL for the DuckDB differential oracle.
@@ -87,44 +87,6 @@ def children(cid: int):
     x, y = int(x) << 1, int(y) << 1
     cr = r + 1
     return [int(from_xy(x + dx, y + dy, cr)) for dx in (0, 1) for dy in (0, 1)]
-
-
-def disk(cid: int, k: int):
-    """All cells within Chebyshev distance k (the filled k-disk)."""
-    r = int(cell_res(cid))
-    n = 1 << r
-    x, y = (int(v) for v in cell_xy(cid))
-    out = []
-    for dx in range(-k, k + 1):
-        nx = x + dx
-        if nx < 0 or nx >= n:
-            continue
-        for dy in range(-k, k + 1):
-            ny = y + dy
-            if 0 <= ny < n:
-                out.append(int(from_xy(nx, ny, r)))
-    return out
-
-
-def ring(cid: int, k: int):
-    """The hollow ring at exactly Chebyshev distance k."""
-    if k == 0:
-        return [int(cid)]
-    r = int(cell_res(cid))
-    n = 1 << r
-    x, y = (int(v) for v in cell_xy(cid))
-    out = []
-    for dx in range(-k, k + 1):
-        nx = x + dx
-        if nx < 0 or nx >= n:
-            continue
-        for dy in range(-k, k + 1):
-            if max(abs(dx), abs(dy)) != k:
-                continue
-            ny = y + dy
-            if 0 <= ny < n:
-                out.append(int(from_xy(nx, ny, r)))
-    return out
 
 
 def cell_bounds(cid):

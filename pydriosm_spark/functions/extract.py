@@ -30,7 +30,7 @@ def extract_text(webpages: DataFrame) -> DataFrame:
     )
 
 
-def extract_mentions(webpages: DataFrame, scope: str = "document") -> DataFrame:
+def extract_mentions(webpages: DataFrame) -> DataFrame:
     """webpages -> one row per geocoded mention.
 
     Output: (doc_id, mention_idx, lat_str, lon_str, lat, lon, u, v)
@@ -39,26 +39,15 @@ def extract_mentions(webpages: DataFrame, scope: str = "document") -> DataFrame:
     the canonical string parse, and (u, v) are exact integer 1e-5-degree
     offsets from the fixture bbox origin.
 
-    ``scope="document"`` (default) runs ONE regex pass over the decoded
-    page — the geo-token grammar is unambiguous, so scanning markup too
-    is harmless and halves the string traffic of the hot path (at 8
-    memory-bandwidth-saturated threads the body-extraction pre-pass was
-    ~40% of extraction cost: one extra full-page regex scan plus a
-    body-sized string copy).  ``scope="body"`` first cuts the page body
-    (:func:`extract_text`) and scans only it — the strict variant for
-    pages whose head/attributes may carry spurious geo-shaped tokens;
-    both scopes are differentially tested and agree whenever tokens
-    appear only in the body.
+    ONE regex pass over the decoded page: the geo-token grammar is
+    unambiguous, so scanning markup too is harmless and halves the string
+    traffic of the hot path (at 8 memory-bandwidth-saturated threads a
+    body-extraction pre-pass was ~40% of extraction cost: one extra
+    full-page regex scan plus a body-sized string copy).  A geo token
+    outside ``<p>…</p>`` counts as a mention.
     """
-    if scope == "body":
-        w = extract_text(webpages)
-        src = F.col("extracted_text")
-    elif scope == "document":
-        w = webpages
-        src = F.decode(F.col("html"), "utf-8")
-    else:
-        raise ValueError(f"extract_mentions: unknown scope {scope!r}")
-    toks = w.select(
+    src = F.decode(F.col("html"), "utf-8")
+    toks = webpages.select(
         F.regexp_extract("url", r"/page/([0-9]+)$", 1).cast("long").alias("doc_id"),
         F.posexplode(F.regexp_extract_all(src, F.lit(GEO_RE), F.lit(1))).alias(
             "mention_idx", "token"

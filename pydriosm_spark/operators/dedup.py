@@ -300,28 +300,24 @@ def connected_components(
     return labels
 
 
-def simhash_fragments(text: str, dialect: str) -> tuple[str, str]:
-    """(hash_array_sql, signature_sql) for a 60-bit SimHash of ``text``.
+def simhash_fragments(text: str) -> tuple[str, str]:
+    """(hash_array_sql, signature_sql) for a 60-bit SimHash of ``text``,
+    in DuckDB SQL.
 
     Token hash = first 15 md5 hex digits as a 60-bit int; bit k of the
     signature is set iff tokens with bit k set are a (weak) majority.
     ``signature_sql`` references the bound array as ``__h`` and the token
     count as ``__n`` — bind both first (withColumn / CTE).
 
-    Used for the DuckDB oracle (and as a reference HOF form); the Spark
-    engine path is :func:`simhash_signature` — explode + one hash
-    aggregate, fully whole-stage-codegen (Spark evaluates HOF lambdas
-    interpreted, ~10x slower than codegen; 60 ``filter()`` passes per row
-    was the repo's own anti-pattern).
+    Used for the DuckDB oracle; the Spark engine path is
+    :func:`simhash_signature` — explode + one hash aggregate, fully
+    whole-stage-codegen (Spark evaluates HOF lambdas interpreted, ~10x
+    slower than codegen; 60 ``filter()`` passes per row was the repo's
+    own anti-pattern).
     """
-    if dialect == "spark":
-        toks = f"split(trim({text}), '\\\\s+')"
-        hashes = f"transform({toks}, t -> CAST(conv(substr(md5(t), 1, 15), 16, 10) AS BIGINT))"
-        cnt = lambda k: f"size(filter(__h, h -> ((shiftright(h, {k})) & 1) = 1))"  # noqa: E731
-    else:
-        toks = f"string_split_regex(trim({text}), '\\s+')"
-        hashes = f"list_transform({toks}, t -> (('0x' || substr(md5(t), 1, 15))::BIGINT))"
-        cnt = lambda k: f"len(list_filter(__h, h -> ((h >> {k}) & 1) = 1))"  # noqa: E731
+    toks = f"string_split_regex(trim({text}), '\\s+')"
+    hashes = f"list_transform({toks}, t -> (('0x' || substr(md5(t), 1, 15))::BIGINT))"
+    cnt = lambda k: f"len(list_filter(__h, h -> ((h >> {k}) & 1) = 1))"  # noqa: E731
     bits = [
         f"(CASE WHEN 2 * {cnt(k)} >= __n THEN CAST({1 << k} AS BIGINT) ELSE CAST(0 AS BIGINT) END)"
         for k in range(SIMHASH_BITS)
@@ -368,7 +364,7 @@ def simhash_signature(
 
     Tokens explode (codegen), the 60-bit hash is projected once per token,
     then 60 bit-count sums + a token count run in a single partial+final
-    hash agg — only |docs| x 61 longs shuffle.  Matches the HOF/oracle
+    hash agg — only |docs| x 61 longs shuffle.  Matches the DuckDB oracle
     form bit-for-bit (duplicates kept: explode == full-array filter()).
     The parallelism repartition is keyed on ``key`` so the aggregate
     collapses onto the same exchange (``_ensure_parallelism``)."""

@@ -5,16 +5,19 @@ fixtures) so distances are exact integers — ``d2 = (u-pu)^2 + (v-pv)^2``
 — and results are bit-stable across engines and parallelism levels.
 Ties break deterministically on ``(d2, place_id)``.
 
-``knn_bruteforce`` — exact top-k against the whole place side.  With
-``broadcast=True`` (the plan for |places| up to ~10^4 even at 100 TB of
-points) the place side, pulled once as Arrow, ships as a task broadcast
-into the shared tiled top-k kernel (operators/topk.py): query-row tiles
-of ``TILE_ELEMS // |places|`` rows, partition-select + id tie-break per
-tile, zero shuffles.  ``broadcast=False`` keeps the JVM block-partitioned
-CartesianProduct + WindowGroupLimit window for place sides too big to
-ship.
+The place-side row count picks every plan; no argument does:
 
-``knn_cell`` — the scale path for large place sets, exact:
+* ``knn_auto`` — the entry point.  One Arrow pull of at most
+  ``BRUTE_FORCE_PLACES + 1`` places decides: a side that fits is the
+  broadcast index of the brute-force kernel, a larger one goes to
+  ``knn_cell``.
+* ``knn_bruteforce`` — exact top-k against the whole place side (at most
+  ``topk.MAX_INDEX_ROWS`` rows, raises beyond): the place side, pulled
+  once as Arrow, ships as a task broadcast into the shared tiled top-k
+  kernel (operators/topk.py): query-row tiles of ``TILE_ELEMS //
+  |places|`` rows, partition-select + id tie-break per tile, zero
+  shuffles.
+* ``knn_cell`` — the scale path for large place sets, exact:
 
 1. **Disk probe** — bucket places into grid cells of size S
    (``cell_size="auto"`` sizes S from place density so the
@@ -30,15 +33,16 @@ ship.
    the same exchange.
 2. **Fallback** — uncertified points (present in the same materialized
    top-k thanks to the sentinel, coordinates included) go through the
-   brute-force path.  Exactness is unconditional; S and R only tune how
+   brute force.  Exactness is unconditional; S and R only tune how
    much traffic takes the cheap path.
 
+Up to ``topk.MAX_INDEX_ROWS`` places the probe join broadcasts the place
+buckets and the fallback is the broadcast kernel.  Past it both stop
+broadcasting: the probe is a shuffle join on the derived cell keys and
+the fallback a block-partitioned CartesianProduct + WindowGroupLimit.
 Skew: points concentrate in hot cells, but the probe join key is the
-*place* bucket and the place side is broadcast by default
-(``knn_auto`` keeps it so up to ``topk.MAX_INDEX_ROWS`` places).  With
-``broadcast_places=False`` both sides shuffle on the bucket without
-salting; AQE's skew-join splitting (on in the session factory) is then
-the only guard against a hot bucket.
+*place* bucket; on the shuffle plan AQE's skew-join splitting (on in the
+session factory) is the only guard against a hot bucket.
 """
 
 from __future__ import annotations
@@ -47,6 +51,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from pydriosm_spark.operators import topk
+
+#: knn_auto takes the broadcast brute force up to this many places; the
+#: disk probe wins above it
+BRUTE_FORCE_PLACES = 4096
 
 
 def _topk(cand: DataFrame, point_keys: list[str], k: int) -> DataFrame:
@@ -73,30 +81,28 @@ def knn_bruteforce(
     point_keys: list[str] | None = None,
     u: str = "u",
     v: str = "v",
-    broadcast: bool = True,
 ) -> DataFrame:
     """Exact top-k places per point: (point_keys, rank, place_id, d2),
     ordered as ``ORDER BY d2, place_id``.  ``place_id`` must be unique
     on the place side and ``point_keys`` unique on the point side.
 
-    ``broadcast=True``: the place side (at most ``topk.MAX_INDEX_ROWS``
-    rows, raises beyond) is pulled once as Arrow, sorted by place_id
-    and shipped as a task broadcast; each Arrow batch of points is
-    ranked by the shared tiled top-k kernel (:mod:`.topk`) on exact
-    integer d2, with no shuffle.  Per-task memory is a few
-    ``topk.TILE_ELEMS``-element tiles at any batch and place count.
-
-    ``broadcast=False`` keeps the JVM block-partitioned CartesianProduct
-    + WindowGroupLimit plan — required when |places| exceeds executor
-    memory (knn_cell's uncertified-point fallback threads its
-    ``broadcast_places`` flag here so a >2M-place side is never
-    broadcast, ADVICE r3)."""
-    point_keys = point_keys or ["doc_id", "mention_idx"]
-    if not broadcast:
-        cand = _with_d2(points.crossJoin(places), u, v)
-        return _topk(cand, point_keys, k)
+    The place side (at most ``topk.MAX_INDEX_ROWS`` rows, raises beyond)
+    is pulled once as Arrow, sorted by place_id and shipped as a task
+    broadcast; each Arrow batch of points is ranked by the shared tiled
+    top-k kernel (:mod:`.topk`) on exact integer d2, with no shuffle.
+    Per-task memory is a few ``topk.TILE_ELEMS``-element tiles at any
+    batch and place count."""
     index = places.select("place_id", "pu", "pv")
     return _broadcast_topk(points, index, topk.pull_index(index, "place_id"), k, point_keys, u, v)
+
+
+def _cartesian_topk(
+    points: DataFrame, places: DataFrame, k: int, point_keys: list[str],
+    u: str = "u", v: str = "v",
+) -> DataFrame:
+    """The brute force for a place side too big to ship: block-partitioned
+    CartesianProduct + WindowGroupLimit, same rows as :func:`knn_bruteforce`."""
+    return _topk(_with_d2(points.crossJoin(places), u, v), point_keys, k)
 
 
 def _broadcast_topk(
@@ -271,7 +277,6 @@ def knn_cell(
     point_keys: list[str] | None = None,
     u: str = "u",
     v: str = "v",
-    broadcast_places: bool = True,
 ) -> DataFrame:
     """Exact kNN join: disk-probe equi-join + brute-force fallback.
 
@@ -285,18 +290,20 @@ def knn_cell(
     exact for EVERY (cell_size, disk_radius): the knobs only pick the
     plan, the fallback guarantees the answer.
 
-    ``broadcast_places=False`` drops the broadcast hint so the disk
-    probe runs as a shuffle join on the derived cell keys — required
-    once the place side outgrows an executor (the equality condition
-    ``cx + dx == pcx`` is key-extractable, so Catalyst plans a regular
-    hash/sort-merge join; equivalence-tested against the broadcast
-    form).  The flag threads into the uncertified-point fallback too:
-    ``knn_bruteforce(..., broadcast=False)`` runs the residual cross
-    join as a partitioned CartesianProduct rather than broadcasting a
-    place side the flag says is too big (ADVICE r3)."""
+    The place count picks broadcast or shuffle for the probe join and
+    the fallback alike: up to ``topk.MAX_INDEX_ROWS`` places the place
+    buckets are broadcast and the fallback is :func:`knn_bruteforce`;
+    past it the probe is a shuffle join on the derived cell keys (the
+    equality ``cx + dx == pcx`` is key-extractable, so Catalyst plans a
+    regular hash/sort-merge join) and the fallback a partitioned
+    CartesianProduct.  The count is the one the ``"auto"`` sizing
+    returns; a pinned ``cell_size`` costs one ``places.count()``."""
     point_keys = point_keys or ["doc_id", "mention_idx"]
     if cell_size == "auto":
-        cell_size, _ = auto_cell_size(places, k, disk_radius)
+        cell_size, n = auto_cell_size(places, k, disk_radius)
+    else:
+        n = places.count()
+    small = n <= topk.MAX_INDEX_ROWS
     S, R = int(cell_size), int(disk_radius)
 
     placed = places.select(
@@ -330,7 +337,7 @@ def knn_cell(
         ),
     )
     probe = pts.withColumn("__o", F.explode(offsets))
-    placed_side = F.broadcast(placed) if broadcast_places else placed
+    placed_side = F.broadcast(placed) if small else placed
     cand = _with_d2(
         probe.join(
             placed_side,
@@ -388,10 +395,8 @@ def knn_cell(
     slow_pts = nn.filter((F.col("rank") == 1) & (F.col("__n_ball") < k)).select(
         *point_keys, u, v
     )
-    slow = knn_bruteforce(
-        slow_pts, places, k=k, point_keys=point_keys, u=u, v=v,
-        broadcast=broadcast_places,
-    )
+    brute = knn_bruteforce if small else _cartesian_topk
+    slow = brute(slow_pts, places, k, point_keys, u, v)
     return fast.unionByName(slow)
 
 
@@ -400,36 +405,23 @@ def knn_auto(
     points: DataFrame,
     places: DataFrame,
     k: int = 3,
-    broadcast_nlj_threshold: int = 4096,
-    **kw,
+    point_keys: list[str] | None = None,
+    u: str = "u",
+    v: str = "v",
 ) -> DataFrame:
-    """Adaptive dispatch on |places|: up to ``broadcast_nlj_threshold``
-    places the broadcast brute force (:func:`knn_bruteforce`, the tiled
-    numpy top-k kernel — no explode, no shuffle) beats the cell path;
-    above it the disk-probe plan (:func:`knn_cell`) takes over; and past
-    ``topk.MAX_INDEX_ROWS`` places the probe join and its fallback stop
-    broadcasting (shuffle join on the derived cell keys, CartesianProduct
-    fallback).
+    """Adaptive dispatch on |places|: up to ``BRUTE_FORCE_PLACES`` places
+    the broadcast brute force (:func:`knn_bruteforce`, the tiled numpy
+    top-k kernel — no explode, no shuffle) beats the cell path; above it
+    the disk-probe plan (:func:`knn_cell`) takes over, and its sizing
+    count decides whether the probe and fallback broadcast.
 
     The decision rides the index pull (:func:`topk.pull_index` with
-    ``limit=broadcast_nlj_threshold``): one Arrow collect of at most
-    ``broadcast_nlj_threshold + 1`` places either is the brute force's
+    ``limit=BRUTE_FORCE_PLACES``): one Arrow collect of at most
+    ``BRUTE_FORCE_PLACES + 1`` places either is the brute force's
     broadcast index or shows the place side is large, and only then is
-    it counted: once, by the ``"auto"`` cell sizing, whose count also
-    sets ``broadcast_places`` unless the caller passed it.  The pull
-    stays under the gate: a threshold above ``topk.MAX_INDEX_ROWS`` with
-    a place side past the gate raises, as the brute force's own pull
-    does."""
+    it counted: once, by the ``"auto"`` cell sizing."""
     index = places.select("place_id", "pu", "pv")
-    t = topk.pull_index(index, "place_id", limit=broadcast_nlj_threshold)
+    t = topk.pull_index(index, "place_id", limit=BRUTE_FORCE_PLACES)
     if t is not None:
-        return _broadcast_topk(
-            points, index, t, k,
-            **{k_: v for k_, v in kw.items() if k_ in ("point_keys", "u", "v")},
-        )
-    n = None
-    if kw.get("cell_size", "auto") == "auto":
-        kw["cell_size"], n = auto_cell_size(places, k, kw.get("disk_radius", 1))
-    if "broadcast_places" not in kw:
-        kw["broadcast_places"] = (places.count() if n is None else n) <= topk.MAX_INDEX_ROWS
-    return knn_cell(spark, points, places, k=k, **kw)
+        return _broadcast_topk(points, index, t, k, point_keys, u, v)
+    return knn_cell(spark, points, places, k, point_keys=point_keys, u=u, v=v)

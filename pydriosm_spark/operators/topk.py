@@ -1,6 +1,6 @@
 """Exact top-k of every query row against a small broadcast index.
 
-The shared core of ``knn.knn_bruteforce(broadcast=True)`` and
+The shared core of ``knn.knn_bruteforce`` and
 ``similarity.cosine_topk_bruteforce``.  Each caller supplies only its
 score tile (lower is better); this module owns the index pull and the
 selection:
@@ -9,8 +9,8 @@ selection:
   Arrow table — ``LIMIT MAX_INDEX_ROWS + 1`` and a raise past the gate,
   so the driver pull is bounded whatever the input — sorted by id.  The
   caller broadcasts the numpy arrays it derives from that table; a
-  caller with a lower threshold of its own (``knn_auto``) passes it as
-  ``limit`` and gets None past it.
+  caller with a threshold of its own (``knn_auto``) passes it as
+  ``limit`` and gets None past it or past the gate.
 * :func:`batch_topk` ranks one Arrow batch in query-row tiles of
   ``max(1, TILE_ELEMS // |index|)`` rows, so the score matrix and its
   temporaries stay near ``8 * TILE_ELEMS`` bytes (16 MB) each, at any
@@ -33,8 +33,8 @@ from typing import Callable
 import numpy as np
 from pyspark.sql import DataFrame
 
-#: index-side cap for every broadcast top-k plan; knn_auto routes larger
-#: place sides to the shuffle-join plan
+#: index-side cap for every broadcast top-k plan; knn_cell plans larger
+#: place sides as a shuffle join with a CartesianProduct fallback
 MAX_INDEX_ROWS = 2_000_000
 #: score-matrix elements per tile (2M x 8 bytes = 16 MB)
 TILE_ELEMS = 1 << 21
@@ -43,17 +43,17 @@ TILE_ELEMS = 1 << 21
 def pull_index(index: DataFrame, id_col: str, limit: int | None = None):
     """``index`` as a pyarrow Table sorted by ``id_col`` (stable), pulled
     with one Arrow collect of at most ``min(limit, MAX_INDEX_ROWS) + 1``
-    rows.  None when ``index`` holds more than ``limit`` rows (a caller's
-    own threshold, at most the gate); raises ValueError beyond
-    ``MAX_INDEX_ROWS`` rows."""
+    rows.  With a ``limit`` (a caller's own threshold), None when
+    ``index`` holds more than ``min(limit, MAX_INDEX_ROWS)`` rows; without
+    one, raises ValueError beyond ``MAX_INDEX_ROWS`` rows."""
     cap = MAX_INDEX_ROWS if limit is None else min(limit, MAX_INDEX_ROWS)
     t = index.limit(cap + 1).toArrow()
     if t.num_rows > cap:
-        if limit is not None and limit <= MAX_INDEX_ROWS:
+        if limit is not None:
             return None
         raise ValueError(
             f"broadcast top-k index would hold > {MAX_INDEX_ROWS} rows; use a "
-            "distributed plan (knn broadcast=False, cosine_topk_lsh / cosine_topk_ivf)"
+            "distributed plan (knn_cell, cosine_topk_lsh / cosine_topk_ivf)"
         )
     return t.sort_by(id_col)
 

@@ -191,7 +191,7 @@ def oracle_text_profile() -> str:
     CTE (``__h``/``__n``) the standalone oracle used; langid is the
     scalar CASE form (differentially equal to the engine's explode+agg,
     as the standalone pair proved for three rounds)."""
-    hashes, total = dedup.simhash_fragments("text", "duckdb")
+    hashes, total = dedup.simhash_fragments("text")
     cols = T.quality_select_sql("text", "duckdb")
     sel = ", ".join(f"{sql} AS {name}" for name, sql in cols.items())
     return f"""
@@ -331,7 +331,7 @@ def oracle_simhash_pairs(
 ) -> str:
     """Mirrors dedup.simhash_pairs at any (radius, blocks): one
     (subset_id, composite_value) key per (blocks-radius)-subset."""
-    hashes, total = dedup.simhash_fragments("text", "duckdb")
+    hashes, total = dedup.simhash_fragments("text")
     subsets = dedup.simhash_key_subsets(radius, blocks)
     bits = dedup.SIMHASH_BITS // blocks
     keys = ", ".join(

@@ -75,20 +75,25 @@ def test_ann_recall_floor(spark):
         assert recalls[name] >= floor, f"{name} recall {recalls[name]:.3f} below {floor}"
 
 def test_extract_scope_document_equals_body_on_body_only_pages(spark):
-    """The one-pass document-scope extraction (the hot-path default:
-    one regex pass, no body-sized copy) must equal the strict
-    body-scope variant whenever geo tokens appear only in the page
-    body — true for every synthetic page — and differ exactly on
-    tokens planted outside the body."""
+    """The one-pass extraction scans the whole decoded page; whenever geo
+    tokens appear only in the page body — true for every synthetic page —
+    its mentions equal the tokens of the extracted body text, and a token
+    planted outside the body is a mention too."""
+    import re
+
     from pydriosm_spark.functions import extract
     from pydriosm_spark.sources import synth
 
-    web = synth.webpages(spark, "/root/testdata/sf0.001")
-    doc = extract.extract_mentions(web, scope="document")
-    body = extract.extract_mentions(web, scope="body")
-    assert sorted(map(tuple, doc.collect())) == sorted(map(tuple, body.collect()))
+    web = synth.webpages(spark, SF_SMOKE)
+    doc = extract.extract_mentions(web).select("doc_id", "mention_idx", "lat_str", "lon_str")
+    body = [
+        (int(re.search(r"/page/([0-9]+)$", r["url"]).group(1)), i, *tok.split(","))
+        for r in extract.extract_text(web).select("url", "extracted_text").collect()
+        for i, tok in enumerate(re.findall(extract.GEO_RE, r["extracted_text"]))
+    ]
+    assert body and sorted(map(tuple, doc.collect())) == sorted(body)
 
-    # a token OUTSIDE <p>...</p>: document scope sees it, body scope not
+    # a token OUTSIDE <p>...</p> is found as well
     rows = [
         (
             "https://x.org/page/7",
@@ -102,9 +107,4 @@ def test_extract_scope_document_equals_body_on_body_only_pages(spark):
     got_doc = sorted(
         (r["mention_idx"], r["lat_str"]) for r in extract.extract_mentions(w2).collect()
     )
-    got_body = sorted(
-        (r["mention_idx"], r["lat_str"])
-        for r in extract.extract_mentions(w2, scope="body").collect()
-    )
     assert got_doc == [(0, "1.5"), (1, "3.5")]
-    assert got_body == [(0, "3.5")]

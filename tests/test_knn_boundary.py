@@ -11,6 +11,7 @@ import pytest
 from pydriosm_spark.operators import knn
 
 S, R = 10, 2  # cell size, disk radius -> ball radius R*S = 20
+KEYS = ["doc_id", "mention_idx"]
 
 
 def _knn_pairs(df):
@@ -114,28 +115,39 @@ def test_boundary_point_is_uncertified(spark, boundary_case):
     assert out == {(0, 0, 1): (1, 400)}
 
 
-def test_knn_cell_shuffle_form_equals_broadcast(spark):
-    """broadcast_places=False (the large-place-side plan: shuffle join on
-    the derived cell keys) must produce exactly the broadcast form's
-    result — and the plan must actually drop the broadcast."""
+def test_knn_cell_shuffle_form_equals_broadcast(spark, monkeypatch):
+    """Past the broadcast gate knn_cell, called with its defaults, plans
+    the large-place-side form: a shuffle join on the derived cell keys
+    and a CartesianProduct fallback.  Neither the probe join (planned
+    inside the eager checkpoint) nor the fallback may carry a broadcast
+    HINT, and the rows equal the CartesianProduct brute force.  (At
+    fixture scale Spark may still auto-broadcast from stats — that is
+    the planner's call, which honest stats at 2M+ places would flip.)"""
     from pydriosm_spark.functions import extract
+    from pydriosm_spark.operators import topk
     from pydriosm_spark.sources import synth
     from tests.conftest import SF_SMOKE
 
     points = extract.extract_mentions(synth.webpages(spark, SF_SMOKE))
     places = synth.places_df(spark)
-    a = knn.knn_cell(spark, points, places, k=3).toPandas()
-    b_df = knn.knn_cell(spark, points, places, k=3, broadcast_places=False)
-    # ADVICE r3: the flag must reach the uncertified-point fallback too —
-    # no join anywhere in the plan (probe OR brute-force residual cross
-    # join) may carry a broadcast HINT that would override Spark's size
-    # statistics once the place side outgrows an executor.  (At fixture
-    # scale Spark may still auto-broadcast from stats — that's the
-    # planner's call, which honest stats at 2M+ places would flip.)
+    monkeypatch.setattr(topk, "MAX_INDEX_ROWS", 10)
+    probes, frame = [], type(points)
+    checkpoint = frame.localCheckpoint
+
+    def spy(df, *a, **kw):
+        probes.append(df._jdf.queryExecution().optimizedPlan().toString())
+        return checkpoint(df, *a, **kw)
+
+    monkeypatch.setattr(frame, "localCheckpoint", spy)
+    b_df = knn.knn_cell(spark, points, places, k=3)
     p = b_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "strategy=broadcast" not in p, p[:3000]
-    b = b_df.toPandas()
+    assert len(probes) == 1 and "Join LeftOuter" in probes[0], probes
+    for plan in (probes[0], p):
+        assert "strategy=broadcast" not in plan, plan[:3000]
+    assert "Join Cross" in p, p[:3000]
     key = ["doc_id", "mention_idx", "rank"]
+    a = knn._cartesian_topk(points, places, 3, key[:2]).toPandas()
+    b = b_df.toPandas()
     import pandas as pd
 
     pd.testing.assert_frame_equal(
@@ -202,30 +214,31 @@ def test_auto_cell_size_ball_invariant_across_disk_radius(spark):
 
 
 @pytest.mark.parametrize("threshold", [4096, 3])
-def test_knn_auto_decides_with_its_index_pull(spark, boundary_case, threshold):
+def test_knn_auto_decides_with_its_index_pull(spark, boundary_case, monkeypatch, threshold):
     """knn_auto equals the CartesianProduct brute force on both sides of
-    its threshold; below it, the one Arrow pull that decides is also the
-    broadcast index (one job, no count)."""
+    ``BRUTE_FORCE_PLACES``; below it, the one Arrow pull that decides is
+    also the broadcast index (one job, no count)."""
     points, places = boundary_case
+    monkeypatch.setattr(knn, "BRUTE_FORCE_PLACES", threshold)
     sc, group = spark.sparkContext, f"knn_auto_plan_{threshold}"
     sc.setJobGroup(group, "knn_auto planning")
     try:
-        got = knn.knn_auto(spark, points, places, k=2, broadcast_nlj_threshold=threshold,
-                           cell_size=S, disk_radius=R)
+        got = knn.knn_auto(spark, points, places, k=2)
         jobs = sc.statusTracker().getJobIdsForGroup(group)
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
-    assert _knn_pairs(got) == _knn_pairs(knn.knn_bruteforce(points, places, k=2, broadcast=False))
+    assert _knn_pairs(got) == _knn_pairs(knn._cartesian_topk(points, places, 2, KEYS))
     if threshold == 4096:  # the 6 places take the brute-force branch
         assert len(jobs) == 1, jobs
 
 
-def test_knn_auto_counts_the_place_side_once(spark, boundary_case):
-    """Past the threshold the ``"auto"`` cell sizing's count also decides
-    ``broadcast_places``: knn_auto's jobs are its index pull, the sizing's
-    and knn_cell's own, with no separate count of the place side; with a
-    fixed cell size and ``broadcast_places`` passed, nothing is counted."""
+def test_knn_auto_counts_the_place_side_once(spark, boundary_case, monkeypatch):
+    """Past ``BRUTE_FORCE_PLACES`` the ``"auto"`` cell sizing's count also
+    decides broadcast or shuffle: knn_auto's jobs are its index pull, the
+    sizing's and knn_cell's own, with no separate count of the place
+    side.  A pinned cell size costs exactly one count."""
     points, places = boundary_case
+    monkeypatch.setattr(knn, "BRUTE_FORCE_PLACES", 3)
     sc = spark.sparkContext
 
     def jobs(group, fn):
@@ -238,14 +251,11 @@ def test_knn_auto_counts_the_place_side_once(spark, boundary_case):
 
     (cs, n), sizing = jobs("knn_sizing", lambda: knn.auto_cell_size(places, 2, 1))
     assert n == 6
-    _, cell = jobs("knn_cell_auto", lambda: knn.knn_cell(
+    _, count = jobs("knn_count", places.count)
+    _, cell_auto = jobs("knn_cell_auto", lambda: knn.knn_cell(spark, points, places, k=2))
+    _, cell_pinned = jobs("knn_cell_pinned", lambda: knn.knn_cell(
         spark, points, places, k=2, cell_size=cs, disk_radius=1))
-    got, auto = jobs("knn_auto_auto", lambda: knn.knn_auto(
-        spark, points, places, k=2, broadcast_nlj_threshold=3))
-    _, cell_fixed = jobs("knn_cell_fixed", lambda: knn.knn_cell(
-        spark, points, places, k=2, cell_size=S, disk_radius=R, broadcast_places=False))
-    _, fixed = jobs("knn_auto_fixed", lambda: knn.knn_auto(
-        spark, points, places, k=2, broadcast_nlj_threshold=3, cell_size=S, disk_radius=R,
-        broadcast_places=False))
-    assert (auto, fixed) == (1 + sizing + cell, 1 + cell_fixed)
-    assert _knn_pairs(got) == _knn_pairs(knn.knn_bruteforce(points, places, k=2, broadcast=False))
+    got, auto = jobs("knn_auto_auto", lambda: knn.knn_auto(spark, points, places, k=2))
+    assert auto == 1 + cell_auto
+    assert cell_auto - sizing == cell_pinned - count
+    assert _knn_pairs(got) == _knn_pairs(knn._cartesian_topk(points, places, 2, KEYS))

@@ -233,12 +233,12 @@ def test_lsh_rerank_plan_has_no_hof_dots(spark):
 def test_knn_topk_gets_window_group_limit(spark):
     """The rank<=k filter must rewrite to WindowGroupLimit (per-group
     top-k before the full sort) in the JVM brute-force kNN window (the
-    broadcast=False plan for place sides too big to ship; the
-    broadcast=True path is a numpy kernel since r6)."""
+    CartesianProduct fallback for place sides too big to ship; the
+    broadcast brute force is a numpy kernel since r6)."""
     from pydriosm_spark.operators import knn
 
     m = extract.extract_mentions(synth.webpages(spark, SF_SMOKE))
-    p = _plan(knn.knn_bruteforce(m, synth.places_df(spark), k=3, broadcast=False))
+    p = _plan(knn._cartesian_topk(m, synth.places_df(spark), 3, ["doc_id", "mention_idx"]))
     assert "WindowGroupLimit" in p, p[:2000]
 
 
@@ -338,16 +338,14 @@ def test_text_profile_single_explode_single_agg(spark):
 
 
 def test_extraction_plan_is_one_pass(spark):
-    """r5: document-scope extraction runs ONE regex pass over the decoded
-    page — no body-extraction pre-pass (a second full-page scan plus a
-    body-sized copy).  The strict body scope keeps the pre-pass."""
+    """r5: extraction runs ONE regex pass over the decoded page — no
+    body-extraction pre-pass (a second full-page scan plus a body-sized
+    copy)."""
     web = synth.webpages(spark, SF_SMOKE)
     p = _plan(extract.extract_mentions(web))
     assert p.count("regexp_extract_all") == 1, p[:2000]
-    # the body-cut regexp_extract appears only for the url doc_id parse
+    # the only regexp_extract is the url doc_id parse
     assert p.count("regexp_extract(") == 1, p[:2000]
-    p_body = _plan(extract.extract_mentions(web, scope="body"))
-    assert p_body.count("regexp_extract(") == 2, p_body[:2000]
 
 
 def test_knn_cell_certification_rides_topk_window(spark):

@@ -130,8 +130,8 @@ def test_parse_pbf_want_selector_is_consistent():
 
 
 def test_knn_bruteforce_numpy_kernel_matches_jvm_window(spark):
-    """broadcast=True (numpy kernel) and broadcast=False (JVM cartesian +
-    window) must return identical rows — including (d2, place_id)
+    """The broadcast numpy kernel and the JVM cartesian + window fallback
+    must return identical rows — including (d2, place_id)
     tie-breaks, which the synthetic grid below forces."""
     from pyspark.sql import functions as F
 
@@ -149,8 +149,8 @@ def test_knn_bruteforce_numpy_kernel_matches_jvm_window(spark):
         ((F.col("id") % 10) * 10).cast("long").alias("pu"),
         ((F.col("id") % 4) * 25).cast("long").alias("pv"),
     )
-    a = knn.knn_bruteforce(pts, places, k=5, broadcast=True).toPandas()
-    b = knn.knn_bruteforce(pts, places, k=5, broadcast=False).toPandas()
+    a = knn.knn_bruteforce(pts, places, k=5).toPandas()
+    b = knn._cartesian_topk(pts, places, 5, ["doc_id", "mention_idx"]).toPandas()
     cols = sorted(a.columns)
     a = a[cols].sort_values(cols, ignore_index=True)
     b = b[cols].sort_values(cols, ignore_index=True)
