@@ -10,7 +10,9 @@ reference's equivalent is its per-feature GDAL ExportToJson decode loop
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+import math
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from pydriosm_spark.sources import synth
@@ -63,9 +65,22 @@ def extract_mentions(webpages: DataFrame) -> DataFrame:
         "lon", F.col("lon_str").cast("double")
     )
     return out.withColumn(
-        "u",
-        F.round((F.col("lon") - synth.LON0_E5 / 100000.0) * 100000.0).cast("long"),
+        "u", round_half_up((F.col("lon") - synth.LON0_E5 / 100000.0) * 100000.0)
     ).withColumn(
-        "v",
-        F.round((F.col("lat") - synth.LAT0_E5 / 100000.0) * 100000.0).cast("long"),
+        "v", round_half_up((F.col("lat") - synth.LAT0_E5 / 100000.0) * 100000.0)
     )
+
+
+#: the largest double below 0.5
+_BELOW_HALF = math.nextafter(0.5, 0.0)
+
+
+def round_half_up(x: Column) -> Column:
+    """``CAST(round(x) AS BIGINT)`` (half away from zero) as one add and
+    one cast: ``round`` on a double builds a ``BigDecimal`` from
+    ``Double.toString`` per value.  Adding the largest double below 0.5
+    rather than 0.5 keeps +-0.49999999999999994 from rounding to +-1
+    (``x + 0.5`` ties to 1.0 there) and integers past 2^52 from rounding
+    to even, so the longs equal ``round``'s for every double; values
+    outside the long range still raise under ANSI."""
+    return (x + F.when(x < 0, -_BELOW_HALF).otherwise(_BELOW_HALF)).cast("long")

@@ -4,7 +4,10 @@ These run inside Arrow pandas UDFs (batch-vectorized) or driver-side for
 small broadcast geometry.  The ray-casting point-in-polygon here is the
 "refinement" half of the filter-refine spatial join the north rule
 mandates; the "filter" half is the quadcell cover equi-join
-(pydriosm_spark/operators/spatial_join.py).
+(pydriosm_spark/operators/spatial_join.py).  The DataFrame-side joins
+refine in ``points_in_polygon``; the broadcast zone join ray-casts the
+same ``polygon_edges`` rows with the same arithmetic as a native Spark
+expression, so the two agree row for row.
 """
 
 from __future__ import annotations
@@ -22,28 +25,23 @@ def polygon_bbox(rings) -> tuple[float, float, float, float]:
     )
 
 
-def _ray_cast_ring(px: np.ndarray, py: np.ndarray, ring: np.ndarray) -> np.ndarray:
-    """Vectorized even-odd ray cast of many points against one ring.
-
-    Returns a bool array that flips per crossing.  Points exactly on an
-    edge are engine-defined (callers keep test points off boundaries).
-    Complexity O(V * P) with pure numpy ops — no Python per point.
-    """
-    ring = np.asarray(ring, dtype=np.float64)
-    x0, y0 = ring[:-1, 0], ring[:-1, 1]
-    x1, y1 = ring[1:, 0], ring[1:, 1]
-    inside = np.zeros(px.shape[0], dtype=bool)
-    for i in range(x0.shape[0]):  # loop over VERTICES (small), not points
-        xa, ya, xb, yb = x0[i], y0[i], x1[i], y1[i]
-        if ya == yb:
+def polygon_edges(rings) -> np.ndarray:
+    """The edges an even-odd ray cast of a polygon tests, as (E, 4)
+    ``[xa, ya, xb, yb]`` rows in ring order: rings of fewer than 3
+    vertices are skipped, open rings are closed, and horizontal edges
+    are dropped (a horizontal ray never crosses one).  The broadcast zone
+    join ships these rows to its native ray cast, so both engines test
+    the same edges."""
+    segs = []
+    for ring in rings:
+        r = np.asarray(ring, dtype=np.float64)
+        if r.shape[0] < 3:
             continue
-        cond = (ya > py) != (yb > py)
-        if not cond.any():
-            continue
-        t = (py - ya) / (yb - ya)
-        xint = xa + t * (xb - xa)
-        inside ^= cond & (px < xint)
-    return inside
+        if not np.array_equal(r[0], r[-1]):
+            r = np.vstack([r, r[:1]])
+        segs.append(np.hstack([r[:-1, :2], r[1:, :2]]))
+    e = np.vstack(segs) if segs else np.empty((0, 4))
+    return e[e[:, 1] != e[:, 3]]
 
 
 def points_in_polygon(px, py, rings) -> np.ndarray:
@@ -51,17 +49,20 @@ def points_in_polygon(px, py, rings) -> np.ndarray:
 
     ``rings``: list of (N,2) arrays, first = outer shell, rest = holes.
     Even-odd over all rings implements shell-minus-holes directly.
+    Points exactly on an edge are engine-defined (callers keep test
+    points off boundaries).  O(E * P) with pure numpy ops: the loop is
+    over edges, never over points.
     """
     px = np.asarray(px, dtype=np.float64)
     py = np.asarray(py, dtype=np.float64)
     inside = np.zeros(px.shape[0], dtype=bool)
-    for ring in rings:
-        r = np.asarray(ring, dtype=np.float64)
-        if r.shape[0] < 3:
+    for xa, ya, xb, yb in polygon_edges(rings):
+        cond = (ya > py) != (yb > py)
+        if not cond.any():
             continue
-        if not np.array_equal(r[0], r[-1]):
-            r = np.vstack([r, r[:1]])
-        inside ^= _ray_cast_ring(px, py, r)
+        t = (py - ya) / (yb - ya)
+        xint = xa + t * (xb - xa)
+        inside ^= cond & (px < xint)
     return inside
 
 

@@ -8,24 +8,25 @@ The core operator the north rule mandates.  Classic two-phase plan:
    every resolution present in the cover (bounded spread, ≤4) with pure
    native column arithmetic and equi-joins on the packed cell id.
 
-2. **Refine** — join hits in *partial* cells are ray-cast in an Arrow
-   kernel against their polygon's rings.  Hits in *full* cells skip
-   Python entirely — for typical covers that is the large majority of
-   rows.
+2. **Refine** — join hits in *partial* cells are ray-cast against their
+   polygon's edges.  Hits in *full* cells skip the ray cast — for
+   typical covers that is the large majority of rows.
 
 The form of the polygon side picks the plan; there is no mode knob:
 
 * a driver list (:func:`spatial_join_points_polygons`): the cover is
-  built on the driver and **broadcast**, the rings ride an
-  ``sc.broadcast``.  The fact side never shuffles, so hot cells cannot
-  skew it.  The cover enters the plan as an Arrow local relation
-  (``session.local_frame``, a JVM ``LocalTableScan``), so the PIP
-  refine is the join's only Python stage.
+  built on the driver and **broadcast**.  The fact side never shuffles,
+  so hot cells cannot skew it.  The cover enters the plan as an Arrow
+  local relation (``session.local_frame``, a JVM ``LocalTableScan``)
+  whose partial rows carry the polygon edges that can cross a ray from
+  their cell, and the refine is a native filter over them (Spark's
+  ``aggregate`` over the edge array), so the join has no Python stage.
 * a DataFrame (:func:`spatial_join_points_polygons_distributed`,
   :func:`spatial_join_polygons_polygons`): the cover is built in
   ``mapInPandas`` and joined with a shuffle on cell.  The points join
   salts hot cells (``hot_cell_salts`` + ``salted_join`` from
-  operators/skew.py, ``TARGET_ROWS_PER_TASK`` rows per salted task).
+  operators/skew.py, ``TARGET_ROWS_PER_TASK`` rows per salted task)
+  and refines its partial hits in an Arrow kernel.
 
 Reference parity: pydriosm has no joins at all (SURVEY.md §2.3); this is
 the engine's replacement for its per-feature GDAL containment-free model.
@@ -37,12 +38,12 @@ from typing import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import BooleanType
 
 from pydriosm_spark.cells import quadcell
-from pydriosm_spark.geometry.ops import points_in_polygon, polygons_intersect
+from pydriosm_spark.geometry.ops import points_in_polygon, polygon_edges, polygons_intersect
 from pydriosm_spark.operators.skew import hot_cell_salts, salted_join
 from pydriosm_spark.session import local_frame
 
@@ -51,12 +52,41 @@ from pydriosm_spark.session import local_frame
 MAX_FLAT_CELLS = 65_536
 # Cells with more probe rows than this are salted in the shuffle join.
 TARGET_ROWS_PER_TASK = 1_000_000
-# build_cover memo size; one join takes two entries (compact + flat).
+# Size of each memo: build_cover's (one join takes two entries, compact
+# + flat) and the broadcast join's cover tables (one per join).
 COVER_MEMO_ENTRIES = 8
+# The edge clip widens a partial cell by this fraction of its size, far
+# above the float error of ``quadcell.cell_expr`` and of the crossing.
+EDGE_CLIP_PAD = 1 / 1024
 
 POLYGON_SCHEMA = "feature_id long, rings array<array<array<double>>>"
+EDGE_FIELDS = ("xa", "ya", "xb", "yb")
+COVER_SCHEMA = (
+    "feature_id int, cell long, full boolean, edges array<struct<"
+    + ", ".join(f"{c}: double" for c in EDGE_FIELDS)
+    + ">>"
+)
 
-_COVER_MEMO: dict = {}  # insertion-ordered: the first key is the oldest
+# insertion-ordered: the first key is the oldest
+_COVER_MEMO: dict = {}
+_TABLE_MEMO: dict = {}
+
+
+def _geometry_key(polygons: Sequence[dict]) -> tuple:
+    return tuple(
+        (
+            int(p["feature_id"]),
+            tuple(np.asarray(r, dtype=np.float64).tobytes() for r in p["rings"]),
+        )
+        for p in polygons
+    )
+
+
+def _memo_put(memo: dict, key, value):
+    if len(memo) >= COVER_MEMO_ENTRIES:
+        del memo[next(iter(memo))]
+    memo[key] = value
+    return value
 
 
 def build_cover(polygons: Sequence[dict], res: int, min_res: int | None = None):
@@ -74,17 +104,7 @@ def build_cover(polygons: Sequence[dict], res: int, min_res: int | None = None):
     and the same polygon set is typically joined many times per session.
     The memo keeps the newest ``COVER_MEMO_ENTRIES`` covers.
     """
-    key = (
-        res,
-        min_res,
-        tuple(
-            (
-                int(p["feature_id"]),
-                tuple(np.asarray(r, dtype=np.float64).tobytes() for r in p["rings"]),
-            )
-            for p in polygons
-        ),
-    )
+    key = (res, min_res, _geometry_key(polygons))
     if key in _COVER_MEMO:
         return _COVER_MEMO[key]
     if min_res is None:
@@ -99,10 +119,7 @@ def build_cover(polygons: Sequence[dict], res: int, min_res: int | None = None):
         rows = _descend(build_cover(polygons, res), min_res)
     else:
         raise ValueError(f"min_res must be in [res - {quadcell.COVER_SPREAD}, res]")
-    if len(_COVER_MEMO) >= COVER_MEMO_ENTRIES:
-        del _COVER_MEMO[next(iter(_COVER_MEMO))]
-    _COVER_MEMO[key] = rows
-    return rows
+    return _memo_put(_COVER_MEMO, key, rows)
 
 
 def _descend(rows: list, min_res: int) -> list:
@@ -125,6 +142,111 @@ def _descend(rows: list, min_res: int) -> list:
     poly = np.cumsum(np.r_[0, fid[1:] != fid[:-1]])[src]
     order = np.lexsort((kids, poly))
     return list(zip(fid[src][order].tolist(), kids[order].tolist(), full[src][order].tolist()))
+
+
+def _clip_edges(edges: dict, fids: np.ndarray, cells: np.ndarray, res: int):
+    """The edges each partial cover row carries: those of its feature
+    that can flip a ray cast from a point in its cell.  An edge can
+    flip it only if its y-range overlaps the cell's row band and it does
+    not lie wholly left of the cell; the band and the left bound are
+    widened by ``EDGE_CLIP_PAD`` of a cell, and clamped like
+    ``cell_expr`` (a point off the grid lands in a border cell), so the
+    clip drops no edge that can flip.
+
+    ``edges``: feature id -> ``polygon_edges`` rows; ``fids``, ``cells``:
+    the partial rows (all at ``res``).  Returns (counts, rows): partial row
+    i carries the next counts[i] rows of ``rows``.
+
+    Vectorized over all features: each edge is paired with the (feature,
+    row band) groups it overlaps, then each pair with the cells of that
+    group left of the edge's right end (a prefix of the group in x
+    order).  Memory is the output plus one pair per band an edge
+    overlaps, never a cells x edges mask.
+    """
+    n = 1 << res
+    ufid, frank = np.unique(fids, return_inverse=True)
+    per = [edges[int(f)] for f in ufid]
+    e = np.vstack(per) if per else np.empty((0, 4))
+    erank = np.repeat(np.arange(len(per)), [len(x) for x in per])
+
+    def grid(v, origin, span, pad):
+        return np.clip(np.floor((v - origin) / span * n + pad), 0, n - 1).astype(np.int64)
+
+    ey0 = grid(np.minimum(e[:, 1], e[:, 3]), -90.0, 180.0, -EDGE_CLIP_PAD)
+    ey1 = grid(np.maximum(e[:, 1], e[:, 3]), -90.0, 180.0, EDGE_CLIP_PAD)
+    ex1 = grid(np.maximum(e[:, 0], e[:, 2]), -180.0, 360.0, EDGE_CLIP_PAD)
+
+    cx, cy = quadcell.cell_xy(cells)
+    order = np.lexsort((cx, cy, frank))  # by feature, row band, x
+    groups, g_start, g_rank = np.unique(
+        (frank * n + cy)[order], return_index=True, return_inverse=True
+    )
+    xkey = g_rank * n + cx[order]  # ascending
+    g0 = np.searchsorted(groups, erank * n + ey0, side="left")
+    g1 = np.searchsorted(groups, erank * n + ey1, side="right")
+    pe, pg = _expand(np.arange(len(e)), g0, np.maximum(g1 - g0, 0))
+    start = g_start[pg]
+    end = np.searchsorted(xkey, pg * n + ex1[pe], side="right")
+    ce, pos = _expand(pe, start, end - start)
+    row = order[pos]
+    keep = np.lexsort((ce, row))
+    return np.bincount(row, minlength=len(cells)), e[ce[keep]]
+
+
+def _expand(ids: np.ndarray, first: np.ndarray, count: np.ndarray):
+    """(ids[i], first[i] + j) for every i and j < count[i]."""
+    rep = np.repeat(np.arange(len(ids)), count)
+    return ids[rep], first[rep] + np.arange(rep.size) - np.repeat(np.cumsum(count) - count, count)
+
+
+def _cover_table(polygons: Sequence[dict], res: int):
+    """The broadcast join's cover as an Arrow table in ``COVER_SCHEMA``
+    (full rows carry null ``edges``, partial rows their clipped edges)
+    plus the probe resolutions.  The flat cover is used while it has at
+    most ``MAX_FLAT_CELLS`` cells, counted from the compact cover without
+    building it.  Memoized like ``build_cover``, so a warm join does no
+    per-row Python work."""
+    key = (res, MAX_FLAT_CELLS, _geometry_key(polygons))
+    if key in _TABLE_MEMO:
+        return _TABLE_MEMO[key]
+    compact = build_cover(polygons, res)
+    cres = quadcell.cell_res(np.array([c for _, c, _ in compact], dtype=np.int64))
+    if int((np.int64(1) << (2 * (res - cres))).sum()) <= MAX_FLAT_CELLS:
+        rows, res_set = build_cover(polygons, res, min_res=res), [res]
+    else:
+        rows, res_set = compact, sorted(set(cres.tolist()))
+    fid = np.array([r[0] for r in rows], dtype=np.int64)
+    cell = np.array([r[1] for r in rows], dtype=np.int64)
+    full = np.array([r[2] for r in rows], dtype=bool)
+    counts = np.zeros(len(rows), dtype=np.int64)
+    counts[~full], e = _clip_edges(
+        {int(p["feature_id"]): polygon_edges(p["rings"]) for p in polygons},
+        fid[~full],
+        cell[~full],
+        res,
+    )
+    edges = pa.ListArray.from_arrays(
+        pa.array(np.r_[0, np.cumsum(counts)], type=pa.int32()),
+        pa.StructArray.from_arrays([pa.array(e[:, i]) for i in range(4)], list(EDGE_FIELDS)),
+        mask=pa.array(full),
+    )
+    table = pa.table(
+        {"feature_id": pa.array(fid, type=pa.int32()), "cell": cell, "full": full, "edges": edges}
+    )
+    return _memo_put(_TABLE_MEMO, key, (table, res_set))
+
+
+def _ray_cast(px: Column, py: Column) -> Column:
+    """Even-odd ray cast of (px, py) against the row's ``edges``: the
+    crossing test of ``geometry.ops.points_in_polygon``, in the same
+    operation order, so the two agree bit for bit."""
+
+    def flip(inside: Column, e: Column) -> Column:
+        t = (py - e["ya"]) / (e["yb"] - e["ya"])
+        xint = e["xa"] + t * (e["xb"] - e["xa"])
+        return inside != (((e["ya"] > py) != (e["yb"] > py)) & (px < xint))
+
+    return F.aggregate("edges", F.lit(False), flip)
 
 
 def polygon_frame(spark: SparkSession, polygons: Sequence[dict]) -> DataFrame:
@@ -156,17 +278,6 @@ def _probe(points: DataFrame, lon: str, lat: str, res_set: list) -> DataFrame:
     return points.withColumn("cell", F.explode(F.array(*cells)))
 
 
-def _pip_by_feature(x: np.ndarray, y: np.ndarray, fids: np.ndarray, rings_of) -> np.ndarray:
-    """Containment of each point in its own feature: one vectorized
-    ray-cast per distinct feature id.  ``rings_of(i)`` returns the rings
-    of the feature whose first row is ``i``."""
-    keep = np.zeros(len(fids), dtype=bool)
-    for f in np.unique(fids):
-        m = fids == f
-        keep[m] = points_in_polygon(x[m], y[m], rings_of(int(np.argmax(m))))
-    return keep
-
-
 def spatial_join_points_polygons(
     spark: SparkSession,
     points: DataFrame,
@@ -193,48 +304,15 @@ def spatial_join_points_polygons(
     broadcast side can absorb the cost — counted from the compact cover
     without building it.
     """
-    compact = build_cover(polygons, res)
-    cres = quadcell.cell_res(np.array([c for _, c, _ in compact], dtype=np.int64))
-    if int((np.int64(1) << (2 * (res - cres))).sum()) <= MAX_FLAT_CELLS:
-        cover_rows, res_set = build_cover(polygons, res, min_res=res), [res]
-    else:
-        cover_rows, res_set = compact, sorted(set(cres.tolist()))
-    cover = local_frame(spark, cover_rows, "feature_id int, cell long, full boolean")
+    table, res_set = _cover_table(polygons, res)
     joined = (
         _probe(points, lon, lat, res_set)
-        .join(F.broadcast(cover), "cell", "inner")
+        .join(F.broadcast(local_frame(spark, table, COVER_SCHEMA)), "cell", "inner")
         .drop("cell")
     )
-    if not refine:
-        return joined.drop("full")
-
-    poly_map = {
-        int(p["feature_id"]): [np.asarray(r, dtype=np.float64) for r in p["rings"]]
-        for p in polygons
-    }
-    bc = spark.sparkContext.broadcast(poly_map)
-
-    @F.pandas_udf(BooleanType())
-    def pip(fid: pd.Series, px: pd.Series, py: pd.Series, full: pd.Series) -> pd.Series:
-        out = full.to_numpy(dtype=bool).copy()  # full cells: hit, no ray-cast
-        todo = ~out
-        if todo.any():
-            polys = bc.value
-            fids = fid.to_numpy()[todo]
-            out[todo] = _pip_by_feature(
-                px.to_numpy(dtype=np.float64)[todo],
-                py.to_numpy(dtype=np.float64)[todo],
-                fids,
-                lambda i: polys[int(fids[i])],
-            )
-        return pd.Series(out)
-
-    # Single pass over the fact side: the Arrow batch carries the `full`
-    # flag and the kernel ray-casts only the partial-cell rows (typically
-    # a small minority — covers make most hits 'full').
-    return joined.filter(pip(F.col("feature_id"), F.col(lon), F.col(lat), F.col("full"))).drop(
-        "full"
-    )
+    if refine:
+        joined = joined.filter(F.col("full") | _ray_cast(F.col(lon), F.col(lat)))
+    return joined.drop("full", "edges")
 
 
 def build_cover_df(polygons: DataFrame, res: int) -> DataFrame:
@@ -314,13 +392,13 @@ def spatial_join_points_polygons_distributed(
         for b in batches:
             if not len(b):
                 continue
-            rings = b["rings"].to_numpy()
-            keep = _pip_by_feature(
-                b[lon].to_numpy(dtype=np.float64),
-                b[lat].to_numpy(dtype=np.float64),
-                b["feature_id"].to_numpy(),
-                lambda i: _rings(rings[i]),
-            )
+            # one vectorized ray cast per distinct feature id
+            x, y = b[lon].to_numpy(dtype=np.float64), b[lat].to_numpy(dtype=np.float64)
+            fids, rings = b["feature_id"].to_numpy(), b["rings"].to_numpy()
+            keep = np.zeros(len(b), dtype=bool)
+            for f in np.unique(fids):
+                m = fids == f
+                keep[m] = points_in_polygon(x[m], y[m], _rings(rings[int(np.argmax(m))]))
             yield b.loc[keep, out_cols]
 
     refined = partial.mapInPandas(refine, pip_schema).select(*out_cols)

@@ -181,18 +181,20 @@ def _worker_daemon_conf(pythonpath: str | None) -> dict:
 
 
 def local_frame(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """``rows`` (tuples in the order of the DDL ``schema``) as a
-    DataFrame planned as a ``LocalTableScan``: the rows become one Arrow
-    table, handed to the JVM once, so no execution runs a Python task to
-    re-read them.  Column types and nullability are exactly those
-    ``createDataFrame(rows, schema)`` gives."""
+    """``rows`` (tuples in the order of the DDL ``schema``, or a pyarrow
+    Table whose columns cast to it) as a DataFrame planned as a
+    ``LocalTableScan``: the rows become one Arrow table, handed to the
+    JVM once, so no execution runs a Python task to re-read them.  Column
+    types and nullability are exactly those ``createDataFrame(rows,
+    schema)`` gives."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
     struct = DataType.fromDDL(schema)
-    arrow = to_arrow_schema(struct)
-    cols = list(zip(*rows)) or [()] * len(arrow)
-    table = pa.Table.from_arrays(
-        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
-    )
-    return spark.createDataFrame(table, struct)
+    if not isinstance(rows, pa.Table):
+        arrow = to_arrow_schema(struct)
+        cols = list(zip(*rows)) or [()] * len(arrow)
+        rows = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow)], schema=arrow
+        )
+    return spark.createDataFrame(rows, struct)

@@ -108,3 +108,27 @@ def test_extract_scope_document_equals_body_on_body_only_pages(spark):
         (r["mention_idx"], r["lat_str"]) for r in extract.extract_mentions(w2).collect()
     )
     assert got_doc == [(0, "1.5"), (1, "3.5")]
+
+
+def test_round_half_up_equals_round_cast(spark):
+    """extract's u/v rounding == CAST(round(x) AS BIGINT) on ties, their
+    neighbours, negatives, -0.0, the doubles next to 0.5 and past 2^52,
+    and random offsets at the fixtures' e5 scale."""
+    import math
+
+    import numpy as np
+    from pyspark.sql import functions as F
+
+    ties = [k + 0.5 for k in range(-6, 6)] + [2.0**51 + 0.5, -(2.0**51) - 0.5]
+    near = [math.nextafter(t, d) for t in ties for d in (-math.inf, math.inf)]
+    special = [0.0, -0.0, math.nextafter(0.5, 0), -math.nextafter(0.5, 0),
+               2.0**52 + 1, -(2.0**52) - 3, 2.0**62, -(2.0**62)]
+    rng = np.random.default_rng(5)
+    rand = (rng.uniform(-3e5, 3e5, 2000).round(5) * 1.00000000001).tolist()
+    df = spark.createDataFrame([(float(x),) for x in ties + near + special + rand], "x double")
+    bad = df.filter(extract.round_half_up(F.col("x")) != F.round("x").cast("long"))
+    assert bad.count() == 0, bad.take(5)
+    got = {r["x"]: r["r"] for r in df.select(
+        "x", extract.round_half_up(F.col("x")).alias("r")).collect()}
+    assert got[2.5] == 3 and got[-2.5] == -3 and got[-0.5] == -1
+    assert got[math.nextafter(0.5, 0)] == 0 and str(got[-0.0]) == "0"

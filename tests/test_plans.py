@@ -33,7 +33,12 @@ def test_extraction_plan_has_no_shuffle_and_no_python(spark):
     assert "Python" not in p and "BatchEvalPython" not in p, p
 
 
-def test_spatial_join_plan_broadcast_single_python_stage(spark):
+def _python_nodes(p: str) -> list[str]:
+    """Names of the plan's operators that run Python workers."""
+    return re.findall(r"\b(\w*(?:Python|Pandas|InArrow)\w*)(?: |\[|$)", p, re.M)
+
+
+def test_spatial_join_plan_broadcast_has_no_python(spark):
     m = extract.extract_mentions(synth.webpages(spark, SF_SMOKE))
     j = spatial_join_points_polygons(spark, m, synth.zone_features(), res=17)
     p = _plan(j)
@@ -42,7 +47,8 @@ def test_spatial_join_plan_broadcast_single_python_stage(spark):
     # the probe (fact) side must not be exchanged: the only Exchange is
     # the broadcast of the cover
     assert p.count("Exchange") == p.count("BroadcastExchange"), p
-    assert p.count("ArrowEvalPython") == 1, p
+    # the PIP refine is a native filter over the cover's edge arrays
+    assert "Python" not in p and not _python_nodes(p), p
     # the driver-built cover is a JVM local relation, not a Python RDD
     # re-read by a Python task per core on every execution
     assert "LocalTableScan" in p and "ExistingRDD" not in p, p
@@ -108,12 +114,15 @@ def test_geo_chain_keeps_the_tile_layout(spark):
     reaches the sink.  A point-keyed exchange after it (the knn_cell
     branch's windows, an unbroadcast brute force) would pay for the
     rebalance and throw its layout away; the streaming pipeline, whose
-    sink is not partitioned by tile, takes no exchange at all."""
+    sink is not partitioned by tile, takes no exchange at all.  The
+    chain's only Python stage is the kNN kernel's MapInPandas."""
     web = synth.webpages(spark, SF_SMOKE)
     m = extract.extract_mentions(web)
     p = _plan(_geo_chain(spark, m))
     assert _shuffles(p) == 1 and p.count("REBALANCE_PARTITIONS_BY_COL") == 1, p
     assert p.count("BroadcastExchange") == 1 and "BroadcastHashJoin" in p, p
+    # one Python worker per task: the kNN kernel; the zone join has none
+    assert _python_nodes(p) == ["MapInPandas"], p
     widest, n_tiles = _tile_spans(_geo_chain(spark, m.repartition(4)))
     assert n_tiles > 1 and widest == 1, (widest, n_tiles)
     assert "Exchange" not in _plan(extract_and_tile(web))
